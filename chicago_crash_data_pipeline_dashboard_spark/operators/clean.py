@@ -64,12 +64,12 @@ def select_required(df: DataFrame) -> DataFrame:
 
 def parse_types(df: DataFrame) -> DataFrame:
     """Cast string-typed numeric inputs to double (pandas read_csv
-    inference analog, made explicit and deterministic)."""
-    out = df
-    for c, t in _NUMERIC_INPUTS.items():
-        if c in out.columns and dict(out.dtypes)[c] == "string":
-            out = out.withColumn(c, F.col(c).cast(t))
-    return out
+    inference analog, made explicit and deterministic). One batched
+    projection."""
+    types = dict(df.dtypes)
+    return df.withColumns(
+        {c: F.col(c).cast(t) for c, t in _NUMERIC_INPUTS.items() if types.get(c) == "string"}
+    )
 
 
 def clean_crashes(
@@ -85,6 +85,13 @@ def clean_crashes(
     the upstream chain — Spark's cache manager also shares it across
     queries built on the same input plan. MEMORY_AND_DISK; LRU-evicted,
     recompute-on-miss keeps it correct either way.
+
+    The cache is never released here (the returned plan reads it), so
+    it lives as long as the caller's session. Pass
+    ``persist_intermediate=False`` when the caller calls this once per
+    batch (a streaming micro-batch, an ingest round) — each call would
+    leave one more cached frame behind — and cache the input itself,
+    for the batch's lifetime, if it is costly to re-read.
     """
     out = parse_types(select_required(df))
 

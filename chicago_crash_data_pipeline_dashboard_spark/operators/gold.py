@@ -9,7 +9,12 @@ upsert is emulated exactly as SURVEY §2.7 prescribes:
 2. dedup the incoming batch by PK keep-first (DuckDB resolves
    intra-batch conflicts sequentially — first row wins);
 3. left-anti join against the existing key set (J6);
-4. append; stats = inserted/skipped from counts (M2).
+4. append; stats = inserted/skipped (M2), read from two observed
+   metrics on the append itself — the batch's input rows and the
+   appended rows — so the write is the only job over the batch (no
+   separate count, no cached delta). When the optimizer prunes an
+   observed node (a statically empty batch), the metric is not
+   reported and that one count runs explicitly instead.
 
 Scale: the existing-side is projected to the single key column before
 the anti-join; Catalyst broadcasts it while it fits, else AQE picks a
@@ -22,14 +27,27 @@ the batch level (re-running the same batch inserts 0).
 from __future__ import annotations
 
 import os
+from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import GOLD_CRASHES
 from .transform import dedup_keep_first, with_row_order
 
 PK = "crash_record_id"
+
+
+def observed(obs: Observation, name: str, recompute: Callable[[], Any]) -> Any:
+    """Metric ``name`` of ``obs`` once an action over the observed frame
+    has run. When the optimizer pruned the observed node (it sat under
+    a subtree found empty), Spark completes the observation with an
+    empty row; ``recompute()`` then supplies the value explicitly."""
+    try:
+        return obs.get[name]
+    except Py4JJavaError:
+        return recompute()
 
 
 class GoldTable:
@@ -66,18 +84,22 @@ class GoldTable:
     def read(self) -> DataFrame:
         if not self.exists():
             return self.spark.createDataFrame([], self._schema())
+        return self._scan()
+
+    def _scan(self) -> DataFrame:
         return self.spark.read.schema(self._schema()).parquet(self.path)
 
     def _existing_keys(self, batch: DataFrame) -> DataFrame:
-        """Existing-side PK set for the anti-join, partition-pruned to
-        the batch's years when the table is year-partitioned: at 100 TB
-        the incremental path then file-lists only the touched year=YYYY/
-        directories instead of the whole table (PartitionFilters —
-        asserted in tests/test_plans). Sound under the same invariant
-        the year layout itself needs — a PK's crash_date year is stable
-        across batches (verify_integrity's global dup-PK check is the
-        backstop if a source ever violates it)."""
-        existing = self.read()
+        """Existing-side PK set for the anti-join (the table must
+        exist), partition-pruned to the batch's years when the table is
+        year-partitioned: at 100 TB the incremental path then file-lists
+        only the touched year=YYYY/ directories instead of the whole
+        table (PartitionFilters — asserted in tests/test_plans). Sound
+        under the same invariant the year layout itself needs — a PK's
+        crash_date year is stable across batches (verify_integrity's
+        global dup-PK check is the backstop if a source ever violates
+        it)."""
+        existing = self._scan()
         if self.partition_on_year:
             batch_years = [r["year"] for r in batch.select("year").distinct().collect()]
             years = [y for y in batch_years if y is not None]
@@ -90,11 +112,17 @@ class GoldTable:
     # -- M2 + M3: upsert -------------------------------------------------
     def upsert(self, df: DataFrame, corr_id: str) -> dict[str, int]:
         """Insert-if-absent; returns before/after/inserted/skipped stats
-        (duckdb_writer.py:216-221 contract)."""
-        batch = (
-            df.withColumn("corr_id", F.lit(corr_id))
-            .withColumn("inserted_at", F.current_timestamp())
-            .withColumn("updated_at", F.current_timestamp())
+        (duckdb_writer.py:216-221 contract). The batch is read once, by
+        the append; its row count and the inserted count are observed
+        metrics of that append."""
+        rows = F.count(F.lit(1)).alias("rows")
+        batch_obs, new_obs = Observation(), Observation()
+        batch = df.observe(batch_obs, rows).withColumns(
+            {
+                "corr_id": F.lit(corr_id),
+                "inserted_at": F.current_timestamp(),
+                "updated_at": F.current_timestamp(),
+            }
         )
         # align to gold column order/types; absent columns become null
         # (DuckDB INSERT's missing-column default)
@@ -110,23 +138,17 @@ class GoldTable:
         if self.partition_on_year:
             batch = batch.withColumn("year", F.year(F.col("crash_date")))
 
-        n_batch = df.count()
-        before = self.read().count() if self.exists() else 0
+        exists = self.exists()
+        before = self._scan().count() if exists else 0
+        new_rows = batch.join(self._existing_keys(batch), PK, "left_anti") if exists else batch
 
-        if self.exists():
-            new_rows = batch.join(self._existing_keys(batch), PK, "left_anti")
-        else:
-            new_rows = batch
-
-        # cache the delta so the write and the count see one computation
-        new_rows = new_rows.persist()
-        inserted = new_rows.count()
-        writer = new_rows.write.mode("append")
+        writer = new_rows.observe(new_obs, rows).write.mode("append")
         if self.partition_on_year:
             writer = writer.partitionBy("year")
         writer.parquet(self.path)
-        new_rows.unpersist()
 
+        inserted = observed(new_obs, "rows", lambda: self._scan().count() - before)
+        n_batch = observed(batch_obs, "rows", df.count)
         return {
             "before_count": before,
             "after_count": before + inserted,

@@ -9,7 +9,11 @@ Re-expresses the reference transformer (transformer/transformer.py:
   ``maintain_order``/``keep='first'`` is insertion-order-defined; the
   distributed-correct equivalent is an explicit total order + window
   row_number (SURVEY §4.3). We carry a ``_row_order`` surrogate from
-  the source (file order) when available, else synthesize one.
+  the source (file order) when available, else synthesize one. When
+  the key column exists, W8 is subsumed by W9: a key's first row is
+  always the first copy of itself, so one keep-first window on the
+  crash side, BEFORE the 1:1 joins, gives the reference's W8 → join →
+  W9 result with one shuffle instead of three;
 - many-to-one pre-aggregation BEFORE the join (J2): the semi-join
   reduction the reference designs in; keeps the join 1:1 so the output
   row count equals the crash count — at 100 TB this avoids a row
@@ -75,19 +79,27 @@ def dedup_keep_first(df: DataFrame, key: str) -> DataFrame:
 
 
 def aggregate_many_to_one(df: DataFrame, id_col: str, prefix: str, max_text_cols: int = 5) -> DataFrame:
-    """J2/A1/A2/W2 (transformer.py:207-219): per-key count + up to 5
-    sorted-distinct string-list columns.
+    """J2/A1/A2/W2 (transformer.py:207-219): per-key count of distinct
+    rows + up to 5 sorted-distinct string-list columns.
 
-    collect_set drops nulls and sort_array orders ascending — exactly
-    Polars ``drop_nulls().unique().sort().implode()``.
+    One groupBy (one shuffle): the per-key set of distinct whole rows
+    (``collect_set(struct(*))``) gives the count by its size, and each
+    list column is that set's field with nulls dropped, deduplicated and
+    sorted ascending — exactly Polars ``drop_nulls().unique().sort()
+    .implode()`` over the distinct rows.
     """
     text_cols = [c for c, t in df.dtypes if c != id_col and t == "string"][:max_text_cols]
-    aggs = [F.count(F.lit(1)).alias(f"{prefix}_count")]
-    for c in text_cols:
-        aggs.append(
-            F.sort_array(F.collect_set(F.col(c).cast("string"))).alias(f"{prefix}_{c}_list")
-        )
-    return df.groupBy(id_col).agg(*aggs)
+    rows = df.groupBy(id_col).agg(F.collect_set(F.struct(*df.columns)).alias("_rows"))
+    return rows.select(
+        id_col,
+        F.size("_rows").cast("long").alias(f"{prefix}_count"),
+        *(
+            F.sort_array(
+                F.array_distinct(F.filter(F.col("_rows")[c], lambda v: v.isNotNull()))
+            ).alias(f"{prefix}_{c}_list")
+            for c in text_cols
+        ),
+    )
 
 
 def merge_crash_vehicles_people(
@@ -97,10 +109,15 @@ def merge_crash_vehicles_people(
     id_col: str = "crash_record_id",
 ) -> DataFrame:
     """J3/J4 + W8/W9 (transformer.py:221-258): standardize all three,
-    pre-aggregate the many side, left-join onto crashes, keep-first
-    dedup by crash id."""
-    crashes = dedup_full_rows(canonicalize_id(standardize_columns(with_row_order(crashes)), id_col))
-    out = crashes
+    keep-first dedup of the crashes by crash id (full-row dedup when
+    there is no id), pre-aggregate the many side, left-join onto the
+    crashes. Both joins are 1:1, so deduplicating before them keeps the
+    same rows as the reference's dedup after them."""
+    crashes = canonicalize_id(standardize_columns(with_row_order(crashes)), id_col)
+    if id_col in crashes.columns:
+        out = dedup_keep_first(crashes, id_col)
+    else:
+        out = dedup_full_rows(crashes)
 
     for df, prefix in ((vehicles, "veh"), (people, "ppl")):
         if df is None:
@@ -109,25 +126,26 @@ def merge_crash_vehicles_people(
         if id_col not in side.columns:
             continue
         side = side.drop(ROW_ORDER_COL) if ROW_ORDER_COL in side.columns else side
-        agg = aggregate_many_to_one(side.dropDuplicates(), id_col, prefix)
-        out = out.join(agg, id_col, "left")
+        out = out.join(aggregate_many_to_one(side, id_col, prefix), id_col, "left")
 
-    if id_col in out.columns:
-        out = dedup_keep_first(out, id_col)
     return out.drop(ROW_ORDER_COL)
 
 
 def make_csv_safe(df: DataFrame) -> DataFrame:
     """F18 (transformer.py:263-305): JSON-stringify every Array/Struct/
     Map column into ``{name}_json`` and drop the original — the frame
-    becomes CSV-serializable."""
-    out = df
-    for field in df.schema.fields:
-        if isinstance(field.dataType, (T.ArrayType, T.StructType, T.MapType)):
-            out = out.withColumn(f"{field.name}_json", F.to_json(F.col(field.name))).drop(
-                field.name
-            )
-    return out
+    becomes CSV-serializable. One ``select``: the plain columns keep
+    their order, the JSON columns follow."""
+    nested = (T.ArrayType, T.StructType, T.MapType)
+    fields = df.schema.fields
+    return df.select(
+        *(F.col(f.name) for f in fields if not isinstance(f.dataType, nested)),
+        *(
+            F.to_json(F.col(f.name)).alias(f"{f.name}_json")
+            for f in fields
+            if isinstance(f.dataType, nested)
+        ),
+    )
 
 
 def silver_transform(

@@ -404,8 +404,8 @@ def pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).first()
 
         # gold: clean + upsert twice (idempotence) + integrity. Persist
-        # the cleaned frame — each upsert runs count + anti-join + write
-        # over it, so the chain would otherwise execute ~5 times.
+        # the cleaned frame — each upsert's append reads it, so the
+        # chain would otherwise execute once per upsert.
         cleaned = clean_crashes(crashes).persist()
         gold = GoldTable(spark, f"{tmp}/gold")
         first = gold.upsert(cleaned, corr_id="e2e-r1")

@@ -24,12 +24,12 @@ parallel.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.clean import clean_crashes
-from ..operators.gold import GoldTable
+from ..operators.gold import GoldTable, observed
 from ..sources.bronze import _with_partitions
 from .watermark import WatermarkStore
 
@@ -69,23 +69,31 @@ def stream_bronze_to_gold(
     src = read_bronze_stream(spark, bronze_dir, alias, schema, fmt=fmt)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        wm_store = WatermarkStore(watermark_path)
-        cleaned = clean_crashes(batch_df)
-        if mode == "streaming":
-            wm = wm_store.get()
-            if wm is not None:
-                # ST1: incremental runs only take rows past the mark
-                cleaned = cleaned.filter(F.col("crash_date") > F.lit(wm).cast("date"))
-        cleaned = cleaned.persist()
+        # the batch is read twice (the median job, then the append), so
+        # it is cached here, once, and released with the batch; nothing
+        # downstream caches (each cache would outlive its micro-batch)
+        batch_df = batch_df.persist()
         try:
-            gold = GoldTable(spark, gold_path)
-            s = gold.upsert(cleaned, corr_id=f"stream-{batch_id}")
-            mx = cleaned.agg(F.max("crash_date").alias("m")).first()["m"]
+            wm_store = WatermarkStore(watermark_path)
+            cleaned = clean_crashes(batch_df, persist_intermediate=False)
+            if mode == "streaming":
+                wm = wm_store.get()
+                if wm is not None:
+                    # ST1: incremental runs only take rows past the mark
+                    cleaned = cleaned.filter(F.col("crash_date") > F.lit(wm).cast("date"))
+            # the watermark's max(crash_date) rides the append as an
+            # observed metric instead of a second pass over the batch
+            wm_obs = Observation()
+            s = GoldTable(spark, gold_path).upsert(
+                cleaned.observe(wm_obs, F.max("crash_date").alias("m")),
+                corr_id=f"stream-{batch_id}",
+            )
+            mx = observed(wm_obs, "m", lambda: cleaned.agg(F.max("crash_date")).first()[0])
             wm_store.advance(str(mx) if mx is not None else None, mode=mode)
             s["batch_id"] = batch_id
             stats.append(s)
         finally:
-            cleaned.unpersist()
+            batch_df.unpersist()
 
     q = (
         src.writeStream.foreachBatch(_process)

@@ -2,8 +2,11 @@
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from chicago_crash_data_pipeline_dashboard_spark.operators.clean import clean_crashes
 from chicago_crash_data_pipeline_dashboard_spark.operators.gold import GoldTable
@@ -55,6 +58,65 @@ def test_upsert_dedups_batch_and_drops_null_pk(spark, gold_input, tmp_path_facto
     assert g["crash_record_id"].is_unique
     assert (g["corr_id"] == "r1").all()
     assert g["inserted_at"].notna().all()
+
+
+def _parquet_files(path: str) -> int:
+    return sum(f.endswith(".parquet") for _r, _d, files in os.walk(path) for f in files)
+
+
+def test_upsert_statically_empty_batch(spark, gold_input, tmp_path_factory):
+    """A batch the optimizer proves empty prunes the observed nodes; the
+    stats fall back to explicit counts instead of failing or hanging."""
+    table = GoldTable(spark, str(tmp_path_factory.mktemp("gold_empty") / "crashes"))
+    n = table.upsert(gold_input, corr_id="r1")["after_count"]
+    empty = gold_input.filter(F.lit(False))
+    assert table.upsert(empty, corr_id="r2") == {
+        "before_count": n, "after_count": n, "inserted": 0, "skipped": 0,
+    }
+    assert table.verify_integrity() == {"total": n, "duplicate_pks": 0, "null_pks": 0, "ok": 1}
+
+
+def test_upsert_empty_batch_into_new_table(spark, gold_input, tmp_path_factory):
+    table = GoldTable(spark, str(tmp_path_factory.mktemp("gold_new") / "crashes"))
+    assert table.upsert(gold_input.filter(F.lit(False)), corr_id="r1") == {
+        "before_count": 0, "after_count": 0, "inserted": 0, "skipped": 0,
+    }
+    assert table.read().count() == 0
+
+
+def test_upsert_all_duplicate_batch(spark, tmp_path_factory):
+    """Every row is a duplicate — of a gold key, of another batch row,
+    or has a NULL key: nothing is inserted and every input row counts
+    as skipped."""
+    table = GoldTable(spark, str(tmp_path_factory.mktemp("gold_dup") / "crashes"))
+    schema = "crash_record_id string, crash_date date"
+    first = spark.createDataFrame([("A", None), ("B", None)], schema)
+    assert table.upsert(first, corr_id="r1")["inserted"] == 2
+    dups = spark.createDataFrame(
+        [("A", None), ("A", None), ("B", None), (None, None), (None, None)], schema
+    )
+    assert table.upsert(dups, corr_id="r2") == {
+        "before_count": 2, "after_count": 2, "inserted": 0, "skipped": 5,
+    }
+    # intra-batch duplicates of a NEW key insert it once
+    mixed = spark.createDataFrame([("C", None), ("C", None), ("A", None), (None, None)], schema)
+    assert table.upsert(mixed, corr_id="r3") == {
+        "before_count": 2, "after_count": 3, "inserted": 1, "skipped": 3,
+    }
+    assert table.verify_integrity()["ok"] == 1
+
+
+def test_small_upsert_adds_one_file(spark, gold_input, tmp_path_factory):
+    """The append is not cached, so AQE coalesces a small delta into one
+    write task: one new parquet file per small batch, not one per
+    shuffle partition."""
+    path = str(tmp_path_factory.mktemp("gold_files") / "crashes")
+    table = GoldTable(spark, path)
+    half = gold_input.filter(F.col("crash_record_id") < "CRASH000150")
+    table.upsert(half, corr_id="r1")
+    before = _parquet_files(path)
+    assert table.upsert(gold_input, corr_id="r2")["inserted"] > 0
+    assert _parquet_files(path) == before + 1
 
 
 def test_watermark_rules(tmp_path):

@@ -59,6 +59,48 @@ def test_stream_ingest_end_to_end(spark, sf_smoke, tmp_path):
     assert WatermarkStore(wm_path).get() is not None  # streaming advances
 
 
+def _cached_rdds(spark) -> int:
+    return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+
+def test_stream_drains_leave_no_cache_behind(spark, sf_smoke, tmp_path):
+    """Each micro-batch caches its input once and releases it: three
+    drains, each with a new file, leave the cached-RDD count unchanged."""
+    bronze_dir, ckpt = str(tmp_path / "bronze"), str(tmp_path / "ckpt")
+    gold_path, wm_path = str(tmp_path / "gold"), str(tmp_path / "wm.json")
+    bronze = synth_bronze_spark(spark, sf_smoke).filter(F.col("crash_record_id").isNotNull())
+    start = _cached_rdds(spark)
+    inserted = 0
+    for i in range(3):
+        part = bronze.filter(F.abs(F.hash("crash_record_id")) % 3 == i).limit(200)
+        write_bronze(part, bronze_dir, "crashes", corr=f"run-{i}")
+        stats = stream_bronze_to_gold(
+            spark, bronze_dir, "crashes", BRONZE_CRASHES, gold_path, ckpt, wm_path
+        )
+        assert len(stats) == 1
+        inserted += stats[0]["inserted"]
+        assert _cached_rdds(spark) == start, f"drain {i} left a cached RDD behind"
+    assert GoldTable(spark, gold_path).read().count() == inserted > 0
+
+
+def test_stream_drain_watermark_filters_every_row(spark, sf_smoke, tmp_path):
+    """A streaming drain whose watermark is past every row: the batch
+    inserts nothing, skips nothing (no row reaches the upsert) and
+    leaves the watermark where it was."""
+    bronze_dir, ckpt = str(tmp_path / "bronze"), str(tmp_path / "ckpt")
+    gold_path, wm_path = str(tmp_path / "gold"), str(tmp_path / "wm.json")
+    WatermarkStore(wm_path).advance("2999-01-01", mode="streaming")
+    part = synth_bronze_spark(spark, sf_smoke).limit(100)
+    write_bronze(part, bronze_dir, "crashes", corr="late")
+    stats = stream_bronze_to_gold(
+        spark, bronze_dir, "crashes", BRONZE_CRASHES, gold_path, ckpt, wm_path
+    )
+    assert stats == [
+        {"before_count": 0, "after_count": 0, "inserted": 0, "skipped": 0, "batch_id": 0}
+    ]
+    assert WatermarkStore(wm_path).get() == "2999-01-01"
+
+
 def test_watermark_monotonic(tmp_path):
     wm = WatermarkStore(str(tmp_path / "w.json"))
     assert wm.get() is None

@@ -87,3 +87,32 @@ def test_keep_first_dedup_by_id(frames):
     out = merge_crash_vehicles_people(sc, sv, sp).toPandas()
     non_null = out["crash_record_id"].dropna()
     assert non_null.is_unique
+
+
+def test_keep_first_payload_parity(frames):
+    """For duplicated ids (same id, different payload) the row that
+    survives is the first one, as in the pandas oracle — every non-list
+    column, not just the counts and lists."""
+    crashes, vehicles, people, sc, sv, sp = frames
+    out = merge_crash_vehicles_people(sc, sv, sp)
+    assert dict(out.dtypes)["veh_count"] == "bigint"
+    assert dict(out.dtypes)["ppl_count"] == "bigint"
+
+    key = "crash_record_id"
+    dup_ids = set(crashes.loc[crashes[key].duplicated(keep=False), key].dropna())
+    assert dup_ids  # the fixture plants same-id rows with other payloads
+
+    s = out.toPandas().sort_values(key, na_position="first").reset_index(drop=True)
+    o = (
+        transform_oracle(crashes, vehicles, people)
+        .sort_values(key, na_position="first")
+        .reset_index(drop=True)
+    )
+    payload = [c for c in crashes.columns if c != key]
+    for c in payload:
+        a = [None if pd.isna(v) else str(v) for v in s[c]]
+        b = [None if pd.isna(v) else str(v) for v in o[c]]
+        assert a == b, f"{c}: kept payload differs from the first row"
+    kept = s[s[key].isin(dup_ids)].set_index(key)["weather_condition"]
+    first = crashes[crashes[key].isin(dup_ids)].drop_duplicates(key).set_index(key)
+    assert kept.to_dict() == first["weather_condition"].to_dict()
