@@ -25,14 +25,6 @@ from chicago_crash_data_pipeline_dashboard_spark.plans import analytics  # noqa:
 from chicago_crash_data_pipeline_dashboard_spark.session import get_spark
 
 try:  # optional query families registered if present
-    from chicago_crash_data_pipeline_dashboard_spark.plans import text_ops  # noqa: F401
-except ImportError:
-    pass
-try:
-    from chicago_crash_data_pipeline_dashboard_spark.plans import similarity_ops  # noqa: F401
-except ImportError:
-    pass
-try:
     from chicago_crash_data_pipeline_dashboard_spark.plans import crash_ops  # noqa: F401
 except ImportError:
     pass

@@ -74,14 +74,6 @@ IO_QUERIES = [
 RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 
 
-# The r11 IO_EXTRA self-gating paths (emb_ivfpq_append,
-# emb_index_compact, doc_ingest_round) graduated to registered queries
-# with DuckDB oracles in r12 (plans/llm_ops.py) — they are timed above
-# through IO_QUERIES like the rest of the at-rest family. IO_EXTRA
-# stays as the hook for future not-yet-registered IO paths.
-IO_EXTRA: dict = {}
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
@@ -99,8 +91,8 @@ def main() -> None:
     session_split: dict[str, dict] = {}
     errors: dict[str, str] = {}
     spark = None
-    runnables = [(n, QUERIES[n].fn) for n in IO_QUERIES] + list(IO_EXTRA.items())
-    for name, fn in runnables:
+    for name in IO_QUERIES:
+        fn = QUERIES[name].fn
         if spark is not None:
             spark.stop()
         spark = get_spark(app_name=f"ccpd_bench_io_{name}")

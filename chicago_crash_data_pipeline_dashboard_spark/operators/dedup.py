@@ -1391,11 +1391,11 @@ def _lap_timer():
 
 def _ingest_survivor_policy(batch, id_col, vs_corpus, within):
     """The INGEST survivor policy over one round's (bounded) edge
-    graph — shared by the batch round and its transactional
-    (streaming) twin: any component containing corpus content loses
-    its batch members outright (already ingested wins, transitively),
-    and a corpus-free component keeps exactly its minimum batch
-    member. Returns (survivors, edges); ``survivors`` is
+    graph — shared by the MinHash, SimHash and semantic rounds
+    (:func:`_edge_round_stage`): any component containing corpus
+    content loses its batch members outright (already ingested wins,
+    transitively), and a corpus-free component keeps exactly its
+    minimum batch member. Returns (survivors, edges); ``survivors`` is
     localCheckpoint-ed, not persisted — the survivor plan reads the
     signature TABLE (through ``vs_corpus``), and the caller appends to
     that table next: an eager checkpoint truncates the lineage so a
@@ -1459,97 +1459,82 @@ def minhash_ingest_round(
     3. if ``comp_path`` is given, fold the round's edges into the
        standing cluster assignments (``extend_components_at_rest``) so
        the cluster table tracks the corpus;
-    4. append ONLY the survivors' signatures
-       (``append_minhash_signatures``) and compact the signature table
-       (``sources.compact.compact_partitioned``) when its worst
+    4. append ONLY the survivors' signatures and compact the signature
+       table (``sources.compact.compact_partitioned``) when its worst
        partition exceeds ``compact_trigger`` x the table's
        files_per_part.
 
-    Returns {survivors, n_batch, n_cross_pairs, n_within_pairs,
-    n_survivors, compacted, extended, secs} — ``survivors`` is the
-    filtered batch DataFrame (already appended; append it nowhere
-    else); ``secs`` decomposes the round's wall time per step
-    (probe / within / survivors / extend / append / compact), so a
-    scale probe or an ops dashboard can localize cost without
-    re-running the pieces.
+    The contract every ingest round shares (:func:`_txn_ingest_round`):
+    steps 1-3 run strictly before any signature file moves into the
+    table, inside the staged-move ledger (sources/txn.py) keyed on
+    ``txn``, so a replay can never re-probe a table that already holds
+    some of this batch's signatures and see the batch pair with
+    itself. With ``txn`` (an idempotency id for at-least-once callers
+    — the streaming drain, ``streaming.ingest.stream_minhash_ingest``)
+    the survivor ids + stats persist under ``{sig_path}/_rounds`` so
+    every replay reconstructs the same report; the components fold
+    re-runs only on a full restage, where min-label idempotence makes
+    it converge. Without one the round runs under a throwaway ledger
+    id whose entries are dropped afterwards (the batch caller's
+    contract: don't hand the same batch in twice).
 
-    ``txn``: an idempotency id for at-least-once callers (the
-    streaming drain — ``streaming.ingest.stream_minhash_ingest``).
-    With one, the WHOLE round runs the staged-move ledger protocol
-    (sources/txn.py): probe + survivor policy + the optional
-    components fold run inside the staging step — strictly before any
-    signature file moves into the table, so a replay can never
-    re-probe a table that already holds some of this batch's
-    signatures and see the batch pair with itself — and the round's
-    survivor ids + stats persist under ``{{sig_path}}/_rounds/{{txn}}``
-    so every replay path reconstructs the same report. The returned
-    dict gains ``action`` ("appended" on a fresh commit,
-    "completed_replay" when a crashed round's frozen staging was
-    finished, "skipped_replay" when the round had already committed
-    — nothing re-runs). Without ``txn`` the behavior is unchanged
-    (the batch caller's contract: don't hand the same batch in
-    twice)."""
-    if txn is not None:
-        return _minhash_ingest_round_txn(
-            batch, sig_path, id_col, text_col, comp_path, threshold,
-            max_bucket, compact_trigger, txn,
-        )
-    from ..operators.graph import extend_components_at_rest
+    Returns {action, txn, survivors, n_batch, n_cross_pairs,
+    n_within_pairs, extended, n_survivors, compacted, secs} —
+    ``survivors`` is the filtered batch DataFrame (already appended;
+    append it nowhere else); ``action`` is "appended" on a fresh
+    commit, "completed_replay" when a crashed round's frozen staging
+    was finished, "skipped_replay" when the round had already
+    committed (nothing re-runs); ``secs`` decomposes a fresh round's
+    wall time per step (probe / within / survivors / extend / append /
+    compact)."""
+    import json
 
     spark = batch.sparkSession
-    # count BEFORE the timer starts: the report needs n_batch, and a
-    # full batch materialization inside the first lap would over-state
-    # secs["probe"] in the decomposition the bench notes consume
-    n_batch = batch.count()
-    secs, _lap = _lap_timer()
-
     p = read_minhash_params(spark, sig_path)
-    sig_kwargs = dict(
-        num_hashes=p["num_hashes"], bands=p["bands"], shingle_n=p["shingle_n"],
-        seed=p["seed"], hash_mode=p["hash_mode"],
+    files_per_part = p.get("files_per_part", 1)
+
+    def probe():
+        vs_corpus = near_duplicates_against(
+            batch, sig_path, id_col, text_col,
+            threshold=threshold, max_bucket=max_bucket,
+        )
+        within = minhash_near_duplicates(
+            batch, id_col, text_col, threshold=threshold, max_bucket=max_bucket,
+            num_hashes=p["num_hashes"], bands=p["bands"],
+            shingle_n=p["shingle_n"], seed=p["seed"], hash_mode=p["hash_mode"],
+        )
+        return vs_corpus, within, lambda: None
+
+    def write_rows(survivors: DataFrame, stage: str) -> None:
+        banded = _banded_signatures(
+            survivors, id_col, text_col, p["num_hashes"], p["bands"],
+            p["shingle_n"], p["seed"], p["hash_mode"], p["parts"],
+        )
+        _write_banded(banded, stage, files_per_part, mode="overwrite")
+
+    def fold(edges: DataFrame) -> dict:
+        from ..operators.graph import extend_components_at_rest
+
+        return extend_components_at_rest(spark, comp_path, edges)
+
+    return _txn_ingest_round(
+        batch, sig_path.rstrip("/"), id_col, txn,
+        _edge_round_stage(
+            batch, id_col, probe, write_rows, fold if comp_path is not None else None
+        ),
+        stats_extract={
+            **_EDGE_ROUND_STATS,
+            # staged with the round record, so replays reconstruct the
+            # fold activity too (None = no comp_path was configured)
+            "extended": lambda st: json.loads(st.extended_json)
+            if st.extended_json is not None
+            else None,
+        },
+        after_commit=lambda: _maybe_compact_subdir(
+            spark, sig_path, "banded", compact_trigger, files_per_part
+        ),
     )
-    vs_corpus = near_duplicates_against(
-        batch, sig_path, id_col, text_col, threshold=threshold, max_bucket=max_bucket
-    ).persist()
-    within = minhash_near_duplicates(
-        batch, id_col, text_col, threshold=threshold, max_bucket=max_bucket,
-        **sig_kwargs,
-    ).persist()
-    try:
-        n_cross = vs_corpus.count()
-        _lap("probe")
-        n_within = within.count()
-        _lap("within")
-        survivors, edges = _ingest_survivor_policy(batch, id_col, vs_corpus, within)
-        n_survivors = survivors.count()
-        _lap("survivors")
 
-        extended = None
-        if comp_path is not None:
-            extended = extend_components_at_rest(spark, comp_path, edges)
-            _lap("extend")
-
-        # files_per_part resolves from the table's own _params
-        append_minhash_signatures(survivors, sig_path, id_col, text_col)
-        _lap("append")
-    finally:
-        vs_corpus.unpersist()
-        within.unpersist()
-
-    compacted = _maybe_compact_subdir(
-        spark, sig_path, "banded", compact_trigger, p.get("files_per_part", 1)
-    )
-    _lap("compact")
-    return {
-        "survivors": survivors,
-        "n_batch": n_batch,
-        "n_cross_pairs": n_cross,
-        "n_within_pairs": n_within,
-        "n_survivors": n_survivors,
-        "compacted": compacted,
-        "extended": extended,
-        "secs": secs,
-    }
 
 def _maybe_compact_subdir(
     spark, root: str, sub: str, compact_trigger: float, files_per_part: int
@@ -1623,37 +1608,58 @@ def _txn_ingest_round(
     batch: DataFrame,
     root: str,
     id_col: str,
-    txn: str,
+    txn: str | None,
     write_stage,
     stats_extract: dict,
     after_commit,
 ) -> dict:
-    """Shared transactional-round skeleton for the cross-run ingest
-    families (MinHash / exact fingerprints / SimHash): the staged-move
-    ledger protocol (sources/txn.py) wrapped around ONE family-specific
-    staging step.
+    """The one ingest-round body of the four at-rest signature families
+    (MinHash / exact fingerprints / SimHash / semantic IVF, IVF-PQ):
+    the staged-move ledger protocol (sources/txn.py) wrapped around ONE
+    family-specific staging step.
 
-    ``write_stage(stage, state)`` runs the round STRICTLY BEFORE any
-    staged file moves into the table (the probe-before-append rule —
-    a replay that finds the frozen manifest skips straight to
+    ``write_stage(stage, state, lap)`` runs the round STRICTLY BEFORE
+    any staged file moves into the table (the probe-before-append rule
+    — a replay that finds the frozen manifest skips straight to
     completing the moves and never re-probes a table already holding
     some of this batch's rows, which would make the batch pair with
     itself and drop every row). It must compute the survivors (setting
-    ``state["survivors"]``), stage them + the stats row via
-    ``_stage_round_record``, and write the table's data files under a
-    stage subdir matching the table's data subdir name.
+    ``state["survivors"]``), write the table's data files under a stage
+    subdir matching the table's data subdir name, stage the survivors +
+    the stats row via ``_stage_round_record``, and ``lap`` its steps
+    into the report's ``secs``; this body laps ``append`` (staging
+    writes + moves) and ``compact``.
 
     ``stats_extract`` maps report keys to extractors over the staged
     stats row. ``n_survivors`` is handled here: on replay paths it
     derives from the reconstructed record (which a later
     ``forget_documents`` legitimately shrinks), never the write-time
     stats. ``after_commit()`` returns the compaction count; it is
-    skipped entirely on an already-committed replay."""
+    skipped entirely on an already-committed replay.
+
+    ``txn=None`` runs the same protocol under a throwaway id: nothing
+    can replay a generated id, so its ledger marker and round record
+    are dropped once the report is built, and a round that raises
+    drops its staging — the table holds only data files afterwards,
+    and a failed call never trips the forget paths' in-flight guard."""
+    import uuid
+
     from ..sources import fsutil as FS
     from ..sources import txn as TXN
 
-    secs, _lap = _lap_timer()
+    if txn is None:
+        anon = f"anon-{uuid.uuid4()}"
+        try:
+            rep = _txn_ingest_round(
+                batch, root, id_col, anon, write_stage, stats_extract, after_commit
+            )
+        finally:
+            for entry in (*TXN.txn_paths(root, anon), *_round_record_paths(root, anon)):
+                FS.delete(entry)
+        rep["txn"] = None
+        return rep
 
+    secs, lap = _lap_timer()
     spark = batch.sparkSession
     rounds_dir, stats_dir = _round_record_paths(root, txn)
     state: dict = {"survivors": None}
@@ -1702,105 +1708,71 @@ def _txn_ingest_round(
     # mid-move: the protocol completes those moves without re-staging
     # (and without re-probing) — report that distinctly
     had_frozen_stage = FS.exists(f"{TXN.txn_paths(root, txn)[1]}/_manifest.json")
-    _lap("replay_check")
     TXN.idempotent_staged_append(
-        root, txn, lambda stage: write_stage(stage, state), dest_for
+        root, txn, lambda stage: write_stage(stage, state, lap), dest_for
     )
-    # "ledger" covers the whole staged round: probe + survivor policy +
-    # (optional) fold + staging write + moves — compare against the
-    # plain round's probe+within+survivors+append total to read the
-    # exactly-once overhead
-    _lap("ledger")
+    lap("append")
     compacted = after_commit()
-    _lap("compact")
+    lap("compact")
     return _report("completed_replay" if had_frozen_stage else "appended", compacted)
 
 
-def _minhash_ingest_round_txn(
-    batch: DataFrame,
-    sig_path: str,
-    id_col: str,
-    text_col: str,
-    comp_path: str | None,
-    threshold: float,
-    max_bucket: int | None,
-    compact_trigger: float,
-    txn: str,
-) -> dict:
-    """:func:`minhash_ingest_round` under the staged-move ledger — the
-    streaming-safe round, built on :func:`_txn_ingest_round`: the probe
-    + within pairs + survivor policy (and the optional components fold)
-    execute strictly before any staged signature file moves into the
-    table; the components fold re-runs only on a full restage (crash
-    before the manifest froze — the table is provably untouched then),
-    where min-label idempotence makes re-folding the same edges
-    converge to the same labels. Compaction runs after the commit point
-    (it has its own staging + recovery walk in sources/compact.py) and
-    is skipped on replays of an already-committed round."""
-    import json as _json
+def _edge_round_stage(batch: DataFrame, id_col: str, probe, write_rows, fold=None):
+    """``write_stage`` for the edge-graph families (MinHash, SimHash,
+    semantic). ``probe()`` returns (vs_corpus, within, release): the
+    cross and within-batch edge frames, persisted and counted here and
+    fed to :func:`_ingest_survivor_policy`, and a callable freeing what
+    the probe holds. ``fold(edges)`` (MinHash's optional standing-
+    cluster fold) runs on the round's edges. ``write_rows(survivors,
+    stage)`` writes the table's data files; it runs BEFORE the round
+    record is staged, because the IVF index keeps its data at the
+    table root and its writer overwrites the stage root."""
+    import json
 
     spark = batch.sparkSession
-    root = sig_path.rstrip("/")
-    p = read_minhash_params(spark, sig_path)
-    files_per_part = p.get("files_per_part", 1)
 
-    def write_stage(stage: str, state: dict) -> None:
-        from ..operators.graph import extend_components_at_rest
-
-        vs_corpus = near_duplicates_against(
-            batch, sig_path, id_col, text_col,
-            threshold=threshold, max_bucket=max_bucket,
-        ).persist()
-        within = minhash_near_duplicates(
-            batch, id_col, text_col, threshold=threshold, max_bucket=max_bucket,
-            num_hashes=p["num_hashes"], bands=p["bands"],
-            shingle_n=p["shingle_n"], seed=p["seed"], hash_mode=p["hash_mode"],
-        ).persist()
+    def write_stage(stage: str, state: dict, lap) -> None:
+        vs_corpus, within, release = probe()
+        vs_corpus, within = vs_corpus.persist(), within.persist()
         try:
             n_cross = vs_corpus.count()
+            lap("probe")
             n_within = within.count()
+            lap("within")
             survivors, edges = _ingest_survivor_policy(
                 batch, id_col, vs_corpus, within
             )
             n_surv = survivors.count()
+            lap("survivors")
             extended = None
-            if comp_path is not None:
-                extended = extend_components_at_rest(spark, comp_path, edges)
+            if fold is not None:
+                extended = fold(edges)
+                lap("extend")
             state["survivors"] = survivors
+            write_rows(survivors, stage)
             _stage_round_record(
                 spark, stage, survivors, id_col,
                 (
                     batch.count(), n_cross, n_within, n_surv,
-                    _json.dumps(extended) if extended is not None else None,
+                    json.dumps(extended) if extended is not None else None,
                 ),
                 "n_batch long, n_cross_pairs long, n_within_pairs long, "
                 "n_survivors long, extended_json string",
             )
-            banded = _banded_signatures(
-                survivors, id_col, text_col, p["num_hashes"], p["bands"],
-                p["shingle_n"], p["seed"], p["hash_mode"], p["parts"],
-            )
-            _write_banded(banded, stage, files_per_part, mode="overwrite")
         finally:
             vs_corpus.unpersist()
             within.unpersist()
+            release()  # the counts + checkpointed survivors read it all
 
-    return _txn_ingest_round(
-        batch, root, id_col, txn, write_stage,
-        stats_extract={
-            "n_batch": lambda st: int(st.n_batch),
-            "n_cross_pairs": lambda st: int(st.n_cross_pairs),
-            "n_within_pairs": lambda st: int(st.n_within_pairs),
-            # staged with the round record, so replays reconstruct the
-            # fold activity too (None = no comp_path was configured)
-            "extended": lambda st: _json.loads(st.extended_json)
-            if st.extended_json is not None
-            else None,
-        },
-        after_commit=lambda: _maybe_compact_subdir(
-            spark, sig_path, "banded", compact_trigger, files_per_part
-        ),
-    )
+    return write_stage
+
+
+# report keys every edge-graph round extracts from its staged stats row
+_EDGE_ROUND_STATS = {
+    "n_batch": lambda st: int(st.n_batch),
+    "n_cross_pairs": lambda st: int(st.n_cross_pairs),
+    "n_within_pairs": lambda st: int(st.n_within_pairs),
+}
 
 
 def fingerprint_ingest_round(
@@ -1824,77 +1796,55 @@ def fingerprint_ingest_round(
        when its worst partition exceeds ``compact_trigger`` x the
        table's files_per_part.
 
-    Returns {survivors, n_batch, n_within_dups, n_corpus_hits,
-    n_survivors, compacted, secs}. ``txn``: same contract as
-    :func:`minhash_ingest_round` — the whole round runs the staged-move
-    ledger, probe strictly before any staged fingerprint moves into the
-    table (a replay of a half-appended batch must not see its own
-    fingerprints and drop every row), survivor record + stats persisted
-    under ``_rounds``/``_rounds_stats``, and the report gains
-    ``action``."""
+    Same contract as :func:`minhash_ingest_round`: the probe runs
+    strictly before any staged fingerprint moves into the table (a
+    replay of a half-appended batch must not see its own fingerprints
+    and drop every row), ``txn`` keys the staged-move ledger, and
+    ``txn=None`` uses a throwaway ledger id. Returns {action, txn,
+    survivors, n_batch, n_within_dups, n_corpus_hits, n_survivors,
+    compacted, secs}; ``secs`` laps within / probe / append /
+    compact."""
     spark = batch.sparkSession
     p = _fingerprint_params(spark, path)
     fpp = p["files_per_part"]
-    if txn is not None:
-        def write_stage(stage: str, state: dict) -> None:
-            deduped = dedup_exact(batch, id_col, text_col)
-            survivors = dedup_exact_against(
-                deduped, path, id_col, text_col
-            ).localCheckpoint()
-            n_batch = batch.count()
-            n_ded = deduped.count()
-            n_surv = survivors.count()
-            state["survivors"] = survivors
-            _stage_round_record(
-                spark, stage, survivors, id_col,
-                (n_batch, n_batch - n_ded, n_ded - n_surv, n_surv),
-                "n_batch long, n_within_dups long, n_corpus_hits long, "
-                "n_survivors long",
-            )
-            _fingerprint_rows(
-                survivors, id_col, text_col, p["parts"], fpp
-            ).write.partitionBy("part").mode("overwrite").parquet(
-                f"{stage}/fingerprints"
-            )
 
-        return _txn_ingest_round(
-            batch, path.rstrip("/"), id_col, txn, write_stage,
-            stats_extract={
-                "n_batch": lambda st: int(st.n_batch),
-                "n_within_dups": lambda st: int(st.n_within_dups),
-                "n_corpus_hits": lambda st: int(st.n_corpus_hits),
-            },
-            after_commit=lambda: _maybe_compact_subdir(
-                spark, path, "fingerprints", compact_trigger, fpp
-            ),
+    def write_stage(stage: str, state: dict, lap) -> None:
+        deduped = dedup_exact(batch, id_col, text_col)
+        n_ded = deduped.count()
+        lap("within")
+        # localCheckpoint: the survivor plan reads the fingerprint
+        # TABLE, which the moves mutate next — eager truncation keeps
+        # a later recompute from probing the grown table
+        survivors = dedup_exact_against(
+            deduped, path, id_col, text_col
+        ).localCheckpoint()
+        n_surv = survivors.count()
+        lap("probe")
+        n_batch = batch.count()
+        state["survivors"] = survivors
+        _fingerprint_rows(
+            survivors, id_col, text_col, p["parts"], fpp
+        ).write.partitionBy("part").mode("overwrite").parquet(
+            f"{stage}/fingerprints"
         )
-    n_batch = batch.count()  # before the timer: see minhash_ingest_round
-    secs, _lap = _lap_timer()
+        _stage_round_record(
+            spark, stage, survivors, id_col,
+            (n_batch, n_batch - n_ded, n_ded - n_surv, n_surv),
+            "n_batch long, n_within_dups long, n_corpus_hits long, "
+            "n_survivors long",
+        )
 
-    deduped = dedup_exact(batch, id_col, text_col)
-    n_ded = deduped.count()
-    _lap("within")
-    # localCheckpoint: the survivor plan reads the fingerprint TABLE
-    # (through dedup_exact_against), and the append below mutates it —
-    # eager truncation enforces probe-before-append structurally
-    survivors = dedup_exact_against(deduped, path, id_col, text_col).localCheckpoint()
-    n_surv = survivors.count()
-    _lap("probe")
-    append_fingerprints(survivors, path, id_col, text_col)
-    _lap("append")
-    compacted = _maybe_compact_subdir(
-        spark, path, "fingerprints", compact_trigger, fpp
+    return _txn_ingest_round(
+        batch, path.rstrip("/"), id_col, txn, write_stage,
+        stats_extract={
+            "n_batch": lambda st: int(st.n_batch),
+            "n_within_dups": lambda st: int(st.n_within_dups),
+            "n_corpus_hits": lambda st: int(st.n_corpus_hits),
+        },
+        after_commit=lambda: _maybe_compact_subdir(
+            spark, path, "fingerprints", compact_trigger, fpp
+        ),
     )
-    _lap("compact")
-    return {
-        "survivors": survivors,
-        "n_batch": n_batch,
-        "n_within_dups": n_batch - n_ded,
-        "n_corpus_hits": n_ded - n_surv,
-        "n_survivors": n_surv,
-        "compacted": compacted,
-        "secs": secs,
-    }
 
 
 def simhash_ingest_round(
@@ -1924,103 +1874,50 @@ def simhash_ingest_round(
 
     ``max_distance`` may be lowered below the index's stored value
     (pigeonhole still complete); raising it is rejected by the probe.
-    Returns {survivors, n_batch, n_cross_pairs, n_within_pairs,
-    n_survivors, compacted, secs}; with ``txn``, the staged-move ledger
-    round (probe strictly before append under replay) plus
-    ``action``."""
+    Same contract as :func:`minhash_ingest_round`: the probe runs
+    strictly before any staged segment moves into the index, ``txn``
+    keys the staged-move ledger, and ``txn=None`` uses a throwaway
+    ledger id. Returns {action, txn, survivors, n_batch,
+    n_cross_pairs, n_within_pairs, n_survivors, compacted, secs}."""
     spark = batch.sparkSession
     p = read_simhash_params(spark, path)
     fpp = p.get("files_per_part", 1)
     d = p["max_distance"] if max_distance is None else max_distance
 
-    def _within_pairs() -> DataFrame:
+    def probe():
+        vs_corpus = simhash_near_duplicates_against(
+            batch, path, id_col, text_col,
+            max_distance=max_distance, max_bucket=max_bucket,
+        )
         if d >= 1:
-            return simhash_hamming_pairs(
+            within = simhash_hamming_pairs(
                 batch, id_col, text_col, max_distance=d,
                 bits=p["bits"], hash_mode=p["hash_mode"], max_bucket=max_bucket,
             )
-        # distance 0: identical-fingerprint pairs (the bucket form)
-        fp = simhash(batch, id_col, text_col, p["bits"], p["hash_mode"])
-        return (
-            fp.select(F.col("doc").alias("doc_a"), "simhash")
-            .join(fp.select(F.col("doc").alias("doc_b"), "simhash"), "simhash")
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b")
-        )
+        else:
+            # distance 0: identical-fingerprint pairs (the bucket form)
+            fp = simhash(batch, id_col, text_col, p["bits"], p["hash_mode"])
+            within = (
+                fp.select(F.col("doc").alias("doc_a"), "simhash")
+                .join(fp.select(F.col("doc").alias("doc_b"), "simhash"), "simhash")
+                .filter(F.col("doc_a") < F.col("doc_b"))
+                .select("doc_a", "doc_b")
+            )
+        return vs_corpus, within, lambda: None
 
-    if txn is not None:
-        def write_stage(stage: str, state: dict) -> None:
-            vs_corpus = simhash_near_duplicates_against(
-                batch, path, id_col, text_col,
-                max_distance=max_distance, max_bucket=max_bucket,
-            ).persist()
-            within = _within_pairs().persist()
-            try:
-                n_cross = vs_corpus.count()
-                n_within = within.count()
-                survivors, _ = _ingest_survivor_policy(
-                    batch, id_col, vs_corpus, within
-                )
-                n_surv = survivors.count()
-                state["survivors"] = survivors
-                _stage_round_record(
-                    spark, stage, survivors, id_col,
-                    (batch.count(), n_cross, n_within, n_surv),
-                    "n_batch long, n_cross_pairs long, n_within_pairs long, "
-                    "n_survivors long",
-                )
-                _simhash_segment_rows(
-                    survivors, id_col, text_col, p, fpp
-                ).write.partitionBy("part").mode("overwrite").parquet(
-                    f"{stage}/segments"
-                )
-            finally:
-                vs_corpus.unpersist()
-                within.unpersist()
+    def write_rows(survivors: DataFrame, stage: str) -> None:
+        _simhash_segment_rows(
+            survivors, id_col, text_col, p, fpp
+        ).write.partitionBy("part").mode("overwrite").parquet(f"{stage}/segments")
 
-        return _txn_ingest_round(
-            batch, path.rstrip("/"), id_col, txn, write_stage,
-            stats_extract={
-                "n_batch": lambda st: int(st.n_batch),
-                "n_cross_pairs": lambda st: int(st.n_cross_pairs),
-                "n_within_pairs": lambda st: int(st.n_within_pairs),
-            },
-            after_commit=lambda: _maybe_compact_subdir(
-                spark, path, "segments", compact_trigger, fpp
-            ),
-        )
-    n_batch = batch.count()  # before the timer: see minhash_ingest_round
-    secs, _lap = _lap_timer()
-
-    vs_corpus = simhash_near_duplicates_against(
-        batch, path, id_col, text_col,
-        max_distance=max_distance, max_bucket=max_bucket,
-    ).persist()
-    within = _within_pairs().persist()
-    try:
-        n_cross = vs_corpus.count()
-        _lap("probe")
-        n_within = within.count()
-        _lap("within")
-        survivors, _ = _ingest_survivor_policy(batch, id_col, vs_corpus, within)
-        n_surv = survivors.count()
-        _lap("survivors")
-        append_simhash_index(survivors, path, id_col, text_col)
-        _lap("append")
-    finally:
-        vs_corpus.unpersist()
-        within.unpersist()
-    compacted = _maybe_compact_subdir(spark, path, "segments", compact_trigger, fpp)
-    _lap("compact")
-    return {
-        "survivors": survivors,
-        "n_batch": n_batch,
-        "n_cross_pairs": n_cross,
-        "n_within_pairs": n_within,
-        "n_survivors": n_surv,
-        "compacted": compacted,
-        "secs": secs,
-    }
+    return _txn_ingest_round(
+        batch, path.rstrip("/"), id_col, txn,
+        _edge_round_stage(batch, id_col, probe, write_rows),
+        stats_extract=_EDGE_ROUND_STATS,
+        after_commit=lambda: _maybe_compact_subdir(
+            spark, path, "segments", compact_trigger, fpp
+        ),
+    )
 
 
 def forget_documents(spark, table_path: str, ids: DataFrame) -> dict:

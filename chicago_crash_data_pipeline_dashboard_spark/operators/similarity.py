@@ -2737,9 +2737,7 @@ def semantic_ingest_round(
     embeddings member of the ingest-round family
     (``dedup.minhash_ingest_round`` / ``fingerprint_ingest_round`` /
     ``simhash_ingest_round``), completing it across all four at-rest
-    signature types (r14, VERDICT r13 item 3 — the probe→append seam
-    the r12 cache-eviction heisenbug lived in, now enforced
-    structurally here too). Over an IVF or IVF-PQ index written by
+    signature types. Over an IVF or IVF-PQ index written by
     ``write_ivf_index`` / ``write_ivfpq_index``:
 
     1. probe the batch against the corpus (:func:`_semantic_probe_hits`
@@ -2753,28 +2751,26 @@ def semantic_ingest_round(
        (``dedup._ingest_survivor_policy`` — any component containing
        corpus content loses its batch members transitively, a
        corpus-free component keeps exactly its minimum batch member);
-    3. append ONLY the survivors under the SAVED quantizers
-       (``append_to_ivf_index`` / ``append_to_ivfpq_index`` — the
+    3. append ONLY the survivors under the SAVED quantizers (the
        index's own encode mode, O(batch)) and compact when the worst
        cluster exceeds ``compact_trigger × files_per_cluster`` files.
 
-    Returns {survivors, n_batch, n_cross_pairs, n_within_pairs,
-    n_survivors, compacted, secs}; the survivors frame is
-    localCheckpoint-ed (already appended; append it nowhere else).
-
-    ``txn``: same contract as the other three families — the WHOLE
-    round runs the staged-move ledger (probe + survivor policy frozen
-    strictly before any staged cluster file moves into the index, so
-    a foreachBatch replay can never re-probe a half-appended index and
-    watch the batch pair with itself), the survivor record + stats
-    persist under ``{path}/_rounds/{txn}``, and the report gains
-    ``action`` (appended / completed_replay / skipped_replay).
+    Same contract as the other three families
+    (``dedup._txn_ingest_round``): the probe and survivor policy run
+    strictly before any staged cluster file moves into the index, so a
+    foreachBatch replay can never re-probe a half-appended index and
+    watch the batch pair with itself; ``txn`` keys the staged-move
+    ledger (the survivor record + stats persist under
+    ``{path}/_rounds``), and ``txn=None`` uses a throwaway ledger id.
+    Returns {action, txn, survivors, n_batch, n_cross_pairs,
+    n_within_pairs, n_survivors, compacted, secs}; the survivors frame
+    is localCheckpoint-ed (already appended; append it nowhere else).
 
     Quantizer health stays :func:`maintain_index`'s job — a drifting
     stream should run the maintenance policy on its own cadence; this
     round never retrains (retraining mid-round would re-assign the
     just-probed clusters under the caller's feet)."""
-    from .dedup import _ingest_survivor_policy, _lap_timer
+    from .dedup import _EDGE_ROUND_STATS, _edge_round_stage, _txn_ingest_round
 
     spark = batch.sparkSession
     has_centroids, has_codebook = _index_layout(path)
@@ -2791,61 +2787,37 @@ def semantic_ingest_round(
     centroids = read_ivf_centroids(spark, path)
     regime = _index_assign_regime(spark, root, has_codebook, centroids)
 
-    if txn is not None:
-        return _semantic_ingest_round_txn(
-            batch, root, kind, data_dir, centroids, id_col, vec_col,
-            threshold, n_probe, files_per_cluster, compact_trigger,
-            broadcast_batch, verify, txn, regime,
+    def probe():
+        cross, within, release = _semantic_probe_hits(
+            batch, data_dir, centroids, id_col, vec_col, threshold, n_probe,
+            broadcast_batch, verify, include_within=True, regime=regime,
         )
+        return (*_semantic_round_edges(cross, within), release)
 
-    n_batch = batch.count()  # before the timer: see minhash_ingest_round
-    secs, _lap = _lap_timer()
-    cross, within, release = _semantic_probe_hits(
-        batch, data_dir, centroids, id_col, vec_col, threshold, n_probe,
-        broadcast_batch, verify, include_within=True, regime=regime,
-    )
-    cross, within = _semantic_round_edges(cross, within)
-    cross = cross.persist()
-    within = within.persist()
-    try:
-        n_cross = cross.count()
-        _lap("probe")
-        n_within = within.count()
-        _lap("within")
-        survivors, _ = _ingest_survivor_policy(batch, id_col, cross, within)
-        n_surv = survivors.count()
-        _lap("survivors")
+    def write_rows(survivors: DataFrame, stage: str) -> None:
         if kind == "ivfpq":
-            append_to_ivfpq_index(
-                survivors, path, id_col=id_col, vec_col=vec_col,
-                files_per_cluster=files_per_cluster,
+            enc = _ivfpq_encoded(
+                survivors, centroids, read_pq_codebook(spark, root), id_col,
+                vec_col, "auto", encode=read_ivfpq_encode_mode(spark, root),
             )
+            enc = _cluster_aligned(enc, files_per_cluster).sortWithinPartitions(
+                "_cluster", "neighbor_id"
+            )
+            out = f"{stage}/data"
         else:
-            append_to_ivf_index(
-                survivors, path, id_col=id_col, vec_col=vec_col,
-                files_per_cluster=files_per_cluster,
-            )
-        _lap("append")
-    finally:
-        cross.unpersist()
-        within.unpersist()
-        # counts + checkpointed survivors materialized everything that
-        # reads the verify frames — a streamed drain must not leave one
-        # broadcast behind per micro-batch
-        release()
-    compacted = _maybe_compact_clusters(
-        spark, root, kind, files_per_cluster, compact_trigger
+            enc = _assigned_frame(survivors, centroids, id_col, vec_col, regime)
+            enc = _cluster_aligned(enc, files_per_cluster)
+            out = stage  # ivf data lives at the index root
+        enc.write.partitionBy("_cluster").mode("overwrite").parquet(out)
+
+    return _txn_ingest_round(
+        batch, root, id_col, txn,
+        _edge_round_stage(batch, id_col, probe, write_rows),
+        stats_extract=_EDGE_ROUND_STATS,
+        after_commit=lambda: _maybe_compact_clusters(
+            spark, root, kind, files_per_cluster, compact_trigger
+        ),
     )
-    _lap("compact")
-    return {
-        "survivors": survivors,
-        "n_batch": n_batch,
-        "n_cross_pairs": n_cross,
-        "n_within_pairs": n_within,
-        "n_survivors": n_surv,
-        "compacted": compacted,
-        "secs": secs,
-    }
 
 
 def _semantic_round_edges(
@@ -2865,95 +2837,6 @@ def _semantic_round_edges(
         .distinct()
     )
     return vs_corpus, win
-
-
-def _semantic_ingest_round_txn(
-    batch: DataFrame,
-    root: str,
-    kind: str,
-    data_dir: str,
-    centroids,
-    id_col: str,
-    vec_col: str,
-    threshold: float,
-    n_probe: int,
-    files_per_cluster: int,
-    compact_trigger: float,
-    broadcast_batch: bool,
-    verify: str,
-    txn: str,
-    regime: str,
-) -> dict:
-    """:func:`semantic_ingest_round` under the staged-move ledger —
-    built on ``dedup._txn_ingest_round`` exactly like the three
-    signature families: probe + within pairs + survivor policy execute
-    strictly before any staged cluster files move into the index.
-    Layout note: the IVF kind's data lives at the index ROOT, so its
-    staged write targets the stage root (``_cluster=*`` dirs) and runs
-    BEFORE the round record is staged (an overwrite of the stage root
-    would wipe a record staged first); IVF-PQ stages under
-    ``data/``."""
-    from .dedup import (
-        _ingest_survivor_policy,
-        _stage_round_record,
-        _txn_ingest_round,
-    )
-
-    spark = batch.sparkSession
-
-    def write_stage(stage: str, state: dict) -> None:
-        cross, within, release = _semantic_probe_hits(
-            batch, data_dir, centroids, id_col, vec_col, threshold, n_probe,
-            broadcast_batch, verify, include_within=True, regime=regime,
-        )
-        cross, within = _semantic_round_edges(cross, within)
-        cross = cross.persist()
-        within = within.persist()
-        try:
-            n_cross = cross.count()
-            n_within = within.count()
-            survivors, _ = _ingest_survivor_policy(batch, id_col, cross, within)
-            n_surv = survivors.count()
-            state["survivors"] = survivors
-            if kind == "ivfpq":
-                codebook = read_pq_codebook(spark, root)
-                enc = _ivfpq_encoded(
-                    survivors, centroids, codebook, id_col, vec_col, "auto",
-                    encode=read_ivfpq_encode_mode(spark, root),
-                )
-                enc = _cluster_aligned(enc, files_per_cluster)
-                enc = enc.sortWithinPartitions("_cluster", "neighbor_id")
-                enc.write.partitionBy("_cluster").mode("overwrite").parquet(
-                    f"{stage}/data"
-                )
-            else:
-                enc = _assigned_frame(survivors, centroids, id_col, vec_col, regime)
-                enc = _cluster_aligned(enc, files_per_cluster)
-                # stage ROOT (ivf data lives at the index root) — this
-                # overwrite must precede the record staging below
-                enc.write.partitionBy("_cluster").mode("overwrite").parquet(stage)
-            _stage_round_record(
-                spark, stage, survivors, id_col,
-                (batch.count(), n_cross, n_within, n_surv),
-                "n_batch long, n_cross_pairs long, n_within_pairs long, "
-                "n_survivors long",
-            )
-        finally:
-            cross.unpersist()
-            within.unpersist()
-            release()  # the staged writes materialized every reader
-
-    return _txn_ingest_round(
-        batch, root, id_col, txn, write_stage,
-        stats_extract={
-            "n_batch": lambda st: int(st.n_batch),
-            "n_cross_pairs": lambda st: int(st.n_cross_pairs),
-            "n_within_pairs": lambda st: int(st.n_within_pairs),
-        },
-        after_commit=lambda: _maybe_compact_clusters(
-            spark, root, kind, files_per_cluster, compact_trigger
-        ),
-    )
 
 
 def delete_from_index(spark, path: str, ids: DataFrame) -> dict:

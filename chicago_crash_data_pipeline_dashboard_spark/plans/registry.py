@@ -74,45 +74,12 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata parquet table lazily.
 
-    ``events.ts`` is written as parquet TIMESTAMP(NANOS). How Spark
-    reads that is version-dependent, so we dispatch on the LOADED dtype
-    rather than assuming one behavior:
-
-    - Spark >= 4.1 reads it natively as ``timestamp_ntz`` (micros,
-      truncated) — kept as-is; it matches DuckDB's micro-precision
-      no-zone TIMESTAMP value-for-value.
-    - Older Sparks refuse the nanos logical type unless the legacy conf
-      ``spark.sql.legacy.parquet.nanosAsLong`` is set, and then surface
-      ``ts`` as nanos-since-epoch ``bigint`` — converted to a
-      microsecond timestamp here with integer DIV (same truncation
-      DuckDB applies).
+    ``events.ts`` is written as parquet TIMESTAMP(NANOS); Spark >= 4.1
+    reads it natively as ``timestamp_ntz`` (micros, truncated), which
+    matches DuckDB's micro-precision no-zone TIMESTAMP value-for-value.
     """
     path = f"{sf_dir}/{name}.parquet"
-    try:
-        df = spark.read.parquet(path)
-    except Exception as exc:
-        # Legacy fallback for the pre-4.1 nanos refusal ONLY — other
-        # failures (missing path, corrupt footer) must surface as-is,
-        # not silently flip a session-wide conf and retry. The conf
-        # cannot be scoped-and-restored: it must still be set when the
-        # lazy scan executes. On Spark >= 4.1 this branch is dead.
-        # The pre-4.1 refusal reads "Illegal Parquet type: INT64
-        # (TIMESTAMP(NANOS,...))" — require BOTH markers so an
-        # unrelated failure that merely mentions "nanos" surfaces
-        # instead of silently flipping a session-wide conf
-        msg = str(exc).lower()
-        if not ("illegal parquet type" in msg and "timestamp(nanos" in msg):
-            raise
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-    if name == "events":
-        from pyspark.sql import functions as F
-
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            # integer DIV — double division loses ULPs on int64 nanos
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        # timestamp / timestamp_ntz: already micro-precision — keep.
+    df = spark.read.parquet(path)
     # Scan rebalancing: parquet splits at row-group granularity, so a
     # single-row-group file scans as ONE task no matter how many cores
     # the cluster has — every narrow map downstream runs single-threaded.

@@ -69,10 +69,6 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        # testdata events.parquet carries TIMESTAMP(NANOS); Spark has no
-        # nanosecond timestamp type, so read as long and convert at the
-        # source boundary (see plans/registry.load).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -155,20 +155,10 @@ def stream_append_to_ivf_index(
     each availableNow drain appends every new file's vectors to the
     at-rest IVF index under the SAVED quantizer
     (``operators.similarity.append_to_ivf_index``; probe results gated
-    equal to a same-quantizer rebuild in tests/test_streaming.py).
-
-    Delivery contract: the file-source checkpoint deduplicates INPUT
-    (each source file enters exactly one micro-batch across restarts
-    and re-drains — a second drain with no new files runs ZERO
-    batches), but ``foreachBatch`` itself is AT-LEAST-ONCE: a crash
-    after the append succeeds but before the checkpoint commit
-    replays the same micro-batch on restart. The append therefore
-    runs under a per-batch transaction id (``txn`` — a staged-move
-    ledger inside the index, keyed on this stream's checkpoint): a
-    replayed batch that already committed is a no-op, and a batch
-    that crashed mid-append re-runs to the identical index instead of
-    duplicating rows. Duplicate ids ACROSS source files remain the
-    upstream contract, exactly as in batch appends.
+    equal to a same-quantizer rebuild in tests/test_streaming.py),
+    under the drain's delivery contract (:func:`_stream_ingest_rounds`).
+    Duplicate ids ACROSS source files remain the upstream contract,
+    exactly as in batch appends.
 
     Per batch, the returned stats carry ``assign_drift_stats`` vs the
     build-time baseline persisted in the index metadata
@@ -179,45 +169,25 @@ def stream_append_to_ivf_index(
     """
     from ..operators import similarity as SIM
 
-    schema = spark.read.parquet(src_dir).schema
     baseline = SIM.read_drift_baseline(spark, index_path)
-    stats: list[dict] = []
-    ledger = _stream_ledger_id(checkpoint_dir)
 
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    src = reader.parquet(src_dir)
+    def run_round(batch_df: DataFrame, txn: str) -> dict:
+        centroids = SIM.append_to_ivf_index(
+            batch_df, index_path, id_col=id_col, vec_col=vec_col, txn=txn
+        )
+        drift = SIM.assign_drift_stats(batch_df, centroids, vec_col=vec_col).first()
+        return {
+            "n_vectors": drift["n_vectors"],
+            "mean_dist": drift["mean_dist"],
+            "p95_dist": drift["p95_dist"],
+            "max_dist": drift["max_dist"],
+            "baseline_mean": baseline["mean_dist"] if baseline else None,
+        }
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            centroids = SIM.append_to_ivf_index(
-                batch_df, index_path, id_col=id_col, vec_col=vec_col,
-                txn=f"{ledger}-b{batch_id}",
-            )
-            drift = SIM.assign_drift_stats(batch_df, centroids, vec_col=vec_col).first()
-            stats.append(
-                {
-                    "batch_id": batch_id,
-                    "n_vectors": drift["n_vectors"],
-                    "mean_dist": drift["mean_dist"],
-                    "p95_dist": drift["p95_dist"],
-                    "max_dist": drift["max_dist"],
-                    "baseline_mean": baseline["mean_dist"] if baseline else None,
-                }
-            )
-        finally:
-            batch_df.unpersist()
-
-    q = (
-        src.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _stream_ingest_rounds(
+        spark, src_dir, checkpoint_dir, run_round,
+        survivors_dir=None, max_files_per_trigger=max_files_per_trigger,
     )
-    q.awaitTermination()
-    return stats
 
 
 def stream_maintain_index(
@@ -239,46 +209,21 @@ def stream_maintain_index(
     pass through to ``maintain_index`` (``retrain_drift_ratio``,
     ``compact_trigger``, ``retrain="never"`` …).
 
-    Same delivery contract as the append stream: the file-source
-    checkpoint deduplicates input files (a re-drain with no new files
-    runs zero batches), and the per-batch transaction ledger makes
-    the at-least-once ``foreachBatch`` body idempotent — a replayed
-    round that already committed reports ``skipped_replay``; an
-    append round that crashed mid-move re-runs to the identical
-    index; a retrain round's marker is published atomically with the
-    swapped-in index. Returns maintain_index's per-batch reports
-    (with batch_id added)."""
+    Same delivery contract as every drain (:func:`_stream_ingest_rounds`);
+    a retrain round's ledger marker is published atomically with the
+    swapped-in index. Returns maintain_index's per-batch reports (with
+    batch_id added)."""
     from ..operators import similarity as SIM
 
-    schema = spark.read.parquet(src_dir).schema
-    reports: list[dict] = []
-    ledger = _stream_ledger_id(checkpoint_dir)
-
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    src = reader.parquet(src_dir)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            rep = SIM.maintain_index(
-                spark, index_path, batch_df, id_col=id_col, vec_col=vec_col,
-                txn=f"{ledger}-b{batch_id}", **policy
-            )
-            rep["batch_id"] = batch_id
-            reports.append(rep)
-        finally:
-            batch_df.unpersist()
-
-    q = (
-        src.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _stream_ingest_rounds(
+        spark, src_dir, checkpoint_dir,
+        lambda batch_df, txn: SIM.maintain_index(
+            spark, index_path, batch_df, id_col=id_col, vec_col=vec_col,
+            txn=txn, **policy
+        ),
+        survivors_dir=None,
+        max_files_per_trigger=max_files_per_trigger,
     )
-    q.awaitTermination()
-    return reports
 
 
 def stream_minhash_ingest(
@@ -307,26 +252,8 @@ def stream_minhash_ingest(
     sequential rounds, exactly the semantics of calling the round per
     batch by hand (gated in tests/test_streaming.py).
 
-    Delivery contract: the file-source checkpoint deduplicates INPUT
-    (each source file enters exactly one micro-batch across restarts
-    and re-drains — a second drain with no new files runs ZERO
-    batches), and the round itself runs under a per-batch transaction
-    id in the table's staged-move ledger, which here guards more than
-    duplicate rows: the probe-before-append rule. A replayed batch
-    whose first attempt crashed mid-append must NOT re-probe the
-    table (it would find its own half-appended signatures, pair with
-    itself at est_jaccard 1.0, and drop every row) — the ledger's
-    frozen staging skips the re-probe and completes the moves; a
-    replay of a committed round is a no-op that reconstructs the same
-    report from the round's persisted record.
-
-    ``survivors_dir``: optional sink — each batch's surviving rows
-    land under ``{survivors_dir}/batch={batch_id}`` in overwrite mode
-    (replay-idempotent by construction: a replayed batch overwrites
-    its own directory with identical content).
-
-    Returns one report dict per micro-batch (the round's report plus
-    ``batch_id``)."""
+    Delivery contract, survivors sink and report shape: see
+    :func:`_stream_ingest_rounds`."""
     from ..operators import dedup as DD
 
     return _stream_ingest_rounds(
@@ -356,13 +283,9 @@ def stream_fingerprint_ingest(
     each drained micro-batch runs one full
     ``fingerprint_ingest_round`` — within-batch exact dedup, probe
     against the at-rest corpus fingerprints (pruned scan, corpus never
-    shuffled), survivors-only append, trigger-gated compaction — under
-    the same per-batch staged-move ledger, so a foreachBatch replay
-    never re-probes a half-appended table (which would pair the batch
-    with itself and drop every row) and never duplicates fingerprint
-    rows. Same delivery contract and report shape as the MinHash
-    stream; within-batch duplicate IDs across source files remain the
-    upstream contract."""
+    shuffled), survivors-only append, trigger-gated compaction. Same
+    drain as the MinHash stream; within-batch duplicate IDs across
+    source files remain the upstream contract."""
     from ..operators import dedup as DD
 
     return _stream_ingest_rounds(
@@ -392,10 +315,8 @@ def stream_simhash_ingest(
     each drained micro-batch runs one full ``simhash_ingest_round``
     (probe vs corpus segments + Hamming pairs vs itself under the
     index's pinned params, ingest survivor policy, survivors-only
-    segment append, trigger-gated compaction) under the same per-batch
-    staged-move ledger — exactly-once against foreachBatch replays,
-    probe strictly before append. Same delivery contract and report
-    shape as the MinHash stream."""
+    segment append, trigger-gated compaction). Same drain as the
+    MinHash stream."""
     from ..operators import dedup as DD
 
     return _stream_ingest_rounds(
@@ -424,26 +345,21 @@ def stream_semantic_ingest(
     max_files_per_trigger: int | None = None,
 ) -> list[dict]:
     """Cross-run SEMANTIC dedup + ANN-index ingest AS A STREAM —
-    :func:`stream_minhash_ingest` for the embeddings family (r14,
-    VERDICT r13 items 3-4), completing the streamed story across all
-    four at-rest signature types: each drained micro-batch runs one
+    :func:`stream_minhash_ingest` for the embeddings family: each
+    drained micro-batch runs one
     full ``similarity.semantic_ingest_round`` against the IVF / IVF-PQ
     index — probe vs the ingested corpus (scan pruned to the probed
     cluster partitions, corpus never shuffled) and vs itself under the
     index's geometry, the shared INGEST survivor policy, survivors-only
-    append under the SAVED quantizers, trigger-gated compaction —
-    under the same per-batch staged-move ledger, so a foreachBatch
-    replay never re-probes a half-appended index (the batch would pair
-    with its own just-appended vectors and drop every row) and never
-    duplicates index rows. Batch N+1's near-duplicates of batch N's
+    append under the SAVED quantizers, trigger-gated compaction. Batch
+    N+1's near-duplicates of batch N's
     survivors are caught through the index — sequential rounds, the
     semantics of calling the round per batch by hand.
 
     Quantizer health is a separate concern: run
     :func:`stream_maintain_index` (or batch ``maintain_index``) on its
     own cadence to watch drift and retrain; this stream never
-    retrains. Same delivery contract and report shape as the other
-    three ingest streams."""
+    retrains. Same drain as the other three ingest streams."""
     from ..operators import similarity as SIM
 
     return _stream_ingest_rounds(
@@ -466,11 +382,32 @@ def _stream_ingest_rounds(
     survivors_dir: str | None,
     max_files_per_trigger: int | None,
 ) -> list[dict]:
-    """Shared availableNow drain for the cross-run dedup streams: one
-    transactional ingest round per micro-batch (``run_round(batch_df,
-    txn) -> report``), per-batch txn ids keyed on this stream's
-    checkpoint, optional per-batch survivors sink (overwrite mode —
-    replay-idempotent by construction)."""
+    """The one availableNow drain behind the six ANN / dedup streams:
+    each micro-batch runs ``run_round(batch_df, txn) -> report`` once,
+    with ``batch_df`` cached for the round and a per-batch txn id
+    keyed on this stream's checkpoint.
+
+    Delivery contract: the file-source checkpoint deduplicates INPUT
+    (each source file enters exactly one micro-batch across restarts
+    and re-drains — a second drain with no new files runs ZERO
+    batches), but ``foreachBatch`` itself is AT-LEAST-ONCE: a crash
+    after a round succeeds but before the checkpoint commit replays
+    the same micro-batch on restart. Every round therefore runs under
+    its txn in the table's staged-move ledger (sources/txn.py): a
+    replayed batch that already committed is a no-op that reports
+    ``skipped_replay``, and a batch that crashed mid-move completes
+    its frozen staging instead of duplicating rows. For the dedup
+    rounds the ledger also guards the probe-before-append rule: a
+    replay must NOT re-probe a table holding its own half-appended
+    rows (the batch would pair with itself and drop every row), so
+    the frozen staging skips the re-probe and completes the moves.
+
+    ``survivors_dir``: optional sink — each batch's surviving rows
+    land under ``{survivors_dir}/batch={batch_id}`` in overwrite mode
+    (replay-idempotent by construction: a replayed batch overwrites
+    its own directory with identical content). Returns one report per
+    micro-batch (the round's report plus ``batch_id``, without the
+    survivors frame)."""
     schema = spark.read.parquet(src_dir).schema
     reports: list[dict] = []
     ledger = _stream_ledger_id(checkpoint_dir)

@@ -108,13 +108,13 @@ def test_validate_upload_schema(spark):
 
 
 def test_events_ts_loads_as_timestamp(spark, sf_smoke):
-    """registry.load must surface events.ts as a usable timestamp type
-    regardless of how this Spark version reads TIMESTAMP(NANOS) parquet
-    (bigint under the legacy conf, timestamp_ntz natively on >= 4.1)."""
+    """registry.load must surface events.ts as a usable timestamp type:
+    Spark >= 4.1 reads TIMESTAMP(NANOS) parquet natively as
+    timestamp_ntz."""
     from chicago_crash_data_pipeline_dashboard_spark.plans.registry import load
 
     df = load(spark, sf_smoke, "events")
-    assert dict(df.dtypes)["ts"] in ("timestamp", "timestamp_ntz")
+    assert dict(df.dtypes)["ts"] == "timestamp_ntz"
     # and it must be consumable by the session-gap arithmetic
     from chicago_crash_data_pipeline_dashboard_spark.streaming.stateful import sessionize_batch
 
