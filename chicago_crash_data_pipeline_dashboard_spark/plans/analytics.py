@@ -1368,30 +1368,17 @@ def _drain_events_stream(
 
     ``build_query`` receives ``n_streams`` independent readStream
     frames over the same directory (a stream-stream join needs two
-    sources; each keeps its own file-source offsets).
-
-    Version dispatch mirrors ``registry.load``: the stream reads the
-    RAW parquet schema, and a ``bigint`` ts (the pre-4.1 legacy nanos
-    read — ``load`` has already set the conf if this Spark needs it)
-    is converted with the same integer-DIV micros expression before
-    the operator sees it."""
+    sources; each keeps its own file-source offsets). The streams read
+    with ``load``'s schema, so ``ts`` is ``timestamp_ntz`` as in batch."""
     import os
     import shutil
     import tempfile
 
-    load(spark, sf_dir, "events")  # establishes the legacy conf when needed
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    schema = load(spark, sf_dir, "events").schema
     tmp = tempfile.mkdtemp(prefix=f"{name}_")
     os.symlink(f"{sf_dir}/events.parquet", f"{tmp}/events.parquet")
     try:
-        streams = []
-        for _ in range(n_streams):
-            stream = spark.readStream.schema(raw.schema).parquet(tmp)
-            if dict(raw.dtypes).get("ts") == "bigint":
-                stream = stream.withColumn(
-                    "ts", F.timestamp_micros(F.expr("ts DIV 1000"))
-                )
-            streams.append(stream)
+        streams = [spark.readStream.schema(schema).parquet(tmp) for _ in range(n_streams)]
         q = (
             build_query(*streams)
             .writeStream.format("memory")
@@ -1432,14 +1419,10 @@ def windowed_stream_cost_probe(spark: SparkSession, sf_dir: str) -> dict:
 
     from ..streaming.ingest import windowed_event_counts
 
-    load(spark, sf_dir, "events")  # establishes the legacy conf when needed
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
-    legacy_ts = dict(raw.dtypes).get("ts") == "bigint"
+    raw = load(spark, sf_dir, "events")
 
     def _stream_over(src_dir: str, name: str) -> float:
         stream = spark.readStream.schema(raw.schema).parquet(src_dir)
-        if legacy_ts:
-            stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
         t0 = _time.perf_counter()
         q = (
             windowed_event_counts(stream)
@@ -1470,9 +1453,7 @@ def windowed_stream_cost_probe(spark: SparkSession, sf_dir: str) -> dict:
         os.symlink(f"{sf_dir}/events.parquet", f"{tmp}/full/events.parquet")
         drain_full_sec = _stream_over(f"{tmp}/full", "ccpd_wstream_full")
 
-        batch = windowed_event_counts(raw if not legacy_ts else raw.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts DIV 1000"))
-        ))
+        batch = windowed_event_counts(raw)
         t0 = _time.perf_counter()
         n_windows = batch.count()
         batch_twin_sec = _time.perf_counter() - t0

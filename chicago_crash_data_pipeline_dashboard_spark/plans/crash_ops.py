@@ -277,7 +277,7 @@ _CLEAN_ORACLE = _CLEAN_ORACLE_TEMPLATE.replace("__STR__", "VARCHAR")
 )
 def crash_clean_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     bronze = synth_bronze_spark(spark, sf_dir)
-    return clean_crashes(bronze)
+    return clean_crashes(bronze, persist_intermediate=False)
 
 
 @register(
@@ -296,7 +296,7 @@ def crash_clean_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the CLEANED frame — end-to-end bronze→gold→metric in one lazy plan.",
 )
 def crash_hit_run_rate_by_weather(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cleaned = clean_crashes(synth_bronze_spark(spark, sf_dir))
+    cleaned = clean_crashes(synth_bronze_spark(spark, sf_dir), persist_intermediate=False)
     return cleaned.groupBy("weather_condition").agg(
         F.count(F.lit(1)).alias("n_crashes"),
         F.sum("hit_and_run_i").alias("n_hit_run"),

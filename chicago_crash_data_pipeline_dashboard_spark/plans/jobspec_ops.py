@@ -25,13 +25,14 @@ Reference parity targets:
 
 from __future__ import annotations
 
+import operator
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.skew import salted_join, two_phase_agg
-from ..sources.jobspec import JobSpec, apply_job
+from ..sources.jobspec import JobSpec, compile_job
 from ..sources.silver import (
     describe_table,
     list_tables,
@@ -73,28 +74,44 @@ def _materialize(spark: SparkSession, out: DataFrame) -> DataFrame:
 _TODAY = "2024-01-20"
 
 
-def _spec_summary(mode: str, out: DataFrame) -> DataFrame:
-    """One row per job run: row count, distinct ids (present because
-    ensureSelect force-includes the id column — P1 is value-verified:
-    if projection dropped ``event_id`` this would not resolve), and
-    the first 3 ids in the spec's (ts, event_id) order (W1: the global
-    sort is verified through the ordered limit, which Spark executes
-    as TakeOrderedAndProject — no full sort materialization)."""
-    summary = out.agg(
+def _run_summaries(
+    spark: SparkSession, modes: list[str], runs: DataFrame, order: list[str]
+) -> DataFrame:
+    """One row per job run, from the mode-tagged union of every run's
+    rows: row count and distinct ids (one aggregate), and the first 3
+    ids in the spec's (ts, event_id) order. W1 is verified through a
+    per-mode ``row_number() <= 3``, which Spark plans as a partial
+    WindowGroupLimit before the shuffle, so no task sorts a whole run.
+    A run with no rows still gets its row: ``0, 0, ''``."""
+    counts = runs.groupBy("mode").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.countDistinct("event_id").alias("n_ids"),
     )
-    first = out.limit(3).agg(
-        F.array_join(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct(F.col("ts"), F.col("event_id")))),
-                lambda s: s["event_id"].cast("string"),
-            ),
-            ",",
-        ).alias("first_ids")
+    rank = F.row_number().over(Window.partitionBy("mode").orderBy(*order))
+    first = (
+        runs.withColumn("_rank", rank)
+        .filter(F.col("_rank") <= 3)
+        .groupBy("mode")
+        .agg(
+            F.array_join(
+                F.transform(
+                    F.sort_array(F.collect_list(F.struct(*order))),
+                    lambda s: s["event_id"].cast("string"),
+                ),
+                ",",
+            ).alias("first_ids")
+        )
     )
-    return summary.crossJoin(first).select(
-        F.lit(mode).alias("mode"), "n_rows", "n_ids", "first_ids"
+    every_mode = spark.range(1).select(F.explode(F.array(*map(F.lit, modes))).alias("mode"))
+    return (
+        every_mode.join(counts, "mode", "left")
+        .join(first, "mode", "left")
+        .select(
+            "mode",
+            F.coalesce("n_rows", F.lit(0)).alias("n_rows"),
+            F.coalesce("n_ids", F.lit(0)).alias("n_ids"),
+            F.coalesce("first_ids", F.lit("")).alias("first_ids"),
+        )
     )
 
 
@@ -141,9 +158,11 @@ def _spec_summary(mode: str, out: DataFrame) -> DataFrame:
     """,
     doc="P1 ensureSelect + P2 buildWhere precedence (extractor/"
     "main.go:202-222,409-429) + W1 deterministic order + ST4 half-open "
-    "backfill window, one row per predicate mode over events. Every "
-    "predicate compiles to a scan-pushed filter; the ordered first-3 "
-    "probe runs as TakeOrderedAndProject.",
+    "backfill window, one row per predicate mode over events. The five "
+    "runs are one mode-tagged union from one scan, with the OR of their "
+    "predicates pushed into it; the ordered first-3 probe runs as a "
+    "per-mode row_number() <= 3 (a partial WindowGroupLimit, no global "
+    "sort).",
 )
 def jobspec_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
@@ -151,42 +170,45 @@ def jobspec_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs = [
         (
             "explicit_where",
-            apply_job(
-                ev,
-                JobSpec(
-                    select=["event_type", "value"],
-                    where="event_type = 'error' AND value > 5.0",
-                    **common,
-                ),
+            JobSpec(
+                select=["event_type", "value"],
+                where="event_type = 'error' AND value > 5.0",
+                **common,
             ),
+            {},
         ),
         (
             "date_range",
-            apply_job(
-                ev,
-                JobSpec(
-                    select=["event_type"],
-                    date_range=("2024-01-10 00:00:00", "2024-01-20 00:00:00"),
-                    **common,
-                ),
+            JobSpec(
+                select=["event_type"],
+                date_range=("2024-01-10 00:00:00", "2024-01-20 00:00:00"),
+                **common,
             ),
+            {},
         ),
-        (
-            "watermark",
-            apply_job(ev, JobSpec(**common), watermark="2024-01-15 00:00:00"),
-        ),
-        (
-            "since_days",
-            apply_job(ev, JobSpec(select=["value"], since_days=3, **common), today=_TODAY),
-        ),
-        (
-            "default_last_7_days",
-            apply_job(ev, JobSpec(**common), today=_TODAY),
-        ),
+        ("watermark", JobSpec(**common), {"watermark": "2024-01-15 00:00:00"}),
+        ("since_days", JobSpec(select=["value"], since_days=3, **common), {"today": _TODAY}),
+        ("default_last_7_days", JobSpec(**common), {"today": _TODAY}),
     ]
-    return reduce(
-        DataFrame.unionByName, [_spec_summary(mode, out) for mode, out in runs]
+    # The mode-tagged union of the five runs, from one scan: each row
+    # carries one (mode, ts, event_id) struct per run whose predicate it
+    # matches, and the explode yields the union's rows. The struct takes
+    # ts and event_id from the run's projection, so P1 stays checked: a
+    # run whose projection lost either column has a struct of another
+    # type, and the array of tags does not resolve. The OR of the
+    # predicates is pushed into the scan.
+    preds, tags = [], []
+    for mode, spec, at in runs:
+        pred, cols = compile_job(spec, **at)
+        kept = [F.col(c) for c in common["order"] if cols is None or c in cols]
+        preds.append(pred)
+        tags.append(F.when(pred, F.struct(F.lit(mode).alias("mode"), *kept)))
+    tagged = (
+        ev.filter(reduce(operator.or_, preds))
+        .select(F.explode(F.array_compact(F.array(*tags))).alias("run"))
+        .select("run.*")
     )
+    return _run_summaries(spark, [mode for mode, _, _ in runs], tagged, common["order"])
 
 
 _CAT_TABLES = ("events", "documents", "embeddings")

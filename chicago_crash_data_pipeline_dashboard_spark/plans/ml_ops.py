@@ -83,7 +83,7 @@ def _metrics_df(agg: DataFrame) -> DataFrame:
     "One aggregate pass; scalars derived from the four counts.",
 )
 def crash_rule_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cleaned = clean_crashes(synth_bronze_spark(spark, sf_dir))
+    cleaned = clean_crashes(synth_bronze_spark(spark, sf_dir), persist_intermediate=False)
     y = F.col("hit_and_run_i")
     p = ((F.col("posted_speed_limit") >= 35) | (F.col("is_weekend") == 1)).cast("int")
     labeled = cleaned.select(y.alias("y"), p.alias("p"))

@@ -20,10 +20,12 @@ Parity rules (applied consistently on BOTH sides):
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 @dataclass(frozen=True)
@@ -38,6 +40,15 @@ class OracleSpec:
 
 QUERIES: dict[str, OracleSpec] = {}
 
+
+@dataclass
+class _TableFacts:
+    """What ``load`` memoizes per parquet file content."""
+
+    schema: StructType
+    rebalance: dict[int, bool] = field(default_factory=dict)  # parallelism -> verdict
+
+
 # Tables whose consumers are CPU-bound narrow maps (shingling, md5
 # hashing, per-token HOFs over long text). For these, an under-split
 # scan (single-row-group parquet file → ONE task) serializes the whole
@@ -49,16 +60,17 @@ QUERIES: dict[str, OracleSpec] = {}
 # iterative MLlib fits.
 _REBALANCE_TABLES = {"documents"}
 
-# (parquet path, mtime_ns, size, target parallelism) -> needs-repartition
-# verdict. mtime/size key the cache to the FILE CONTENT, so a path
-# rewritten mid-session (tests, compaction) re-probes instead of keeping
-# a stale verdict. FIFO-bounded: a long-lived driver session touching
-# many temp paths (tests rewrite fixtures constantly) must not grow the
-# dict without limit — dead keys for deleted files would otherwise
-# accumulate forever. Re-probing an evicted live key costs only the
-# ~0.1 s planning probe.
-_REBALANCE_DECISION_MAX = 256
-_REBALANCE_DECISION: dict[tuple[str, int, int, int], bool] = {}
+# (parquet path, mtime_ns, size) -> what ``load`` learned about the
+# file: its schema, and the needs-repartition verdict per target
+# parallelism. mtime/size key the memo to the FILE CONTENT, so a path
+# rewritten mid-session (tests, compaction) is inferred and probed
+# again instead of keeping a stale schema or verdict. FIFO-bounded: a
+# long-lived driver session touching many temp paths (tests rewrite
+# fixtures constantly) must not grow the dict without limit — dead keys
+# for deleted files would otherwise accumulate forever. An evicted live
+# key costs one footer-inference job again.
+_TABLE_MEMO_MAX = 256
+_TABLE_MEMO: dict[tuple[str, int, int], _TableFacts] = {}
 
 
 def register(name: str, oracle: str | None = None, doc: str = ""):
@@ -77,9 +89,26 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``events.ts`` is written as parquet TIMESTAMP(NANOS); Spark >= 4.1
     reads it natively as ``timestamp_ntz`` (micros, truncated), which
     matches DuckDB's micro-precision no-zone TIMESTAMP value-for-value.
+
+    Inferring a parquet schema runs one Spark job (a footer read), so
+    the inferred schema is memoized per file content and later reads
+    pass it to the reader: a memo hit starts no job.
     """
     path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
+    try:
+        st = os.stat(path)
+        key = (path, st.st_mtime_ns, st.st_size)
+    except OSError:  # non-local path (hdfs/s3): no content key, no memo
+        key = None
+    facts = _TABLE_MEMO.get(key) if key else None
+    if facts is None:
+        df = spark.read.parquet(path)
+        if key:
+            while len(_TABLE_MEMO) >= _TABLE_MEMO_MAX:
+                _TABLE_MEMO.pop(next(iter(_TABLE_MEMO)))
+            facts = _TABLE_MEMO[key] = _TableFacts(df.schema)
+    else:
+        df = spark.read.schema(facts.schema).parquet(path)
     # Scan rebalancing: parquet splits at row-group granularity, so a
     # single-row-group file scans as ONE task no matter how many cores
     # the cluster has — every narrow map downstream runs single-threaded.
@@ -88,21 +117,12 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # through the exchange into the scan. On a real cluster reading many
     # well-sized files this is a no-op branch (splits >= cores). The
     # split-count probe (`.rdd` conversion) costs ~0.1 s of planning, so
-    # its verdict is memoized per (path, parallelism) — static inputs.
+    # its verdict is memoized with the schema, per parallelism.
     if name in _REBALANCE_TABLES:
-        import os
-
         target = spark.sparkContext.defaultParallelism
-        try:
-            st = os.stat(path)
-            mtime_ns, size = st.st_mtime_ns, st.st_size
-        except OSError:  # non-local path (hdfs/s3): fall back to path-only key
-            mtime_ns, size = 0, 0
-        key = (path, mtime_ns, size, target)
-        if key not in _REBALANCE_DECISION:
-            while len(_REBALANCE_DECISION) >= _REBALANCE_DECISION_MAX:
-                _REBALANCE_DECISION.pop(next(iter(_REBALANCE_DECISION)))
-            _REBALANCE_DECISION[key] = df.rdd.getNumPartitions() < target
-        if _REBALANCE_DECISION[key]:
+        verdicts = facts.rebalance if facts else {}
+        if target not in verdicts:
+            verdicts[target] = df.rdd.getNumPartitions() < target
+        if verdicts[target]:
             df = df.repartition(target)
     return df

@@ -80,19 +80,31 @@ def build_where(
     return d.cast("date") >= cutoff, "default_last_7_days"
 
 
+def compile_job(
+    spec: JobSpec,
+    watermark: str | None = None,
+    today: str | None = None,
+) -> tuple[Column, list[str] | None]:
+    """Compile the spec to its predicate and its projection (``None``:
+    every column), with no order. A caller that runs several specs over
+    one source can tag rows with the predicates in one scan."""
+    pred, _mode = build_where(spec, watermark=watermark, today=today)
+    return pred, ensure_select(spec)
+
+
 def apply_job(
     df: DataFrame,
     spec: JobSpec,
     watermark: str | None = None,
     today: str | None = None,
 ) -> DataFrame:
-    """Compile the spec onto a source frame: projection (pruned into the
-    scan), predicate (pushed into the scan), deterministic order (W1 —
-    the reference sorts for stable pagination; harmless under Spark,
-    kept for output parity)."""
-    pred, _mode = build_where(spec, watermark=watermark, today=today)
+    """Apply the compiled spec to a source frame: predicate (pushed into
+    the scan), projection (pruned into the scan), then the spec's
+    deterministic order (W1 — the reference sorts for stable pagination;
+    kept for output parity). The order is a global sort, which costs a
+    range-sampling job plus a sort."""
+    pred, cols = compile_job(spec, watermark=watermark, today=today)
     out = df.filter(pred)
-    cols = ensure_select(spec)
     if cols is not None:
         out = out.select([c for c in cols if c in df.columns])
     if spec.order:

@@ -101,3 +101,43 @@ def test_null_coord_rows_survive(spark_clean):
 def test_caps(spark_clean):
     assert (spark_clean["num_units"].dropna() <= 10).all()
     assert (spark_clean["posted_speed_limit"].dropna() <= 75).all()
+
+
+_RESTART_SCRIPT = """
+import sys
+from chicago_crash_data_pipeline_dashboard_spark.operators import clean
+from chicago_crash_data_pipeline_dashboard_spark.plans.crash_ops import synth_bronze_spark
+from chicago_crash_data_pipeline_dashboard_spark.session import get_spark
+
+def rows():
+    spark = get_spark(app_name="ccpd_restart")
+    out = clean.clean_crashes(synth_bronze_spark(spark, sys.argv[1]), persist_intermediate=False)
+    got = sorted(map(tuple, out.collect()), key=repr)
+    spark.stop()
+    return got
+
+first = rows()
+exprs = clean._exprs()
+second = rows()
+assert clean._exprs() is exprs, "the Columns were rebuilt on the same gateway"
+assert first and first == second, (len(first), len(second))
+print("ok", len(first))
+"""
+
+
+def test_clean_crashes_survives_a_new_context(sf_smoke, tmp_path):
+    """clean_crashes builds its data-independent Columns once per JVM
+    gateway; after SparkContext.stop() and a new session on the same
+    gateway, the same Columns give the same rows. Run in a subprocess,
+    so stopping the context does not stop the suite's session."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": root, "SPARK_GRAFT_DRIVER_MEM": "1g",
+           "SPARK_LOCAL_DIRS": str(tmp_path)}
+    res = subprocess.run([sys.executable, "-c", _RESTART_SCRIPT, sf_smoke], cwd=root, env=env,
+                         capture_output=True, text=True, timeout=600)
+    assert res.returncode == 0, res.stderr[-3000:]
+    assert res.stdout.strip().startswith("ok "), res.stdout

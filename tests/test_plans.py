@@ -12,7 +12,13 @@ from pyspark.sql import functions as F
 
 from chicago_crash_data_pipeline_dashboard_spark.operators.skew import salted_join, two_phase_agg
 from chicago_crash_data_pipeline_dashboard_spark.plans import QUERIES
-from chicago_crash_data_pipeline_dashboard_spark.plans import analytics, llm_ops  # noqa: F401
+from chicago_crash_data_pipeline_dashboard_spark.plans import (  # noqa: F401
+    analytics,
+    crash_ops,
+    jobspec_ops,
+    llm_ops,
+    ml_ops,
+)
 
 
 def plan_of(df, mode: str = "formatted") -> str:
@@ -397,28 +403,111 @@ def test_ivf_index_at_rest_prunes_partitions(spark, sf_oracle, tmp_path):
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, in_memory.collect()))
 
 
-def test_rebalance_decision_cache_is_bounded(spark, sf_oracle):
-    """_REBALANCE_DECISION memoizes one bool per (path, mtime, size,
-    parallelism); tests and compaction rewrite fixture paths constantly,
-    so without a bound the dict accumulates dead keys for the life of
-    the driver. Filling it past the cap and loading a fresh key must
-    evict (FIFO) rather than grow (VERDICT r7 item 9)."""
+def _job_count(spark, group: str, action) -> int:
+    """Spark jobs that ``action`` starts, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setJobGroup("", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_rebalance_decision_cache_is_bounded(spark, sf_oracle, tmp_path):
+    """registry.load memoizes, per (path, mtime, size), the inferred
+    schema and the rebalance verdict per parallelism; tests and
+    compaction rewrite fixture paths constantly, so without a bound the
+    dict accumulates dead keys for the life of the driver. Filling it
+    past the cap and loading a fresh key must evict (FIFO) rather than
+    grow (VERDICT r7 item 9). A memo hit starts no Spark job (inference
+    reads a parquet footer in one), a file rewritten at the same path
+    loads its new schema, and events.ts stays timestamp_ntz when read
+    with the memoized schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from chicago_crash_data_pipeline_dashboard_spark.plans import registry
 
-    saved = dict(registry._REBALANCE_DECISION)
+    saved = dict(registry._TABLE_MEMO)
     try:
-        registry._REBALANCE_DECISION.clear()
-        for i in range(registry._REBALANCE_DECISION_MAX):
-            registry._REBALANCE_DECISION[(f"/fake/path{i}", 0, 0, 8)] = False
-        oldest = next(iter(registry._REBALANCE_DECISION))
+        registry._TABLE_MEMO.clear()
+        fake = registry._TableFacts(spark.range(1).schema)
+        for i in range(registry._TABLE_MEMO_MAX):
+            registry._TABLE_MEMO[(f"/fake/path{i}", 0, 0)] = fake
+        oldest = next(iter(registry._TABLE_MEMO))
         registry.load(spark, sf_oracle, "documents")  # inserts a real key
-        assert len(registry._REBALANCE_DECISION) <= registry._REBALANCE_DECISION_MAX
-        assert oldest not in registry._REBALANCE_DECISION  # FIFO evicted
-        real_key = [k for k in registry._REBALANCE_DECISION if "documents" in k[0]]
-        assert real_key, "the fresh probe verdict must be cached"
+        assert len(registry._TABLE_MEMO) <= registry._TABLE_MEMO_MAX
+        assert oldest not in registry._TABLE_MEMO  # FIFO evicted
+        real = [v for k, v in registry._TABLE_MEMO.items() if "documents" in k[0]]
+        assert real and real[0].rebalance, "the fresh schema and probe verdict must be cached"
+
+        registry.load(spark, sf_oracle, "events")
+        hit = _job_count(spark, "memo_hit", lambda: registry.load(spark, sf_oracle, "events"))
+        assert hit == 0
+        assert dict(registry.load(spark, sf_oracle, "events").dtypes)["ts"] == "timestamp_ntz"
+
+        path = tmp_path / "t.parquet"
+        pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
+        assert registry.load(spark, str(tmp_path), "t").columns == ["a", "b"]
+        pq.write_table(pa.table({"c": [1.5, 2.5, 3.5]}), path)
+        rewritten = registry.load(spark, str(tmp_path), "t")
+        assert rewritten.columns == ["c"]
+        assert sorted(r.c for r in rewritten.collect()) == [1.5, 2.5, 3.5]
     finally:
-        registry._REBALANCE_DECISION.clear()
-        registry._REBALANCE_DECISION.update(saved)
+        registry._TABLE_MEMO.clear()
+        registry._TABLE_MEMO.update(saved)
+
+
+def test_jobspec_extract_ranks_without_a_global_sort(spark, sf_smoke, tmp_path):
+    """jobspec_extract runs its five specs as one mode-tagged union and
+    takes each mode's first ids from a per-mode row_number() <= 3:
+    Spark plans a partial WindowGroupLimit and no range-partitioned
+    (global sort) exchange, and a pass takes at most 6 jobs. On an
+    events table where one mode (explicit_where) matches no row, that
+    mode still reports 0, 0, '' and the result equals the DuckDB
+    oracle."""
+    import os
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from tests.oracle_harness import TABLES, compare
+
+    for t in TABLES:
+        if t != "events":
+            os.symlink(f"{sf_smoke}/{t}.parquet", tmp_path / f"{t}.parquet")
+    ev = pq.read_table(f"{sf_smoke}/events.parquet")
+    no_error = pc.if_else(pc.equal(ev["event_type"], "error"), "warn", ev["event_type"])
+    pq.write_table(ev.set_column(ev.schema.get_field_index("event_type"), "event_type", no_error),
+                   tmp_path / "events.parquet")
+
+    spec = QUERIES["jobspec_extract"]
+    df = spec.fn(spark, str(tmp_path))
+    plan = plan_of(df, "simple")
+    assert any("WindowGroupLimit" in l and "Partial" in l for l in plan.splitlines()), plan
+    assert "rangepartitioning" not in plan.lower()
+    rows = {r["mode"]: r for r in df.collect()}
+    assert (rows["explicit_where"]["n_rows"], rows["explicit_where"]["n_ids"],
+            rows["explicit_where"]["first_ids"]) == (0, 0, "")
+    ok, msg = compare(df, spec.oracle, str(tmp_path))
+    assert ok, msg
+    jobs = _job_count(spark, "jobspec_extract",
+                      lambda: spec.fn(spark, str(tmp_path)).write.format("noop").mode("overwrite").save())
+    assert jobs <= 6, jobs
+
+
+def test_crash_queries_leave_no_cached_frame(spark, sf_smoke):
+    """The registered crash queries build their cleaning chain with
+    persist_intermediate=False: a second call recomputes its result
+    rather than reading a frame the first call cached, so two calls
+    leave the persisted-RDD count where it was."""
+    sc = spark.sparkContext
+    before = sc._jsc.getPersistentRDDs().size()
+    for name in ["crash_clean_chain", "crash_rule_eval", "crash_hit_run_rate_by_weather"]:
+        for _ in range(2):
+            QUERIES[name].fn(spark, sf_smoke).write.format("noop").mode("overwrite").save()
+        assert sc._jsc.getPersistentRDDs().size() == before, name
 
 
 def test_ivf_index_write_is_cluster_aligned(spark, sf_oracle, tmp_path):

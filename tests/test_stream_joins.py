@@ -26,8 +26,6 @@ _SCHEMA = "event_id bigint, ts timestamp, user_id bigint, event_type string, val
 @pytest.fixture(scope="module")
 def event_frame(spark, sf_smoke):
     ev = spark.read.parquet(f"{sf_smoke}/events.parquet")
-    if dict(ev.dtypes).get("ts") == "bigint":
-        ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
     return ev.select("event_id", "ts", "user_id", "event_type", "value").limit(800)
 
 

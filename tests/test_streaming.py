@@ -112,8 +112,6 @@ def test_watermark_monotonic(tmp_path):
 
 def test_windowed_counts_stream_matches_batch(spark, sf_smoke, tmp_path):
     ev = spark.read.parquet(f"{sf_smoke}/events.parquet")
-    if dict(ev.dtypes).get("ts") == "bigint":
-        ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
     ev = ev.select("event_id", "ts").limit(500)
 
     src_dir = str(tmp_path / "events_json")
