@@ -511,22 +511,14 @@ def minhash_near_duplicates(
     )
 
 
-def _banded_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int,
-    bands: int,
-    shingle_n: int,
-    seed: int,
-    hash_mode: str,
-    parts: int,
-) -> DataFrame:
+def _banded_signatures(df: DataFrame, id_col: str, text_col: str, p: dict) -> DataFrame:
     """(doc, signature, band, bucket, part) — the banded MinHash frame
-    shared by the at-rest signature write and the incoming-batch probe.
+    under the table's params ``p`` (``_params``), shared by the at-rest
+    signature write, the append and the incoming-batch probe.
     ``part`` = pmod(xxhash64(band, bucket), parts): the hive partition
     key that lets a batch prune the persisted table to only the
     partitions its own buckets hash into."""
+    num_hashes, bands = p["num_hashes"], p["bands"]
     if num_hashes % bands != 0:
         raise ValueError(
             f"num_hashes ({num_hashes}) must be divisible by bands ({bands}); "
@@ -534,7 +526,7 @@ def _banded_signatures(
         )
     rows_per_band = num_hashes // bands
     sigs = minhash_signatures(
-        df, id_col, text_col, num_hashes, shingle_n, seed, hash_mode
+        df, id_col, text_col, num_hashes, p["shingle_n"], p["seed"], p["hash_mode"]
     )
     return (
         sigs.select(
@@ -542,7 +534,7 @@ def _banded_signatures(
         )
         .select("doc", "signature", "bb.band", "bb.bucket")
         .withColumn(
-            "part", F.pmod(F.xxhash64("band", "bucket"), F.lit(parts)).cast("int")
+            "part", F.pmod(F.xxhash64("band", "bucket"), F.lit(p["parts"])).cast("int")
         )
     )
 
@@ -589,27 +581,18 @@ def write_minhash_signatures(
     table is written once and probed per batch."""
     import json
 
-    banded = _banded_signatures(
-        df, id_col, text_col, num_hashes, bands, shingle_n, seed, hash_mode, parts
-    )
-    _write_banded(banded, path, files_per_part, mode="overwrite")
+    p = {
+        "num_hashes": num_hashes,
+        "bands": bands,
+        "shingle_n": shingle_n,
+        "seed": seed,
+        "hash_mode": hash_mode,
+        "parts": parts,
+        "files_per_part": files_per_part,
+    }
+    _write_banded(_banded_signatures(df, id_col, text_col, p), path, files_per_part)
     df.sparkSession.createDataFrame(
-        [
-            (
-                json.dumps(
-                    {
-                        "num_hashes": num_hashes,
-                        "bands": bands,
-                        "shingle_n": shingle_n,
-                        "seed": seed,
-                        "hash_mode": hash_mode,
-                        "parts": parts,
-                        "files_per_part": files_per_part,
-                    }
-                ),
-            )
-        ],
-        "params_json string",
+        [(json.dumps(p),)], "params_json string"
     ).coalesce(1).write.mode("overwrite").json(f"{path}/_params")
 
 
@@ -652,19 +635,27 @@ def _fingerprint_params(spark, path: str) -> dict:
 def _fingerprint_rows(
     batch: DataFrame, id_col: str, text_col: str, parts: int, files_per_part: int
 ) -> DataFrame:
-    """(doc, fingerprint, part) rows in the table's layout — part-
-    aligned repartition + within-partition sort, shared by the initial
-    write, the plain append, and the staged (transactional) append."""
+    """(doc, fingerprint, part) rows in the table's layout — the one
+    row writer of the family: the initial write, the append and the
+    ingest round's stage all write what it returns."""
     fps = batch.select(
         F.col(id_col).alias("doc"),
         TX.fingerprint(F.col(text_col)).alias("fingerprint"),
     ).withColumn("part", F.pmod(F.xxhash64("fingerprint"), F.lit(parts)).cast("int"))
+    return _part_aligned(fps, files_per_part, "fingerprint")
+
+
+def _part_aligned(rows: DataFrame, files_per_part: int, *sort_cols: str) -> DataFrame:
+    """Repartition on ``part`` (+ a doc-hash salt when ``files_per_part``
+    > 1) and sort within partitions — the file-count discipline of all
+    three signature tables: each write adds at most ``files_per_part``
+    files per touched partition (without it, tasks × parts files)."""
     if files_per_part > 1:
         salt = F.pmod(F.xxhash64("doc"), F.lit(files_per_part))
-        fps = fps.repartition(F.col("part"), salt)
+        rows = rows.repartition(F.col("part"), salt)
     else:
-        fps = fps.repartition(F.col("part"))
-    return fps.sortWithinPartitions("part", "fingerprint")
+        rows = rows.repartition(F.col("part"))
+    return rows.sortWithinPartitions("part", *sort_cols)
 
 
 def append_fingerprints(
@@ -681,33 +672,21 @@ def append_fingerprints(
     caller.
 
     ``txn``: an idempotency id for at-least-once callers (streaming
-    drains) — the same staged-move ledger protocol (sources/txn.py) as
-    the MinHash and ANN appends, closing the replay-duplication hazard
-    for this family too (txn.py's "every at-rest table" contract).
-    Without one, a plain append-mode write (the batch caller's
-    contract: don't hand the same batch in twice). For the full
-    probe-before-append replay safety use
+    drains), keying the staged-move ledger (sources/txn.py) every
+    append runs. For the full probe-before-append replay safety use
     :func:`fingerprint_ingest_round` with ``txn``."""
-    spark = batch.sparkSession
-    p = _fingerprint_params(spark, path)
+    from ..sources.txn import staged_append
+
+    p = _fingerprint_params(batch.sparkSession, path)
     fps = _fingerprint_rows(
         batch, id_col, text_col, p["parts"],
         p["files_per_part"] if files_per_part is None else files_per_part,
     )
-    root = path.rstrip("/")
-    if txn is None:
-        fps.write.partitionBy("part").mode("append").parquet(f"{root}/fingerprints")
-        return
-    from ..sources import txn as TXN
-
-    pre = TXN.txn_file_prefix(txn)
-    TXN.idempotent_staged_append(
-        root,
-        txn,
+    staged_append(
+        path, txn,
         lambda stage: fps.write.partitionBy("part")
         .mode("overwrite")
         .parquet(f"{stage}/fingerprints"),
-        lambda rel: f"{root}/{rel.rsplit('/', 1)[0]}/{pre}{rel.rsplit('/', 1)[1]}",
     )
 
 
@@ -759,23 +738,16 @@ def dedup_exact_against(
     return bf.join(F.broadcast(hits), "_fp", "left_anti").drop("_fp", "part")
 
 
-def _write_banded(banded: DataFrame, path: str, files_per_part: int, mode: str) -> None:
-    """bucket_size window + part-aligned repartition + partitioned
-    write — shared by the initial write and the per-batch append."""
+def _write_banded(banded: DataFrame, path: str, files_per_part: int) -> None:
+    """bucket_size window + part-aligned partitioned write of
+    ``{path}/banded`` — the one row writer of the family: the initial
+    write, the append and the ingest round's stage all call it."""
     banded = banded.withColumn(
         "bucket_size", F.count(F.lit(1)).over(Window.partitionBy("band", "bucket"))
     )
-    if files_per_part > 1:
-        salt = F.pmod(F.xxhash64("doc"), F.lit(files_per_part))
-        banded = banded.repartition(F.col("part"), salt)
-    else:
-        banded = banded.repartition(F.col("part"))
-    (
-        banded.sortWithinPartitions("part", "band", "bucket")
-        .write.partitionBy("part")
-        .mode(mode)
-        .parquet(f"{path}/banded")
-    )
+    _part_aligned(banded, files_per_part, "band", "bucket").write.partitionBy(
+        "part"
+    ).mode("overwrite").parquet(f"{path}/banded")
 
 
 def read_minhash_params(spark, path: str) -> dict:
@@ -803,16 +775,16 @@ def append_minhash_signatures(
     row-group stats): the probe-side hot-bucket cap therefore bounds
     each segment's contribution independently — a bucket that only
     becomes hot ACROSS segments is not dropped (the conservative
-    direction: extra candidates cost time, never recall)."""
-    spark = batch.sparkSession
-    p = read_minhash_params(spark, path)
+    direction: extra candidates cost time, never recall). The append
+    runs the staged-move ledger (sources/txn.py) under an anonymous id;
+    streaming callers use :func:`minhash_ingest_round` with ``txn``."""
+    from ..sources.txn import staged_append
+
+    p = read_minhash_params(batch.sparkSession, path)
     if files_per_part is None:
         files_per_part = p.get("files_per_part", 1)
-    banded = _banded_signatures(
-        batch, id_col, text_col, p["num_hashes"], p["bands"], p["shingle_n"],
-        p["seed"], p["hash_mode"], p["parts"],
-    )
-    _write_banded(banded, path, files_per_part, mode="append")
+    banded = _banded_signatures(batch, id_col, text_col, p)
+    staged_append(path, None, lambda stage: _write_banded(banded, stage, files_per_part))
 
 
 def near_duplicates_against(
@@ -851,10 +823,7 @@ def near_duplicates_against(
     spark = batch.sparkSession
     ensure_recovered(f"{path}/banded")
     p = read_minhash_params(spark, path)
-    b = _banded_signatures(
-        batch, id_col, text_col, p["num_hashes"], p["bands"], p["shingle_n"],
-        p["seed"], p["hash_mode"], p["parts"],
-    )
+    b = _banded_signatures(batch, id_col, text_col, p)
     # bounded collect: at most `parts` distinct values by construction
     mods = sorted(r.part for r in b.select("part").distinct().collect())
     corpus = spark.read.parquet(f"{path}/banded").filter(F.col("part").isin(mods))
@@ -1019,44 +988,18 @@ def write_simhash_index(
 
     if max_distance < 1:
         raise ValueError(f"max_distance must be >= 1, got {max_distance}")
-    segs = _simhash_segments(max_distance, bits)
-    fp = simhash(df, id_col, text_col, bits, hash_mode)
-    exploded = (
-        fp.select("doc", "simhash", F.explode(segs).alias("sv"))
-        .select("doc", "simhash", "sv.seg", "sv.val")
-        .withColumn(
-            "part", F.pmod(F.xxhash64("seg", "val"), F.lit(parts)).cast("int")
-        )
-        .withColumn(
-            "bucket_size", F.count(F.lit(1)).over(Window.partitionBy("seg", "val"))
-        )
-    )
-    if files_per_part > 1:
-        salt = F.pmod(F.xxhash64("doc"), F.lit(files_per_part))
-        exploded = exploded.repartition(F.col("part"), salt)
-    else:
-        exploded = exploded.repartition(F.col("part"))
-    (
-        exploded.sortWithinPartitions("part", "seg", "val")
-        .write.partitionBy("part")
-        .mode("overwrite")
-        .parquet(f"{path}/segments")
-    )
+    p = {
+        "bits": bits,
+        "max_distance": max_distance,
+        "hash_mode": hash_mode,
+        "parts": parts,
+        "files_per_part": files_per_part,
+    }
+    _simhash_segment_rows(
+        df, id_col, text_col, p, files_per_part
+    ).write.partitionBy("part").mode("overwrite").parquet(f"{path}/segments")
     df.sparkSession.createDataFrame(
-        [
-            (
-                json.dumps(
-                    {
-                        "bits": bits,
-                        "max_distance": max_distance,
-                        "hash_mode": hash_mode,
-                        "parts": parts,
-                        "files_per_part": files_per_part,
-                    }
-                ),
-            )
-        ],
-        "params_json string",
+        [(json.dumps(p),)], "params_json string"
     ).coalesce(1).write.mode("overwrite").json(f"{path}/_params")
 
 
@@ -1143,8 +1086,9 @@ def _simhash_segment_rows(
 ) -> DataFrame:
     """(doc, simhash, seg, val, bucket_size, part) rows in the index's
     layout under its pinned params — per-write-segment bucket_size,
-    part-aligned repartition, within-partition sort; shared by the
-    plain and staged (transactional) appends."""
+    part-aligned repartition, within-partition sort. The one row writer
+    of the family: the initial write, the append and the ingest round's
+    stage all write what it returns."""
     segs = _simhash_segments(p["max_distance"], p["bits"])
     fp = simhash(batch, id_col, text_col, p["bits"], p["hash_mode"])
     exploded = (
@@ -1157,12 +1101,7 @@ def _simhash_segment_rows(
             "bucket_size", F.count(F.lit(1)).over(Window.partitionBy("seg", "val"))
         )
     )
-    if files_per_part > 1:
-        salt = F.pmod(F.xxhash64("doc"), F.lit(files_per_part))
-        exploded = exploded.repartition(F.col("part"), salt)
-    else:
-        exploded = exploded.repartition(F.col("part"))
-    return exploded.sortWithinPartitions("part", "seg", "val")
+    return _part_aligned(exploded, files_per_part, "seg", "val")
 
 
 def append_simhash_index(
@@ -1180,29 +1119,20 @@ def append_simhash_index(
     ``files_per_part`` defaults to the index's own pinned value.
 
     ``txn``: an idempotency id for at-least-once callers (streaming
-    drains) — the same staged-move ledger protocol (sources/txn.py) as
-    the MinHash and ANN appends. Without one, a plain append-mode
-    write. For the full probe-before-append replay safety use
+    drains), keying the staged-move ledger (sources/txn.py) every
+    append runs. For the full probe-before-append replay safety use
     :func:`simhash_ingest_round` with ``txn``."""
-    spark = batch.sparkSession
-    p = read_simhash_params(spark, path)
+    from ..sources.txn import staged_append
+
+    p = read_simhash_params(batch.sparkSession, path)
     if files_per_part is None:
         files_per_part = p.get("files_per_part", 1)
     exploded = _simhash_segment_rows(batch, id_col, text_col, p, files_per_part)
-    root = path.rstrip("/")
-    if txn is None:
-        exploded.write.partitionBy("part").mode("append").parquet(f"{root}/segments")
-        return
-    from ..sources import txn as TXN
-
-    pre = TXN.txn_file_prefix(txn)
-    TXN.idempotent_staged_append(
-        root,
-        txn,
+    staged_append(
+        path, txn,
         lambda stage: exploded.write.partitionBy("part")
         .mode("overwrite")
         .parquet(f"{stage}/segments"),
-        lambda rel: f"{root}/{rel.rsplit('/', 1)[0]}/{pre}{rel.rsplit('/', 1)[1]}",
     )
 
 
@@ -1506,11 +1436,9 @@ def minhash_ingest_round(
         return vs_corpus, within, lambda: None
 
     def write_rows(survivors: DataFrame, stage: str) -> None:
-        banded = _banded_signatures(
-            survivors, id_col, text_col, p["num_hashes"], p["bands"],
-            p["shingle_n"], p["seed"], p["hash_mode"], p["parts"],
+        _write_banded(
+            _banded_signatures(survivors, id_col, text_col, p), stage, files_per_part
         )
-        _write_banded(banded, stage, files_per_part, mode="overwrite")
 
     def fold(edges: DataFrame) -> dict:
         from ..operators.graph import extend_components_at_rest
@@ -1547,12 +1475,8 @@ def _maybe_compact_subdir(
     from ..sources import fsutil as FS
     from ..sources.compact import compact_partitioned
 
-    per_part: dict[str, int] = {}
-    for f in FS.glob_paths(f"{root.rstrip('/')}/{sub}/part=*/*.parquet"):
-        d = f.rsplit("/", 2)[1]
-        per_part[d] = per_part.get(d, 0) + 1
-    worst = max(per_part.values(), default=0)
-    if worst > compact_trigger * files_per_part:
+    per_part = FS.files_per_dir(f"{root.rstrip('/')}/{sub}/part=*/*.parquet")
+    if max(per_part.values(), default=0) > compact_trigger * files_per_part:
         return compact_partitioned(spark, f"{root.rstrip('/')}/{sub}")[
             "compacted"
         ]
@@ -1637,84 +1561,61 @@ def _txn_ingest_round(
     stats. ``after_commit()`` returns the compaction count; it is
     skipped entirely on an already-committed replay.
 
-    ``txn=None`` runs the same protocol under a throwaway id: nothing
-    can replay a generated id, so its ledger marker and round record
-    are dropped once the report is built, and a round that raises
-    drops its staging — the table holds only data files afterwards,
-    and a failed call never trips the forget paths' in-flight guard."""
-    import uuid
-
+    ``txn=None`` runs the same protocol under a throwaway id
+    (``sources.txn.ledger_txn``), whose ledger marker and round record
+    are dropped once the report is built."""
     from ..sources import fsutil as FS
     from ..sources import txn as TXN
 
-    if txn is None:
-        anon = f"anon-{uuid.uuid4()}"
-        try:
-            rep = _txn_ingest_round(
-                batch, root, id_col, anon, write_stage, stats_extract, after_commit
-            )
-        finally:
-            for entry in (*TXN.txn_paths(root, anon), *_round_record_paths(root, anon)):
-                FS.delete(entry)
-        rep["txn"] = None
-        return rep
-
     secs, lap = _lap_timer()
     spark = batch.sparkSession
-    rounds_dir, stats_dir = _round_record_paths(root, txn)
     state: dict = {"survivors": None}
+    with TXN.ledger_txn(root, txn, lambda key: _round_record_paths(root, key)) as key:
+        rounds_dir, stats_dir = _round_record_paths(root, key)
 
-    def _report(action: str, compacted: int) -> dict:
-        st = spark.read.parquet(stats_dir).collect()[0]
-        if state["survivors"] is not None:
-            # fresh path: the checkpointed frame write_stage computed —
-            # no need to re-read the record it just staged
-            survivors = state["survivors"]
-            n_surv = int(st.n_survivors)
-        else:
-            survivors, n_surv = _reconstruct_round_survivors(
-                spark, batch, id_col, rounds_dir
-            )
-        rep = {"action": action, "txn": txn, "survivors": survivors}
-        for key, extract in stats_extract.items():
-            rep[key] = extract(st)
-        rep["n_survivors"] = n_surv
-        rep["compacted"] = compacted
-        rep["secs"] = dict(secs)
-        return rep
+        def _report(action: str, compacted: int) -> dict:
+            st = spark.read.parquet(stats_dir).collect()[0]
+            if state["survivors"] is not None:
+                # fresh path: the checkpointed frame write_stage computed
+                # — no need to re-read the record it just staged
+                survivors = state["survivors"]
+                n_surv = int(st.n_survivors)
+            else:
+                survivors, n_surv = _reconstruct_round_survivors(
+                    spark, batch, id_col, rounds_dir
+                )
+            rep = {"action": action, "txn": txn, "survivors": survivors}
+            for k, extract in stats_extract.items():
+                rep[k] = extract(st)
+            rep["n_survivors"] = n_surv
+            rep["compacted"] = compacted
+            rep["secs"] = dict(secs)
+            return rep
 
-    if TXN.txn_committed(root, txn):
-        # a crash between the marker write and the staging cleanup
-        # (protocol step 4) leaves an orphaned _ingest_tmp/{txn} dir;
-        # idempotent_staged_append's own short-circuit would clear it,
-        # but this return runs first — clean it here too, or it
-        # permanently trips the forget paths' quiescence guards on a
-        # table that is actually quiescent
-        FS.delete(TXN.txn_paths(root, txn)[1])
-        return _report("skipped_replay", 0)
+        if TXN.txn_committed(root, key):
+            # a crash between the marker write and the staging cleanup
+            # (protocol step 4) leaves an orphaned _ingest_tmp/{txn}
+            # dir; staged_append's own short-circuit would clear it, but
+            # this return runs first — clean it here too, or it
+            # permanently trips the forget paths' quiescence guards on a
+            # table that is actually quiescent
+            FS.delete(TXN.txn_paths(root, key)[1])
+            return _report("skipped_replay", 0)
 
-    pre = TXN.txn_file_prefix(txn)
-
-    def dest_for(rel: str) -> str:
-        top, rest = rel.split("/", 1)
-        if top == "survivors":
-            return f"{rounds_dir}/{rest}"
-        if top == "round_stats":
-            return f"{stats_dir}/{rest}"
-        d, f = rel.rsplit("/", 1)
-        return f"{root}/{d}/{pre}{f}"
-
-    # a frozen manifest before the run means attempt N-1 crashed
-    # mid-move: the protocol completes those moves without re-staging
-    # (and without re-probing) — report that distinctly
-    had_frozen_stage = FS.exists(f"{TXN.txn_paths(root, txn)[1]}/_manifest.json")
-    TXN.idempotent_staged_append(
-        root, txn, lambda stage: write_stage(stage, state, lap), dest_for
-    )
-    lap("append")
-    compacted = after_commit()
-    lap("compact")
-    return _report("completed_replay" if had_frozen_stage else "appended", compacted)
+        # a frozen manifest before the run means attempt N-1 crashed
+        # mid-move: the protocol completes those moves without
+        # re-staging (and without re-probing) — report that distinctly
+        had_frozen_stage = FS.exists(f"{TXN.txn_paths(root, key)[1]}/_manifest.json")
+        TXN.staged_append(
+            root, key, lambda stage: write_stage(stage, state, lap),
+            routes={"survivors": rounds_dir, "round_stats": stats_dir},
+        )
+        lap("append")
+        compacted = after_commit()
+        lap("compact")
+        return _report(
+            "completed_replay" if had_frozen_stage else "appended", compacted
+        )
 
 
 def _edge_round_stage(batch: DataFrame, id_col: str, probe, write_rows, fold=None):

@@ -446,6 +446,18 @@ def _cluster_aligned(enc: DataFrame, files_per_cluster: int) -> DataFrame:
     return enc.repartition(F.col("_cluster"))
 
 
+def _write_clusters(enc: DataFrame, out: str, files_per_cluster: int) -> None:
+    """The one writer of the cluster-partitioned kinds — build, append,
+    ingest round and compaction all write through it: cluster-aligned
+    ``partitionBy("_cluster")``, and IVF-PQ rows (those carrying
+    ``codes``) id-sorted within files so the exact rerank's IN filter
+    skips row groups."""
+    enc = _cluster_aligned(enc, files_per_cluster)
+    if "codes" in enc.columns:
+        enc = enc.sortWithinPartitions("_cluster", "neighbor_id")
+    enc.write.partitionBy("_cluster").mode("overwrite").parquet(out)
+
+
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -658,10 +670,11 @@ def write_ivf_index(
     else:
         n_clusters = len(centroids)
     if assignment == "auto":
-        assignment = "batched" if n_clusters >= _BATCHED_ASSIGN_MIN_K else "hof"
-    assigned = _assigned_frame(corpus, centroids, id_col, vec_col, assignment)
-    assigned = _cluster_aligned(assigned, files_per_cluster)
-    assigned.write.partitionBy("_cluster").mode("overwrite").parquet(path)
+        assignment = _assign_regime(centroids)
+    _write_clusters(
+        _assigned_frame(corpus, centroids, id_col, vec_col, assignment),
+        path, files_per_cluster,
+    )
     cents = [[float(x) for x in c] for c in centroids]
     _write_centroids_meta(corpus.sparkSession, path, cents, drift)
     return cents
@@ -676,18 +689,65 @@ def read_ivf_centroids(spark, path: str) -> list[list[float]]:
 
 
 # --------------------------------------------------------------------------
-# Idempotent (transactional) appends — the streaming-replay ledger.
-# The staged-move protocol lives in sources/txn.py (r12: it is shared
-# with the dedup signature tables' streaming ingest); the underscored
-# aliases keep this module's historical surface.
+# Appends — one body for the three kinds, through the staged-move ledger
+# (sources/txn.py, shared with the dedup signature tables).
 # --------------------------------------------------------------------------
 
 from ..sources.txn import (  # noqa: E402 — grouped with the family it guards
-    idempotent_staged_append as _idempotent_staged_append,
+    staged_append,
     txn_committed,
-    txn_file_prefix as _txn_file_prefix,
     txn_paths as _txn_paths,
 )
+
+
+def _write_index_rows(
+    rows: DataFrame, out: str, kind: str, quantizers, id_col: str, vec_col: str,
+    files_per_cluster: int,
+) -> None:
+    """Encode ``rows`` under an index's SAVED ``quantizers``
+    (:func:`_read_quantizers` — never retrained; the assignment regime
+    and encode mode come from the index, so the rows land exactly where
+    a same-quantizer rebuild puts them) and write them in the kind's
+    layout under ``out`` — the append's and the ingest round's stage."""
+    centroids, codebook, encode = quantizers
+    if kind == "pq":
+        _write_pq_tables(_pq_corpus_frames(rows, id_col, vec_col, codebook), out)
+        return
+    regime = _assign_regime(centroids, codebook, encode)
+    if kind == "ivf":
+        enc = _assigned_frame(rows, centroids, id_col, vec_col, regime)
+    else:
+        enc = _ivfpq_encoded(rows, centroids, codebook, id_col, vec_col, regime, encode)
+        out = f"{out}/data"
+    _write_clusters(enc, out, files_per_cluster)
+
+
+def _append_to_index(
+    batch: DataFrame, path: str, id_col: str, vec_col: str,
+    files_per_cluster: int, txn: str | None,
+):
+    """The one append body of the three index kinds: read the saved
+    quantizers, then stage the encoded batch through the ledger
+    (``txn`` keys it; ``None`` runs it under an anonymous id). Returns
+    the (centroids, codebook, encode) the batch was encoded with."""
+    root = path.rstrip("/")
+    kind, data_dir, _ = _index_layout(root)
+    quantizers = _read_quantizers(batch.sparkSession, root, kind)
+    if kind != "pq":
+        # a compaction that crashed mid-swap parks whole clusters in
+        # _compact_old; an append that recreated such a leaf first
+        # would make the next recovery discard the parked rows
+        recover_index_compaction(data_dir)
+    staged_append(
+        root, txn,
+        lambda stage: _write_index_rows(
+            batch, stage, kind, quantizers, id_col, vec_col, files_per_cluster
+        ),
+        # PQ moves vectors/ before codes/ (see append_to_pq_index); the
+        # cluster kinds keep plain path order
+        order_key=lambda rel: (not rel.startswith("vectors/"), rel),
+    )
+    return quantizers
 
 
 def append_to_ivf_index(
@@ -695,7 +755,6 @@ def append_to_ivf_index(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assignment: str = "auto",
     files_per_cluster: int = 1,
     txn: str | None = None,
 ) -> list[list[float]]:
@@ -706,14 +765,16 @@ def append_to_ivf_index(
     O(batch).
 
     The batch is assigned with the SAVED quantizer
-    (``read_ivf_centroids``) — never retrained — so appended rows land
-    in exactly the clusters a same-quantizer rebuild would put them in:
-    post-append probe results are GATED equal to
+    (``read_ivf_centroids``) — never retrained — under the index's own
+    assignment regime (:func:`_assign_regime`, the one probes
+    use), so appended rows land in exactly the clusters a
+    same-quantizer rebuild would put them in: post-append probe
+    results are GATED equal to
     ``write_ivf_index(full_corpus, centroids=saved)`` (test_plans).
-    The write is the same cluster-aligned ``partitionBy("_cluster")``
-    repartition as the build, in ``append`` mode: each append adds at
-    most ``files_per_cluster`` files per TOUCHED cluster (after A
-    appends a cluster holds ≤ (1+A)·files_per_cluster files —
+    The write is the build's cluster-aligned ``partitionBy("_cluster")``
+    (:func:`_write_clusters`): each append adds at most
+    ``files_per_cluster`` files per TOUCHED cluster (after A appends a
+    cluster holds ≤ (1+A)·files_per_cluster files —
     :func:`compact_index` rewrites just the bloated clusters, no
     quantizer math, probe results unchanged). Duplicate ids are the
     caller's contract, as in any append-only table.
@@ -730,30 +791,9 @@ def append_to_ivf_index(
     its value at build time.
 
     ``txn``: an idempotency id for at-least-once callers (the
-    streaming drains) — see the staged-move protocol above. Without
-    one, the append is a plain append-mode write (the batch caller's
-    contract: don't hand the same batch in twice)."""
-    spark = batch.sparkSession
-    centroids = read_ivf_centroids(spark, path)
-    if assignment == "auto":
-        assignment = (
-            "batched" if len(centroids) >= _BATCHED_ASSIGN_MIN_K else "hof"
-        )
-    assigned = _assigned_frame(batch, centroids, id_col, vec_col, assignment)
-    assigned = _cluster_aligned(assigned, files_per_cluster)
-    if txn is None:
-        assigned.write.partitionBy("_cluster").mode("append").parquet(path)
-        return centroids
-    pre = _txn_file_prefix(txn)
-    _idempotent_staged_append(
-        path,
-        txn,
-        lambda stage: assigned.write.partitionBy("_cluster")
-        .mode("overwrite")
-        .parquet(stage),
-        lambda rel: f"{path}/{rel.rsplit('/', 1)[0]}/{pre}{rel.rsplit('/', 1)[1]}",
-    )
-    return centroids
+    streaming drains), keying the staged-move ledger every append runs
+    (sources/txn.py). Returns the centroids."""
+    return _append_to_index(batch, path, id_col, vec_col, files_per_cluster, txn)[0]
 
 
 def ivf_topk_indexed(
@@ -1216,19 +1256,25 @@ def write_pq_index(
 
     if codebook is None:
         codebook = _pq_train_validated(corpus, vec_col, dim, m, ks, seed, train_sample)
-    c = _pq_corpus_frames(corpus, id_col, vec_col, codebook)
-    c.select("neighbor_id", "codes").write.mode("overwrite").parquet(f"{path}/codes")
-    (
-        c.select("neighbor_id", "cvec", "cn")
-        .sortWithinPartitions("neighbor_id")
-        .write.mode("overwrite")
-        .parquet(f"{path}/vectors")
-    )
+    _write_pq_tables(_pq_corpus_frames(corpus, id_col, vec_col, codebook), path)
     corpus.sparkSession.createDataFrame(
         [(json.dumps([[[float(x) for x in cc] for cc in cs] for cs in codebook]),)],
         "codebook_json string",
     ).coalesce(1).write.mode("overwrite").json(f"{path}/_codebook")
     return codebook
+
+
+def _write_pq_tables(c: DataFrame, out: str) -> None:
+    """PQ's two-table writer — build and append both call it: the
+    id-sorted ``vectors`` table, then ``codes`` (the order
+    :func:`append_to_pq_index` explains)."""
+    (
+        c.select("neighbor_id", "cvec", "cn")
+        .sortWithinPartitions("neighbor_id")
+        .write.mode("overwrite")
+        .parquet(f"{out}/vectors")
+    )
+    c.select("neighbor_id", "codes").write.mode("overwrite").parquet(f"{out}/codes")
 
 
 def append_to_pq_index(
@@ -1250,49 +1296,34 @@ def append_to_pq_index(
     minus the assignment-skew surface (no coarse quantizer here) —
     only ADC error grows on out-of-distribution appends.
 
-    Write order is VECTORS first, deliberately: a failure between the
-    two appends then leaves vectors rows with no codes — invisible to
-    probes (the ADC pass drives candidate selection off ``codes``) and
-    repaired by re-running the append. The reverse order would leave
-    codes rows whose ids are absent from ``vectors``, and those ADC
-    candidates silently vanish at the rerank fetch while still
-    crowding real candidates out of the k·refine budget. Under a
-    ``txn`` id the same ordering holds inside the staged-move protocol
-    (manifest order sorts ``codes/`` after ``vectors/``). Returns the
-    codebook as read from the index."""
-    spark = batch.sparkSession
-    codebook = read_pq_codebook(spark, path)
-    c = _pq_corpus_frames(batch, id_col, vec_col, codebook)
-    vecs = c.select("neighbor_id", "cvec", "cn").sortWithinPartitions("neighbor_id")
-    codes = c.select("neighbor_id", "codes")
-    if txn is None:
-        vecs.write.mode("append").parquet(f"{path}/vectors")
-        codes.write.mode("append").parquet(f"{path}/codes")
-        return codebook
-
-    def _stage(stage: str) -> None:
-        vecs.write.mode("overwrite").parquet(f"{stage}/vectors")
-        codes.write.mode("overwrite").parquet(f"{stage}/codes")
-
-    pre = _txn_file_prefix(txn)
-    _idempotent_staged_append(
-        path,
-        txn,
-        _stage,
-        lambda rel: f"{path}/{rel.rsplit('/', 1)[0]}/{pre}{rel.rsplit('/', 1)[1]}",
-        order_key=lambda rel: (0 if rel.startswith("vectors/") else 1, rel),
-    )
-    return codebook
+    Move order is VECTORS first, deliberately: a failure between the
+    two tables' moves then leaves vectors rows with no codes —
+    invisible to probes (the ADC pass drives candidate selection off
+    ``codes``) and repaired by re-running the append. The reverse
+    order would leave codes rows whose ids are absent from
+    ``vectors``, and those ADC candidates silently vanish at the
+    rerank fetch while still crowding real candidates out of the
+    k·refine budget. ``txn`` keys the staged-move ledger as in
+    ``append_to_ivf_index``. Returns the codebook as read from the
+    index."""
+    return _append_to_index(batch, path, id_col, vec_col, 1, txn)[1]
 
 
 def read_pq_codebook(spark, path: str):
     """Codebook persisted by ``write_pq_index`` (one tiny JSON row — a
     driver-side read by design, like the quantizer sample)."""
+    return _read_codebook(spark, path)[0]
+
+
+def _read_codebook(spark, path: str) -> tuple:
+    """(codebook, encode mode) from ONE read of ``{path}/_codebook``;
+    the mode is 'direct' for PQ and pre-r11 IVF-PQ indexes, which
+    carry no mode field."""
     import json
 
-    return json.loads(
-        spark.read.json(f"{path}/_codebook").collect()[0].codebook_json
-    )
+    row = spark.read.json(f"{path}/_codebook").collect()[0]
+    encode = row["encode"] if "encode" in row.__fields__ else "direct"
+    return json.loads(row.codebook_json), encode
 
 
 def pq_topk_indexed(
@@ -1504,13 +1535,32 @@ def read_drift_baseline(spark, path: str) -> dict | None:
     return json.loads(row["drift_json"])
 
 
-def _index_layout(path: str) -> tuple[bool, bool]:
-    """(has_centroids, has_codebook) — layout sniffing through the
-    Hadoop FileSystem API, so a pure-IVF or pure-PQ index is
-    classified the same on ``file://``, ``hdfs://`` and ``s3a://``
+def _index_layout(path: str) -> tuple[str, str, str]:
+    """(kind, data dir, data-file glob) of the at-rest ANN index at
+    ``path`` — the one place the kind is derived. Layout sniffing goes
+    through the Hadoop FileSystem API, so a pure-IVF or pure-PQ index
+    is classified the same on ``file://``, ``hdfs://`` and ``s3a://``
     (the r11-advice trap: assuming both sidecars exist whenever the
-    path isn't local misread every object-store index as ivfpq)."""
-    return FS.is_dir(f"{path}/_centroids"), FS.is_dir(f"{path}/_codebook")
+    path isn't local misread every object-store index as ivfpq). IVF
+    keeps its cluster dirs at the root and IVF-PQ under ``data/``; a
+    flat PQ index (no ``_centroids``) has its rows in ``codes`` (the
+    table probes scan) and its files in ``codes`` and ``vectors``."""
+    root = path.rstrip("/")
+    if not FS.is_dir(f"{root}/_centroids"):
+        return "pq", f"{root}/codes", f"{root}/{{codes,vectors}}/*.parquet"
+    if FS.is_dir(f"{root}/_codebook"):
+        kind, data_dir = "ivfpq", f"{root}/data"
+    else:
+        kind, data_dir = "ivf", root
+    return kind, data_dir, f"{data_dir}/_cluster=*/*.parquet"
+
+
+def _read_quantizers(spark, path: str, kind: str) -> tuple:
+    """(centroids, codebook, encode mode) as the index persisted them,
+    one sidecar read each — None where ``kind`` has no such part."""
+    centroids = read_ivf_centroids(spark, path) if kind != "pq" else None
+    codebook, encode = _read_codebook(spark, path) if kind != "ivf" else (None, None)
+    return centroids, codebook, encode
 
 
 def describe_index(spark, path: str) -> dict:
@@ -1519,31 +1569,22 @@ def describe_index(spark, path: str) -> dict:
     ivfpq / pq by layout), quantizer shape, the persisted encode mode
     and drift baseline, and row/file counts from the data table
     (one count + one listing; no vector bytes read)."""
-    meta: dict = {"path": path}
-    has_centroids, has_codebook = _index_layout(path)
-    if has_centroids:
-        centroids = read_ivf_centroids(spark, path)
+    kind, data_dir, file_glob = _index_layout(path)
+    meta: dict = {"path": path, "kind": kind}
+    centroids, codebook, encode = _read_quantizers(spark, path, kind)
+    if centroids is not None:
         meta.update(
             n_clusters=len(centroids),
             dim=len(centroids[0]),
             drift_baseline=read_drift_baseline(spark, path),
         )
-    if has_codebook:
-        codebook = read_pq_codebook(spark, path)
+    if codebook is not None:
         meta.update(
             m=len(codebook), ks=len(codebook[0]),
             sub_dim=len(codebook[0][0]),
         )
-    if has_centroids and has_codebook:
-        meta["kind"] = "ivfpq"
-        data_dir, file_glob = f"{path}/data", f"{path}/data/_cluster=*/*.parquet"
-        meta["encode"] = read_ivfpq_encode_mode(spark, path)
-    elif has_centroids:
-        meta["kind"] = "ivf"
-        data_dir, file_glob = path, f"{path}/_cluster=*/*.parquet"
-    else:
-        meta["kind"] = "pq"
-        data_dir, file_glob = f"{path}/codes", f"{path}/codes/*.parquet"
+    if kind == "ivfpq":
+        meta["encode"] = encode
     meta["n_rows"] = spark.read.parquet(data_dir).select("neighbor_id").count()
     meta["n_files"] = FS.count_glob(file_glob)
     return meta
@@ -1631,18 +1672,8 @@ def compact_index(
     before/after stats."""
     from ..sources.compact import compact_dir
 
-    def _cluster_file_counts(data_dir: str) -> dict[int, int]:
-        # ONE globStatus listing for the whole table (not dir_stats:
-        # the ivf table root also holds the _centroids sidecar, whose
-        # inner json files would skew the count)
-        counts: dict[int, int] = {}
-        for p in FS.glob_paths(f"{data_dir}/_cluster=*/*.parquet"):
-            c = int(p.rsplit("/", 2)[1].split("=", 1)[1])
-            counts[c] = counts.get(c, 0) + 1
-        return counts
-
-    has_centroids, has_codebook = _index_layout(path)
-    if not has_centroids and has_codebook:
+    kind, data_dir, file_glob = _index_layout(path)
+    if kind == "pq":
         codes = compact_dir(spark, f"{path}/codes", target_bytes=target_bytes)
         vecs = compact_dir(
             spark,
@@ -1657,11 +1688,14 @@ def compact_index(
             "compacted": codes["compacted"] + vecs["compacted"],
         }
 
-    kind = "ivfpq" if has_codebook else "ivf"
-    data_dir = f"{path}/data" if kind == "ivfpq" else path
     recover_index_compaction(data_dir)
 
-    counts = _cluster_file_counts(data_dir)
+    # ONE listing over the data-file glob (not dir_stats: the ivf table
+    # root also holds the _centroids sidecar, whose inner json files
+    # would skew the count)
+    counts = {
+        int(d.split("=", 1)[1]): n for d, n in FS.files_per_dir(file_glob).items()
+    }
     files_before = sum(counts.values())
     bloated = sorted(c for c, n in counts.items() if n > files_per_cluster)
     stats = {
@@ -1677,11 +1711,10 @@ def compact_index(
     old_root = f"{data_dir}/_compact_old"
     for wave_at in range(0, len(bloated), _COMPACT_WAVE):
         wave = bloated[wave_at : wave_at + _COMPACT_WAVE]
-        out = spark.read.parquet(data_dir).filter(F.col("_cluster").isin(wave))
-        out = _cluster_aligned(out, files_per_cluster)
-        if kind == "ivfpq":
-            out = out.sortWithinPartitions("_cluster", "neighbor_id")
-        out.write.partitionBy("_cluster").mode("overwrite").parquet(tmp_root)
+        _write_clusters(
+            spark.read.parquet(data_dir).filter(F.col("_cluster").isin(wave)),
+            tmp_root, files_per_cluster,
+        )
         FS.mkdirs(old_root)
         for c in wave:
             leaf = f"{data_dir}/_cluster={c}"
@@ -1691,7 +1724,7 @@ def compact_index(
         FS.delete(tmp_root)
     return {
         **stats,
-        "files_after": sum(_cluster_file_counts(data_dir).values()),
+        "files_after": FS.count_glob(file_glob),
         "compacted": len(bloated),
     }
 
@@ -1764,12 +1797,8 @@ def maintain_index(
     if txn is not None and txn_committed(root, txn):
         return {"action": "skipped_replay", "txn": txn}
 
-    has_centroids, has_codebook = _index_layout(root)
-    kind = "ivfpq" if (has_centroids and has_codebook) else (
-        "ivf" if has_centroids else "pq"
-    )
-    vectors_dir = {"ivf": root, "ivfpq": f"{root}/data", "pq": f"{root}/vectors"}[kind]
-
+    kind, data_dir, file_glob = _index_layout(root)
+    has_centroids = kind != "pq"
     centroids = read_ivf_centroids(spark, path) if has_centroids else None
     baseline = read_drift_baseline(spark, path) if has_centroids else None
     if centroids is not None:
@@ -1793,19 +1822,18 @@ def maintain_index(
 
     if retrain == "auto" and ratio is not None and ratio > retrain_drift_ratio:
         corpus = (
-            spark.read.parquet(vectors_dir)
+            spark.read.parquet(data_dir)
             .select(F.col("neighbor_id").alias(id_col), F.col("cvec").alias(vec_col))
             .unionByName(batch.select(F.col(id_col), F.col(vec_col)))
         )
         tmp, old = _staging_paths(root)
         if kind == "ivfpq":
-            codebook = read_pq_codebook(spark, path)
+            codebook, encode = _read_codebook(spark, path)
             write_ivfpq_index(
                 corpus, tmp, id_col=id_col, vec_col=vec_col,
                 n_clusters=len(centroids), m=len(codebook), ks=len(codebook[0]),
                 seed=seed, train_sample=train_sample,
-                files_per_cluster=files_per_cluster,
-                encode=read_ivfpq_encode_mode(spark, path),
+                files_per_cluster=files_per_cluster, encode=encode,
             )
         else:
             write_ivf_index(
@@ -1826,41 +1854,15 @@ def maintain_index(
         FS.delete(old)
         report["action"] = "retrained"
     else:
-        if kind == "ivfpq":
-            append_to_ivfpq_index(
-                batch, path, id_col=id_col, vec_col=vec_col,
-                files_per_cluster=files_per_cluster, txn=txn,
-            )
-        elif kind == "ivf":
-            append_to_ivf_index(
-                batch, path, id_col=id_col, vec_col=vec_col,
-                files_per_cluster=files_per_cluster, txn=txn,
-            )
-        else:
-            append_to_pq_index(batch, path, id_col=id_col, vec_col=vec_col, txn=txn)
+        _append_to_index(batch, path, id_col, vec_col, files_per_cluster, txn)
         report["action"] = "appended"
-        if kind == "pq":
-            worst = max(
-                FS.count_glob(f"{root}/{t}/*.parquet") for t in ("codes", "vectors")
-            )
-            if worst > compact_trigger:
-                stats = compact_index(
-                    spark, path, files_per_cluster=files_per_cluster
-                )
-                report["compacted"] = stats["compacted"]
-        else:
-            # one trigger policy for the cluster-partitioned kinds,
-            # shared with the semantic ingest round
-            report["compacted"] = _maybe_compact_clusters(
-                spark, root, kind, files_per_cluster, compact_trigger
-            )
-    if kind == "pq":
-        report["files_after"] = FS.count_glob(f"{root}/codes/*.parquet") + FS.count_glob(
-            f"{root}/vectors/*.parquet"
+        # the trigger the semantic ingest round shares; PQ's plain
+        # tables compact to target bytes, so their bound is per table
+        report["compacted"] = _maybe_compact_index(
+            spark, root, file_glob, files_per_cluster,
+            compact_trigger * (files_per_cluster if kind != "pq" else 1),
         )
-    else:
-        data_dir = f"{root}/data" if kind == "ivfpq" else root
-        report["files_after"] = FS.count_glob(f"{data_dir}/_cluster=*/*.parquet")
+    report["files_after"] = FS.count_glob(file_glob)
     return report
 
 
@@ -1968,15 +1970,8 @@ def _ivfpq_encoded(
     maps. ``encode="residual"`` always runs batched (the residual
     subtraction is numpy arithmetic; a HOF form would embed the full
     centroid matrix twice)."""
-    n_clusters, ks = len(centroids), len(codebook[0])
-    if encode == "residual":
-        assignment = "batched"
-    elif assignment == "auto":
-        assignment = (
-            "batched"
-            if n_clusters >= _BATCHED_ASSIGN_MIN_K or ks >= _LLOYD_MATMUL_MIN_K
-            else "hof"
-        )
+    if encode == "residual" or assignment == "auto":
+        assignment = _assign_regime(centroids, codebook, encode)
     if assignment == "batched":
         return assign_and_encode_batched(
             corpus, centroids, codebook, id_col, vec_col, encode=encode
@@ -2091,15 +2086,11 @@ def write_ivfpq_index(
         else:
             codebook = pq_train(sample, dim=dim, m=m, ks=ks, seed=seed)
 
-    enc = _ivfpq_encoded(
-        corpus, centroids, codebook, id_col, vec_col, assignment, encode=encode
-    )
-    enc = _cluster_aligned(enc, files_per_cluster)
-    (
-        enc.sortWithinPartitions("_cluster", "neighbor_id")
-        .write.partitionBy("_cluster")
-        .mode("overwrite")
-        .parquet(f"{path}/data")
+    _write_clusters(
+        _ivfpq_encoded(
+            corpus, centroids, codebook, id_col, vec_col, assignment, encode=encode
+        ),
+        f"{path}/data", files_per_cluster,
     )
     spark = corpus.sparkSession
     cents = [[float(x) for x in c] for c in centroids]
@@ -2135,8 +2126,7 @@ def _residual_sample(sample, centroids):
 def read_ivfpq_encode_mode(spark, path: str) -> str:
     """The encode regime persisted by ``write_ivfpq_index`` ('direct'
     for pre-r11 indexes that carry no mode field)."""
-    row = spark.read.json(f"{path}/_codebook").collect()[0]
-    return row["encode"] if "encode" in row.__fields__ else "direct"
+    return _read_codebook(spark, path)[1]
 
 
 def assign_drift_stats(
@@ -2190,7 +2180,6 @@ def append_to_ivfpq_index(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assignment: str = "auto",
     files_per_cluster: int = 1,
     txn: str | None = None,
 ):
@@ -2198,14 +2187,15 @@ def append_to_ivfpq_index(
     ``write_ivfpq_index`` (VERDICT r10 item 2): the batch is assigned
     AND PQ-encoded in one pass with the SAVED quantizers
     (``read_ivf_centroids`` + ``read_pq_codebook``, never retrained),
-    then written cluster-aligned in ``append`` mode — post-append
-    probe results are GATED equal to
-    ``write_ivfpq_index(full_corpus, quantizers=saved)`` (test_plans
-    parity + the bench_io ``emb_ivfpq_append`` gate). Work is
-    O(batch); the existing cluster files are untouched (each append
+    under the index's own assignment regime and encode mode, then
+    written cluster-aligned — post-append probe results are GATED
+    equal to ``write_ivfpq_index(full_corpus, quantizers=saved)``
+    (test_plans parity + the bench_io ``emb_ivfpq_append`` gate). Work
+    is O(batch); the existing cluster files are untouched (each append
     adds ≤ ``files_per_cluster`` files per touched cluster —
     :func:`compact_index` rewrites just the bloated clusters, no
-    re-encode of the rest).
+    re-encode of the rest). ``txn`` keys the staged-move ledger as in
+    ``append_to_ivf_index``.
 
     Retrain-vs-append drift criterion: see ``append_to_ivf_index`` —
     identical, plus the PQ codebook adds a second drift surface (ADC
@@ -2214,30 +2204,7 @@ def append_to_ivfpq_index(
     ranked into the top k·refine).
 
     Returns (centroids, codebook) as read from the index."""
-    spark = batch.sparkSession
-    centroids = read_ivf_centroids(spark, path)
-    codebook = read_pq_codebook(spark, path)
-    # the encode regime comes from the INDEX, never the caller — an
-    # appended batch must be coded the way the at-rest codes were
-    enc = _ivfpq_encoded(
-        batch, centroids, codebook, id_col, vec_col, assignment,
-        encode=read_ivfpq_encode_mode(spark, path),
-    )
-    enc = _cluster_aligned(enc, files_per_cluster)
-    enc = enc.sortWithinPartitions("_cluster", "neighbor_id")
-    if txn is None:
-        enc.write.partitionBy("_cluster").mode("append").parquet(f"{path}/data")
-        return centroids, codebook
-    pre = _txn_file_prefix(txn)
-    _idempotent_staged_append(
-        path,
-        txn,
-        lambda stage: enc.write.partitionBy("_cluster")
-        .mode("overwrite")
-        .parquet(stage),
-        lambda rel: f"{path}/data/{rel.rsplit('/', 1)[0]}/{pre}{rel.rsplit('/', 1)[1]}",
-    )
-    return centroids, codebook
+    return _append_to_index(batch, path, id_col, vec_col, files_per_cluster, txn)[:2]
 
 
 def ivfpq_topk_indexed(
@@ -2272,19 +2239,12 @@ def ivfpq_topk_indexed(
 
     from pyspark.sql import types as T
 
-    centroids = read_ivf_centroids(spark, path)
-    codebook = read_pq_codebook(spark, path)
-    enc_mode = read_ivfpq_encode_mode(spark, path)
+    centroids, codebook, enc_mode = _read_quantizers(spark, path, "ivfpq")
     cb = np.asarray(codebook, dtype=np.float64)
     m, ks, sub = cb.shape
-    # same thresholds as write_ivfpq_index's "auto" switch — a corpus
-    # assigned by the batched regime is always probed by it too
-    large = (
-        len(centroids) >= _BATCHED_ASSIGN_MIN_K
-        or ks >= _LLOYD_MATMUL_MIN_K
-        or enc_mode == "residual"
-    )
-    if large:
+    # the write-side regime: a corpus assigned by the batched regime is
+    # always probed by it too
+    if _assign_regime(centroids, codebook, enc_mode) == "batched":
         c = np.asarray(centroids, dtype=np.float64)
         cu = _unit_centroids(centroids).astype(np.float64)
         rows = []
@@ -2339,26 +2299,32 @@ def ivfpq_topk_indexed(
     return _indexed_rerank(spark, vectors, cand_rows, q, k)
 
 
-def _index_assign_regime(spark, path: str, has_codebook: bool, centroids) -> str:
-    """The WRITE-SIDE assignment regime of the index at ``path`` — the
-    regime any probe or re-assignment against it must match (the r10
-    regime-switch invariant: on a near-tie the HOF fold and the numpy
-    arithmetic can rank two centroids differently, and a mismatched
-    probe could prune away the very cluster an identical indexed
-    vector lives in). Mirrors the full ``"auto"`` resolution the
-    writers use, exactly as ``ivfpq_topk_indexed`` does: batched at
+def _assign_regime(centroids, codebook=None, encode=None) -> str:
+    """The assignment regime of an index with these quantizers — the
+    one ``"auto"`` rule the writers, appends and probes all resolve
+    through (the r10 regime-switch invariant: on a near-tie the HOF
+    fold and the numpy arithmetic can rank two centroids differently,
+    and a mismatched probe could prune away the very cluster an
+    identical indexed vector lives in): batched at
     ``_BATCHED_ASSIGN_MIN_K``+ clusters for every kind, and for IVF-PQ
-    also at ``ks ≥ _LLOYD_MATMUL_MIN_K`` or residual encode (where
-    ``_ivfpq_encoded`` always assigns batched regardless of cluster
-    count)."""
+    (``codebook`` given) also at ``ks ≥ _LLOYD_MATMUL_MIN_K`` or
+    residual encode (whose residual subtraction is numpy
+    arithmetic)."""
     if len(centroids) >= _BATCHED_ASSIGN_MIN_K:
         return "batched"
-    if not has_codebook:
-        return "hof"
-    codebook = read_pq_codebook(spark, path)
-    if len(codebook[0]) >= _LLOYD_MATMUL_MIN_K:
+    if codebook is not None and (
+        len(codebook[0]) >= _LLOYD_MATMUL_MIN_K or encode == "residual"
+    ):
         return "batched"
-    return "batched" if read_ivfpq_encode_mode(spark, path) == "residual" else "hof"
+    return "hof"
+
+
+def _index_assign_regime(spark, path: str, has_codebook: bool, centroids) -> str:
+    """:func:`_assign_regime` of the index at ``path``, reading its
+    codebook sidecar only when the cluster count alone does not decide."""
+    if len(centroids) >= _BATCHED_ASSIGN_MIN_K or not has_codebook:
+        return _assign_regime(centroids)
+    return _assign_regime(centroids, *_read_codebook(spark, path))
 
 
 def _resolve_verify(verify: str, regime: str, broadcast_batch: bool) -> bool:
@@ -2528,7 +2494,7 @@ def _semantic_probe_hits(
     ContextCleaner GC instead.
 
     ``regime`` is the index's WRITE-SIDE assignment regime
-    (:func:`_index_assign_regime` — the r10 regime-switch invariant:
+    (:func:`_assign_regime` — the r10 regime-switch invariant:
     for IVF-PQ the switch keys on ks/encode too, not just cluster
     count); the probe, the within-side assignment, and the ``"auto"``
     verify all follow it. The corpus scan prunes to exactly the probed
@@ -2676,17 +2642,9 @@ def semantic_dedup_against(
     should use :func:`semantic_ingest_round`, which owns this
     release internally per round."""
     spark = batch.sparkSession
-    has_centroids, has_codebook = _index_layout(path)
-    if not has_centroids:
-        raise ValueError(
-            "semantic_dedup_against needs a cluster-partitioned index "
-            "(ivf, ivfpq) — a flat PQ table has no coarse quantizer to "
-            "prune with"
-        )
-    data_dir = f"{path.rstrip('/')}/data" if has_codebook else path.rstrip("/")
-    recover_index_compaction(data_dir)  # never trust a mid-swap table
+    kind, data_dir, _ = _semantic_index(path, "semantic_dedup_against")
     centroids = read_ivf_centroids(spark, path)
-    regime = _index_assign_regime(spark, path.rstrip("/"), has_codebook, centroids)
+    regime = _index_assign_regime(spark, path, kind == "ivfpq", centroids)
     # the returned frame is lazy, so the matmul broadcast (if any)
     # must outlive this call — ContextCleaner GC by default, the
     # caller's explicit release() under return_release=True
@@ -2701,19 +2659,28 @@ def semantic_dedup_against(
     return (survivors, release) if return_release else survivors
 
 
-def _maybe_compact_clusters(
-    spark, path: str, kind: str, files_per_cluster: int, compact_trigger: float
+def _semantic_index(path: str, caller: str) -> tuple[str, str, str]:
+    """:func:`_index_layout` of the index a semantic probe runs against
+    — refused for a flat PQ table, and repaired first if a compaction
+    crashed mid-swap (never trust a mid-swap table)."""
+    kind, data_dir, file_glob = _index_layout(path)
+    if kind == "pq":
+        raise ValueError(
+            f"{caller} needs a cluster-partitioned index (ivf, ivfpq) — a "
+            "flat PQ table has no coarse quantizer to probe with"
+        )
+    recover_index_compaction(data_dir)
+    return kind, data_dir, file_glob
+
+
+def _maybe_compact_index(
+    spark, path: str, file_glob: str, files_per_cluster: int, bound: float
 ) -> int:
-    """Trigger-gated :func:`compact_index` for the cluster-partitioned
-    index kinds — the same worst-cluster bound :func:`maintain_index`
-    enforces, one globStatus listing over the data dir."""
-    data_dir = f"{path}/data" if kind == "ivfpq" else path
-    per_cluster: dict[str, int] = {}
-    for p in FS.glob_paths(f"{data_dir}/_cluster=*/*.parquet"):
-        c = p.rsplit("/", 2)[1]
-        per_cluster[c] = per_cluster.get(c, 0) + 1
-    worst = max(per_cluster.values(), default=0)
-    if worst > compact_trigger * files_per_cluster:
+    """Trigger-gated :func:`compact_index`: compact when the data dir
+    holding the most files (a cluster; a PQ table) exceeds ``bound``
+    — one globStatus listing over ``file_glob`` (from
+    :func:`_index_layout`)."""
+    if max(FS.files_per_dir(file_glob).values(), default=0) > bound:
         return compact_index(spark, path, files_per_cluster=files_per_cluster)[
             "compacted"
         ]
@@ -2773,19 +2740,11 @@ def semantic_ingest_round(
     from .dedup import _EDGE_ROUND_STATS, _edge_round_stage, _txn_ingest_round
 
     spark = batch.sparkSession
-    has_centroids, has_codebook = _index_layout(path)
-    if not has_centroids:
-        raise ValueError(
-            "semantic_ingest_round needs a cluster-partitioned index "
-            "(ivf, ivfpq) — a flat PQ table has no coarse quantizer to "
-            "probe with"
-        )
-    kind = "ivfpq" if has_codebook else "ivf"
     root = path.rstrip("/")
-    data_dir = f"{root}/data" if kind == "ivfpq" else root
-    recover_index_compaction(data_dir)  # never trust a mid-swap table
-    centroids = read_ivf_centroids(spark, path)
-    regime = _index_assign_regime(spark, root, has_codebook, centroids)
+    kind, data_dir, file_glob = _semantic_index(root, "semantic_ingest_round")
+    quantizers = _read_quantizers(spark, root, kind)
+    centroids = quantizers[0]
+    regime = _assign_regime(*quantizers)
 
     def probe():
         cross, within, release = _semantic_probe_hits(
@@ -2795,27 +2754,17 @@ def semantic_ingest_round(
         return (*_semantic_round_edges(cross, within), release)
 
     def write_rows(survivors: DataFrame, stage: str) -> None:
-        if kind == "ivfpq":
-            enc = _ivfpq_encoded(
-                survivors, centroids, read_pq_codebook(spark, root), id_col,
-                vec_col, "auto", encode=read_ivfpq_encode_mode(spark, root),
-            )
-            enc = _cluster_aligned(enc, files_per_cluster).sortWithinPartitions(
-                "_cluster", "neighbor_id"
-            )
-            out = f"{stage}/data"
-        else:
-            enc = _assigned_frame(survivors, centroids, id_col, vec_col, regime)
-            enc = _cluster_aligned(enc, files_per_cluster)
-            out = stage  # ivf data lives at the index root
-        enc.write.partitionBy("_cluster").mode("overwrite").parquet(out)
+        _write_index_rows(
+            survivors, stage, kind, quantizers, id_col, vec_col, files_per_cluster
+        )
 
     return _txn_ingest_round(
         batch, root, id_col, txn,
         _edge_round_stage(batch, id_col, probe, write_rows),
         stats_extract=_EDGE_ROUND_STATS,
-        after_commit=lambda: _maybe_compact_clusters(
-            spark, root, kind, files_per_cluster, compact_trigger
+        after_commit=lambda: _maybe_compact_index(
+            spark, root, file_glob, files_per_cluster,
+            compact_trigger * files_per_cluster,
         ),
     )
 
@@ -2860,14 +2809,13 @@ def delete_from_index(spark, path: str, ids: DataFrame) -> dict:
     O(table) cost behind a delete call."""
     from ..sources.forget import delete_rows_partitioned
 
-    has_centroids, has_codebook = _index_layout(path)
-    if not has_centroids:
+    kind, data_dir, _ = _index_layout(path)
+    if kind == "pq":
         raise ValueError(
             "delete_from_index supports cluster-partitioned indexes (ivf, "
             "ivfpq); a flat PQ table needs a filtered rewrite of codes AND "
             "vectors (compact_dir) — an O(table) operation this API won't hide"
         )
-    data_dir = f"{path}/data" if has_codebook else path
     # quiescence guard (same contract as dedup.forget_documents): a
     # crashed-but-uncommitted streamed append holds a frozen staging
     # whose remaining moves target these cluster partitions —
@@ -2889,5 +2837,5 @@ def delete_from_index(spark, path: str, ids: DataFrame) -> dict:
     stats = delete_rows_partitioned(
         spark, data_dir, ids, key_col="neighbor_id", partition_col="_cluster"
     )
-    stats["kind"] = "ivfpq" if has_codebook else "ivf"
+    stats["kind"] = kind
     return stats

@@ -94,6 +94,17 @@ def glob_paths(pattern: str, spark: SparkSession | None = None) -> list[str]:
     return sorted(st.getPath().toString() for st in glob_status(pattern, spark))
 
 
+def files_per_dir(pattern: str, spark: SparkSession | None = None) -> dict[str, int]:
+    """Matched files per parent-directory name (``part=3``,
+    ``_cluster=7``) from ONE globStatus listing — the compaction
+    triggers' worst-partition count."""
+    counts: dict[str, int] = {}
+    for p in glob_paths(pattern, spark):
+        d = p.rsplit("/", 2)[1]
+        counts[d] = counts.get(d, 0) + 1
+    return counts
+
+
 def count_glob(pattern: str, spark: SparkSession | None = None) -> int:
     """Match count for a glob pattern — ONE gateway call for the
     file-count triggers (no per-entry iteration)."""

@@ -3,7 +3,7 @@
 The full suite outgrew the round driver's verify window (r15: 49-70
 min wall; the driver's pytest was cut at ~67% with zero failures and
 recorded `tests_ok: false` — VERDICT r15 item 3). `pytest.ini` selects
-`-m "not slow"` by default (~7 min, 327 tests, every module still
+`-m "not slow"` by default (9:05, 353 tests on 4 cores; every module still
 exercised); conftest marks the tests below from this one auditable
 list. Run EVERYTHING with:
 

@@ -289,7 +289,7 @@ def test_quiescence_guard_ignores_committed_txn_litter(spark, tmp_path):
 
 def test_skipped_replay_clears_committed_stage_litter(spark, tmp_path):
     """The txn-round replay short-circuit must also clear post-commit
-    staging litter (it returns before idempotent_staged_append's own
+    staging litter (it returns before staged_append's own
     marker branch would) — otherwise a checkpoint-deduped re-drain
     runs zero batches, never replays, and the litter trips the forget
     guards forever."""
