@@ -74,34 +74,41 @@ IO_QUERIES = [
 RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 
 
-def main() -> None:
+def sf_from_env() -> tuple[str, float]:
+    """(SF directory, scale factor parsed from its name; -1 if none)."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
+    return sf_dir, float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
-    # Per-gate FRESH session (r13, same cure bench_stream received —
-    # VERDICT r12 item 4): the first r13 run in ONE long-lived session
-    # measured doc_forget_docs at 166 s where the same gate costs 34 s
-    # in its own session (median of 3) — late-session accumulation
-    # dominates the heavy composite gates in either direction, so a
-    # real plan regression could hide in (or be invented by) session
-    # noise. Each gate gets its own SparkSession; session_split keeps
-    # the fresh-vs-warm share visible per gate. Compare r13+ numbers
-    # only within the fresh-session era.
+
+def time_fresh_sessions(names, sf_dir: str, warm_table: str, app_prefix: str):
+    """Time each registered gate in ``names`` ``RUNS`` times (median),
+    each in its own FRESH SparkSession warmed by one count of
+    ``warm_table`` — this bench's loop and bench_stream.py's.
+
+    Why per-gate sessions (r11-r13): costs measured in one long-lived
+    session are dominated by late-session accumulation in either
+    direction — r11 measured a stream gate at 12.3 s benched vs
+    3.6-4.2 s fresh, the first r13 run measured doc_forget_docs at
+    166 s where it costs 34 s in its own session — so a real plan
+    regression could hide in (or be invented by) session noise.
+    session_split keeps the fresh-vs-warm share visible per gate.
+
+    Returns (timings, session_split, errors, spark) — the last session
+    still open for the caller's own probes."""
     timings: dict[str, float] = {}
     session_split: dict[str, dict] = {}
     errors: dict[str, str] = {}
     spark = None
-    for name in IO_QUERIES:
-        fn = QUERIES[name].fn
+    for name in names:
         if spark is not None:
             spark.stop()
-        spark = get_spark(app_name=f"ccpd_bench_io_{name}")
-        spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()  # warm-up
+        spark = get_spark(app_name=f"{app_prefix}_{name}")
+        spark.read.parquet(f"{sf_dir}/{warm_table}.parquet").count()  # warm-up
         samples = []
         try:
             for _ in range(RUNS):
                 t0 = time.perf_counter()
-                df = fn(spark, sf_dir)
+                df = QUERIES[name].fn(spark, sf_dir)
                 df.write.format("noop").mode("overwrite").save()
                 samples.append(time.perf_counter() - t0)
             timings[name] = round(statistics.median(samples), 4)
@@ -114,7 +121,59 @@ def main() -> None:
             }
         except Exception as exc:  # noqa: BLE001 — harness boundary
             errors[name] = f"{type(exc).__name__}: {exc}"[:500]
+    return timings, session_split, errors, spark
 
+
+def fresh_session_notes(session_split: dict) -> dict:
+    """The methodology note and per-gate session split of the SELF twin."""
+    return {
+        "methodology": {
+            "per_gate_fresh_session": True,
+            "note": "each gate timed in its own SparkSession (r13): "
+            "context-level state (state stores, codegen caches, cached "
+            "plans) resets per gate, so medians are position-independent "
+            "at the session level (the r13 measurement: the same gate "
+            "166 s late in a shared session vs 34 s standalone). The JVM "
+            "itself persists across gates in local mode — JIT/heap "
+            "history carries over, bounded by ReservedCodeCacheSize=1g + "
+            "flushing — so residual order effects are damped, not zero. "
+            "Compare r13+ numbers only within this era.",
+        },
+        "session_split": session_split,
+    }
+
+
+def emit(metric: str, timings: dict, errors: dict, sf: float, notes: dict, self_name: str) -> None:
+    """Print the ONE stdout JSON line and write it, with ``notes``, to
+    the ``self_name`` twin beside this file. Totals go LAST so a
+    tail-truncated artifact keeps them; notes go to the SELF twin only
+    (r16, VERDICT r15 item 2: oversized stdout lines defeated a
+    reader that keeps only the last 2,000 characters)."""
+    out = {"queries": timings}
+    if errors:
+        out["errors"] = errors
+    out.update(
+        metric=metric,
+        unit="sec",
+        sf=sf,
+        runs=RUNS,
+        value=round(sum(timings.values()), 4),
+        n_queries=len(timings),
+        complete=not errors,
+    )
+    try:
+        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), self_name), "w") as f:
+            f.write(json.dumps({**out, "notes": notes}) + "\n")
+    except OSError:
+        pass  # read-only checkout: stdout remains the artifact
+    print(json.dumps(out))
+
+
+def main() -> None:
+    sf_dir, sf = sf_from_env()
+    timings, session_split, errors, spark = time_fresh_sessions(
+        IO_QUERIES, sf_dir, "lineitem", "ccpd_bench_io"
+    )
     # Per-phase split for the composite at-rest gates (VERDICT r11
     # items 6-7 / r12 item 4): the gates stash their LAST run's
     # phase wall-times (plans/llm_ops.LAST_PHASE_SECS), so a total's
@@ -126,43 +185,8 @@ def main() -> None:
         for name, phases in llm_ops.LAST_PHASE_SECS.items()
         if name in timings
     }
-    notes["methodology"] = {
-        "per_gate_fresh_session": True,
-        "note": "each gate timed in its own SparkSession (r13): "
-        "context-level state (state stores, codegen caches, cached "
-        "plans) resets per gate, so medians are position-independent at "
-        "the session level (the r13 measurement: the same gate 166 s "
-        "late in a shared session vs 34 s standalone). The JVM itself "
-        "persists across gates in local mode — JIT/heap history carries "
-        "over, bounded by ReservedCodeCacheSize=1g + flushing — so "
-        "residual order effects are damped, not zero. Compare r13+ "
-        "numbers only within this era.",
-    }
-    notes["session_split"] = session_split
-
-    # totals LAST so a tail-truncated artifact keeps them; notes go to
-    # the SELF twin only (r16, VERDICT r15 item 2: oversized stdout
-    # lines defeated the driver's 2,000-char artifact tail)
-    out = {"queries": timings}
-    if errors:
-        out["errors"] = errors
-    out.update(
-        metric="io_total_median_query_seconds",
-        unit="sec",
-        sf=sf,
-        runs=RUNS,
-        value=round(sum(timings.values()), 4),
-        n_queries=len(timings),
-        complete=not errors,
-    )
-    try:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_IO_SELF.json"), "w"
-        ) as f:
-            f.write(json.dumps({**out, "notes": notes}) + "\n")
-    except OSError:
-        pass  # read-only checkout: stdout remains the artifact
-    print(json.dumps(out))
+    notes.update(fresh_session_notes(session_split))
+    emit("io_total_median_query_seconds", timings, errors, sf, notes, "BENCH_IO_SELF.json")
     spark.stop()
 
 

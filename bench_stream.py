@@ -27,23 +27,12 @@ Prints ONE JSON line: {"metric": "stream_total_median_query_seconds",
 
 from __future__ import annotations
 
-import json
 import os
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from chicago_crash_data_pipeline_dashboard_spark.plans import (  # noqa: F401
-    QUERIES,
-    analytics,
-    crash_ops,
-    jobspec_ops,
-    llm_ops,
-    ml_ops,
-)
-from chicago_crash_data_pipeline_dashboard_spark.session import get_spark
+from bench_io import emit, fresh_session_notes, sf_from_env, time_fresh_sessions
 
 # Every streaming member of bench.py's SKIP set.
 STREAM_QUERIES = [
@@ -65,70 +54,17 @@ STREAM_QUERIES = [
     "emb_maintain_stream",
 ]
 
-RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
-
-    # Per-gate FRESH session (VERDICT r11 item 7 / r12 item 4): the r11
-    # decomposition proved per-gate costs in one long-lived session are
-    # dominated by session accumulation (12.3 s benched vs 3.6-4.2 s
-    # fresh for the same gate), so a real plan regression could hide in
-    # the session-noise band and round-to-round numbers weren't
-    # comparable. Each gate now gets its own SparkSession (stopped and
-    # rebuilt, state stores and codegen caches cleared), warmed by one
-    # parquet count; the recorded median is the gate's own cost, not
-    # its position in the run order. session_split records the fresh
-    # first run vs the warm in-session median so the remaining
-    # warm-up share stays visible per gate.
-    timings: dict[str, float] = {}
-    session_split: dict[str, dict] = {}
-    errors: dict[str, str] = {}
-    spark = None
-    for name in STREAM_QUERIES:
-        if spark is not None:
-            spark.stop()
-        spark = get_spark(app_name=f"ccpd_bench_stream_{name}")
-        spark.read.parquet(f"{sf_dir}/events.parquet").count()  # warm-up
-        samples = []
-        try:
-            for _ in range(RUNS):
-                t0 = time.perf_counter()
-                df = QUERIES[name].fn(spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                samples.append(time.perf_counter() - t0)
-            timings[name] = round(statistics.median(samples), 4)
-            session_split[name] = {
-                "fresh_first_run": round(samples[0], 4),
-                # honest at RUNS=1: there ARE no warm samples
-                "warm_median": round(statistics.median(samples[1:]), 4)
-                if len(samples) > 1
-                else None,
-            }
-        except Exception as exc:  # noqa: BLE001 — harness boundary
-            errors[name] = f"{type(exc).__name__}: {exc}"[:500]
-
+    sf_dir, sf = sf_from_env()
+    timings, session_split, errors, spark = time_fresh_sessions(
+        STREAM_QUERIES, sf_dir, "events", "ccpd_bench_stream"
+    )
+    notes = fresh_session_notes(session_split)
     # Decompose the ingest gate's number into per-drain fixed cost vs
     # rows/s so the artifact explains itself (VERDICT r7 item 7: the
     # ~16 s streaming_ingest_e2e reading is dominated by three
     # stream start/stops + checkpoint IO, not by data volume)
-    notes: dict[str, dict] = {
-        "methodology": {
-            "per_gate_fresh_session": True,
-            "note": "each gate timed in its own SparkSession (r13): "
-            "context-level state resets per gate, so medians are "
-            "position-independent at the session level; the JVM itself "
-            "persists across gates in local mode (JIT/heap history "
-            "carries over, bounded by ReservedCodeCacheSize=1g + "
-            "flushing), so residual order effects are damped, not zero. "
-            "Pre-r13 artifacts ran one long-lived session and carried "
-            "full accumulation — compare r13+ numbers only within this "
-            "era.",
-        },
-        "session_split": session_split,
-    }
     try:
         from chicago_crash_data_pipeline_dashboard_spark.plans.crash_ops import (
             streaming_ingest_throughput_probe,
@@ -149,29 +85,7 @@ def main() -> None:
     except Exception as exc:  # noqa: BLE001 — harness boundary
         notes["windowed_counts_cost"] = {"error": f"{type(exc).__name__}: {exc}"[:300]}
 
-    # totals LAST so a tail-truncated artifact keeps them; notes go to
-    # the SELF twin only (r16, VERDICT r15 item 2: oversized stdout
-    # lines defeated the driver's 2,000-char artifact tail)
-    out = {"queries": timings}
-    if errors:
-        out["errors"] = errors
-    out.update(
-        metric="stream_total_median_query_seconds",
-        unit="sec",
-        sf=sf,
-        runs=RUNS,
-        value=round(sum(timings.values()), 4),
-        n_queries=len(timings),
-        complete=not errors,
-    )
-    try:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_STREAM_SELF.json"), "w"
-        ) as f:
-            f.write(json.dumps({**out, "notes": notes}) + "\n")
-    except OSError:
-        pass  # read-only checkout: stdout remains the artifact
-    print(json.dumps(out))
+    emit("stream_total_median_query_seconds", timings, errors, sf, notes, "BENCH_STREAM_SELF.json")
     spark.stop()
 
 

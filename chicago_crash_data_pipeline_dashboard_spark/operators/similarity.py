@@ -14,6 +14,8 @@ Two paths, same API:
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
@@ -290,8 +292,12 @@ def _nearest_centroid(vec_col, centroids) -> "F.Column":
 
 def _probe_clusters(vec_col, centroids, n_probe: int):
     """Indices of the ``n_probe`` nearest centroids, ties broken by
-    cluster id (same ordering as sorting (distance, id) structs)."""
+    cluster id (same ordering as sorting (distance, id) structs). An
+    exhaustive probe (``n_probe`` ≥ the cluster count — every probe of
+    a one-cluster PQ index) is every id: no distance to fold."""
     k = len(centroids)
+    if n_probe >= k:
+        return F.array(*[F.lit(c) for c in range(k)])
 
     def body(d):
         structs = F.zip_with(
@@ -433,20 +439,25 @@ def _assigned_frame(
     )
 
 
-def _cluster_aligned(enc: DataFrame, files_per_cluster: int) -> DataFrame:
+def _cluster_aligned(enc: DataFrame, files_per_cluster: int | None) -> DataFrame:
     """Repartition on _cluster (+ a row-hash salt when
     files_per_cluster > 1) BEFORE partitionBy, so each cluster
     directory receives AT MOST files_per_cluster files from this write
     — without it every write task emits a file into every cluster it
     sees (tasks x clusters files; the r10 1M probe measured 30,549
-    files for a 1000-cluster index)."""
+    files for a 1000-cluster index). ``None`` keeps the input's
+    partitioning: the one-cluster index's write, where tasks x clusters
+    is just the task count and a repartition on the constant _cluster
+    would funnel the whole write through one task."""
+    if files_per_cluster is None:
+        return enc
     if files_per_cluster > 1:
         salt = F.pmod(F.xxhash64("neighbor_id"), F.lit(files_per_cluster))
         return enc.repartition(F.col("_cluster"), salt)
     return enc.repartition(F.col("_cluster"))
 
 
-def _write_clusters(enc: DataFrame, out: str, files_per_cluster: int) -> None:
+def _write_clusters(enc: DataFrame, out: str, files_per_cluster: int | None) -> None:
     """The one writer of the cluster-partitioned kinds — build, append,
     ingest round and compaction all write through it: cluster-aligned
     ``partitionBy("_cluster")``, and IVF-PQ rows (those carrying
@@ -662,22 +673,73 @@ def write_ivf_index(
     (same quantizer ⇒ identical assignments ⇒ probe results equal, but
     every cluster back at ``files_per_cluster`` files); at scale prefer
     :func:`compact_index`, which rewrites only the bloated clusters."""
-    drift = None
-    if centroids is None:
-        sample = _driver_sample(corpus, vec_col, train_sample, seed)
+
+    def train(sample):
         centroids = _fit_quantizer(sample, n_clusters, seed)
-        drift = _sample_drift_baseline(sample, centroids)
-    else:
-        n_clusters = len(centroids)
-    if assignment == "auto":
-        assignment = _assign_regime(centroids)
-    _write_clusters(
-        _assigned_frame(corpus, centroids, id_col, vec_col, assignment),
-        path, files_per_cluster,
+        return (centroids, None, None), _sample_drift_baseline(sample, centroids)
+
+    return _write_index(
+        corpus, path, id_col, vec_col, train_sample, seed, assignment,
+        files_per_cluster, None if centroids is None else (centroids, None, None), train,
+    )[0]
+
+
+def _write_index(
+    corpus: DataFrame, path: str, id_col: str, vec_col: str, train_sample: int,
+    seed: int, assignment: str, files_per_cluster: int, quantizers, train,
+) -> tuple:
+    """The one writer of the three index kinds: take the saved
+    (centroids, codebook, encode) ``quantizers`` — a no-retrain rebuild,
+    which persists no drift baseline — or train them on one bounded
+    driver sample (``train(sample) -> (quantizers, drift baseline)``),
+    write the clusters (:func:`_write_index_rows`), then the
+    ``_centroids`` sidecar and, for the coded kinds, ``_codebook``
+    with its encode mode. Returns the quantizers written."""
+    import json
+
+    drift = None
+    if quantizers is None:
+        quantizers, drift = train(_driver_sample(corpus, vec_col, train_sample, seed))
+    centroids, codebook, encode = quantizers
+    quantizers = ([[float(x) for x in c] for c in centroids], codebook, encode)
+    _write_index_rows(
+        corpus, path, quantizers, id_col, vec_col, files_per_cluster, assignment
     )
-    cents = [[float(x) for x in c] for c in centroids]
-    _write_centroids_meta(corpus.sparkSession, path, cents, drift)
-    return cents
+    sidecars = {
+        "_centroids": {
+            "centroids_json": json.dumps(quantizers[0]),
+            "drift_json": json.dumps(drift) if drift is not None else None,
+        }
+    }
+    if codebook is not None:
+        sidecars["_codebook"] = {
+            "codebook_json": json.dumps(
+                [[[float(x) for x in cc] for cc in cs] for cs in codebook]
+            ),
+            "encode": encode,
+        }
+    # each sidecar is one JSON row written (and read back, by
+    # _read_sidecar) through the FileSystem API: a Spark JSON write
+    # costs a job and an output commit (~0.9 s each on 4 cores, more
+    # than the cluster write of a small index)
+    for name, row in sidecars.items():
+        FS.delete(f"{path}/{name}", corpus.sparkSession)
+        FS.write_text(
+            f"{path}/{name}/part-00000.json", json.dumps(row) + "\n", corpus.sparkSession
+        )
+    return quantizers
+
+
+def _read_sidecar(spark, path: str, name: str) -> dict:
+    """The one JSON row of the index sidecar ``{path}/{name}``, read
+    driver-side through the FileSystem API — no Spark job. Indexes
+    written before the sidecars were written this way hold the row in a
+    Spark JSON part file, which the ``part-*`` glob matches too (its
+    NULL fields omitted, so read fields with ``.get``)."""
+    import json
+
+    part = FS.glob_paths(f"{path}/{name}/part-*", spark)[0]
+    return json.loads(FS.read_text(part, spark).splitlines()[0])
 
 
 def read_ivf_centroids(spark, path: str) -> list[list[float]]:
@@ -685,7 +747,7 @@ def read_ivf_centroids(spark, path: str) -> list[list[float]]:
     row — a driver-side read by design, like the quantizer sample)."""
     import json
 
-    return json.loads(spark.read.json(f"{path}/_centroids").collect()[0].centroids_json)
+    return json.loads(_read_sidecar(spark, path, "_centroids")["centroids_json"])
 
 
 # --------------------------------------------------------------------------
@@ -701,25 +763,37 @@ from ..sources.txn import (  # noqa: E402 — grouped with the family it guards
 
 
 def _write_index_rows(
-    rows: DataFrame, out: str, kind: str, quantizers, id_col: str, vec_col: str,
-    files_per_cluster: int,
+    rows: DataFrame, out: str, quantizers, id_col: str, vec_col: str,
+    files_per_cluster: int, assignment: str = "auto",
 ) -> None:
-    """Encode ``rows`` under an index's SAVED ``quantizers``
-    (:func:`_read_quantizers` — never retrained; the assignment regime
-    and encode mode come from the index, so the rows land exactly where
-    a same-quantizer rebuild puts them) and write them in the kind's
-    layout under ``out`` — the append's and the ingest round's stage."""
+    """Assign (and, with a codebook, PQ-encode) ``rows`` under the
+    (centroids, codebook, encode) ``quantizers`` and write them
+    cluster-partitioned under ``out`` — IVF at its root, the coded
+    kinds under ``data/``: the build's, the append's and the ingest
+    round's stage. A one-cluster index (PQ) writes with the input's
+    parallelism, ignoring ``files_per_cluster`` (:func:`_cluster_aligned`);
+    :func:`compact_index` later sizes its files. Appends pass the
+    index's SAVED quantizers
+    (:func:`_read_quantizers` — never retrained), so the regime
+    resolves as the build's did and rows land exactly where a
+    same-quantizer rebuild puts them. ``"auto"`` resolves through
+    :func:`_assign_regime`; a residual encode always runs batched (the
+    residual subtraction is numpy arithmetic; a HOF form would embed the
+    full centroid matrix twice)."""
     centroids, codebook, encode = quantizers
-    if kind == "pq":
-        _write_pq_tables(_pq_corpus_frames(rows, id_col, vec_col, codebook), out)
-        return
-    regime = _assign_regime(centroids, codebook, encode)
-    if kind == "ivf":
-        enc = _assigned_frame(rows, centroids, id_col, vec_col, regime)
+    if assignment == "auto" or encode == "residual":
+        assignment = _assign_regime(*quantizers)
+    if codebook is None:
+        enc = _assigned_frame(rows, centroids, id_col, vec_col, assignment)
+    elif assignment == "batched":
+        out, enc = f"{out}/data", assign_and_encode_batched(
+            rows, centroids, codebook, id_col, vec_col, encode=encode
+        )
     else:
-        enc = _ivfpq_encoded(rows, centroids, codebook, id_col, vec_col, regime, encode)
-        out = f"{out}/data"
-    _write_clusters(enc, out, files_per_cluster)
+        out, enc = f"{out}/data", _assigned_frame(
+            rows, centroids, id_col, vec_col, "hof"
+        ).withColumn("codes", _pq_codes(F.col("cvec"), codebook, norm_col=F.col("cn")))
+    _write_clusters(enc, out, None if len(centroids) == 1 else files_per_cluster)
 
 
 def _append_to_index(
@@ -733,19 +807,15 @@ def _append_to_index(
     root = path.rstrip("/")
     kind, data_dir, _ = _index_layout(root)
     quantizers = _read_quantizers(batch.sparkSession, root, kind)
-    if kind != "pq":
-        # a compaction that crashed mid-swap parks whole clusters in
-        # _compact_old; an append that recreated such a leaf first
-        # would make the next recovery discard the parked rows
-        recover_index_compaction(data_dir)
+    # a compaction that crashed mid-swap parks whole clusters in
+    # _compact_old; an append that recreated such a leaf first would
+    # make the next recovery discard the parked rows
+    recover_index_compaction(data_dir)
     staged_append(
         root, txn,
         lambda stage: _write_index_rows(
-            batch, stage, kind, quantizers, id_col, vec_col, files_per_cluster
+            batch, stage, quantizers, id_col, vec_col, files_per_cluster
         ),
-        # PQ moves vectors/ before codes/ (see append_to_pq_index); the
-        # cluster kinds keep plain path order
-        order_key=lambda rel: (not rel.startswith("vectors/"), rel),
     )
     return quantizers
 
@@ -824,53 +894,7 @@ def ivf_topk_indexed(
     Same tie policy ((distance, cluster-id) ascending); agreement with
     the HOF path is pinned on integer-valued vectors where both
     compute bit-exact distances."""
-    import numpy as np
-
-    from pyspark.sql import types as T
-
-    centroids = read_ivf_centroids(spark, path)
-    if len(centroids) >= _BATCHED_ASSIGN_MIN_K:
-        # production-k path: numpy probe over the collected queries —
-        # the SAME threshold as the write-side "auto" assignment
-        # switch, so a batched-assigned corpus is never probed by the
-        # HOF regime (r10 ADVICE: mixed regimes can assign and probe
-        # near-tie vectors inconsistently)
-        c = np.asarray(centroids, dtype=np.float64)
-        rows = []
-        for r in queries.select(id_col, vec_col).collect():
-            v = r[vec_col]
-            if v is None:  # HOF explode drops NULL-vector queries too
-                continue
-            v64 = np.asarray(v, dtype=np.float64)
-            d2 = ((c - v64) ** 2).sum(-1)
-            order = np.lexsort((np.arange(len(c)), d2))[:n_probe]
-            qn = float(np.sqrt((v64 * v64).sum()))
-            rows.extend((r[id_col], v, qn, int(cl)) for cl in order)
-        q_schema = T.StructType(
-            [
-                T.StructField("query_id", queries.schema[id_col].dataType, True),
-                T.StructField("qvec", queries.schema[vec_col].dataType, True),
-                T.StructField("qn", T.DoubleType(), True),
-                T.StructField("_cluster", T.IntegerType(), True),
-            ]
-        )
-        q = spark.createDataFrame(rows, q_schema)
-        probed = sorted({r[3] for r in rows})
-    else:
-        # The probed-query frame is consumed twice (probe-id collect,
-        # then scoring) and each evaluation re-derives the per-query
-        # centroid-distance fold. It is bounded by construction —
-        # queries are top-k REQUESTS (n_queries × n_probe rows), the
-        # same driver-side budget as the probe-id collect below — so
-        # collect it ONCE and rebuild a local relation: one
-        # computation, no persist to leak across a long-lived session
-        # (r6 persisted here and never unpersisted).
-        q_plan = _probed_queries(queries, centroids, id_col, vec_col, n_probe)
-        q_rows = q_plan.collect()
-        q = spark.createDataFrame(q_rows, q_plan.schema)
-        probed = sorted({r["_cluster"] for r in q_rows})
-    assigned = spark.read.parquet(path).filter(F.col("_cluster").isin(probed))
-    return _score_probed(assigned, q, k)
+    return _topk_indexed(spark, path, queries, id_col, vec_col, k, n_probe, None, None)
 
 
 # --------------------------------------------------------------------------
@@ -1140,8 +1164,8 @@ def pq_codes_batched(
 def _pq_corpus_frames(
     corpus: DataFrame, id_col: str, vec_col: str, codebook
 ) -> DataFrame:
-    """(neighbor_id, cvec, cn, codes) — the encoded corpus frame shared
-    by the in-memory and at-rest PQ paths. Routes through the
+    """(neighbor_id, cvec, cn, codes) — the encoded corpus frame of the
+    in-memory :func:`pq_topk`. Routes through the
     Arrow-batched encode at production sub-codebook sizes (same
     threshold as the IVF Lloyd/probe split); gate-scale codebooks
     (ks ≤ 64) keep the pure-JVM HOF encode."""
@@ -1163,55 +1187,22 @@ def _pq_query_frame(queries: DataFrame, id_col: str, vec_col: str, codebook) -> 
     ).withColumn("lut", _pq_lut(F.col("qvec"), codebook, norm_col=F.col("qn")))
 
 
-def _pq_query_frame_driver(
-    spark, queries: DataFrame, id_col: str, vec_col: str, codebook
-) -> DataFrame:
-    """Driver-side twin of ``_pq_query_frame`` for production codebook
-    sizes: the HOF LUT embeds the m × ks × sub codebook as a plan
-    constant whose generated code compiles once per session — at
-    ks=256 that compile dominated the r10 PQ probe's first run (62.5 s
-    vs 15.8 s warm). Queries are top-k REQUESTS, driver-bounded by the
-    same contract as the candidate collect, so compute the LUT in
-    numpy over the collected rows (exact f64 squared L2, same values
-    as the HOF fold up to summation order; NULL-vector queries drop,
-    matching the HOF explode)."""
-    import numpy as np
-
-    from pyspark.sql import types as T
-
-    cb = np.asarray(codebook, dtype=np.float64)  # m × ks × sub
-    m, ks, sub = cb.shape
-    rows = []
-    for r in queries.select(id_col, vec_col).collect():
-        v = r[vec_col]
-        if v is None:
-            continue
-        v64 = np.asarray(v, dtype=np.float64)
-        qn = float(np.sqrt((v64 * v64).sum()))
-        unit = v64 / (qn if qn != 0 else 1.0)
-        lut = [
-            ((cb[mi] - unit[mi * sub : (mi + 1) * sub]) ** 2).sum(-1).tolist()
-            for mi in range(m)
-        ]
-        rows.append((r[id_col], v, qn, lut))
-    schema = T.StructType(
-        [
-            T.StructField("query_id", queries.schema[id_col].dataType, True),
-            T.StructField("qvec", queries.schema[vec_col].dataType, True),
-            T.StructField("qn", T.DoubleType(), True),
-            T.StructField(
-                "lut", T.ArrayType(T.ArrayType(T.DoubleType(), True), True), True
-            ),
-        ]
-    )
-    return spark.createDataFrame(rows, schema)
+def _np_lut(cb, unit) -> list:
+    """Driver-side numpy twin of :func:`_pq_lut` for ONE query: squared
+    L2 from each sub-vector of ``unit`` to every sub-centroid of the
+    f64 codebook ``cb`` (m × ks × sub) — exact f64, the same values as
+    the HOF fold up to summation order. The indexed probe builds it at
+    production codebook sizes, where the HOF LUT's m × ks × sub plan
+    constant compiles once per session (at ks=256 that compile
+    dominated the r10 PQ probe's first run: 62.5 s vs 15.8 s warm)."""
+    sub = cb.shape[2]
+    return [
+        ((cb[mi] - unit[mi * sub : (mi + 1) * sub]) ** 2).sum(-1).tolist()
+        for mi in range(len(cb))
+    ]
 
 
-def _pq_train_validated(
-    corpus: DataFrame, vec_col: str, dim: int, m: int, ks: int, seed: int,
-    train_sample: int,
-):
-    sample = _driver_sample(corpus, vec_col, train_sample, seed)
+def _pq_train_validated(sample, dim: int, m: int, ks: int, seed: int):
     if sample and len(sample[0]) != dim:
         # a mismatched dim would make F.slice/zip_with silently produce
         # short or NULL sub-distances (wrong codes/rankings, no error)
@@ -1219,6 +1210,13 @@ def _pq_train_validated(
             f"dim={dim} does not match the embedding length {len(sample[0])}"
         )
     return pq_train(sample, dim=dim, m=m, ks=ks, seed=seed)
+
+
+def _one_cluster(codebook) -> tuple:
+    """Flat PQ's quantizers as an IVF-PQ index's: ONE zero centroid that
+    every vector assigns to (nothing to train, and a rebuild from a
+    saved codebook needs no centroid), the codebook, direct encode."""
+    return [[0.0] * (len(codebook) * len(codebook[0][0]))], codebook, "direct"
 
 
 def write_pq_index(
@@ -1233,48 +1231,39 @@ def write_pq_index(
     train_sample: int = 65536,
     codebook=None,
 ):
-    """Materialize the PQ index AT REST — the shape that makes PQ's
-    compression claim real on disk, not just in a shuffle:
+    """Materialize the PQ index AT REST as an IVF-PQ index with ONE
+    cluster (:func:`write_ivfpq_index`'s layout, so every index
+    operation treats it as one):
 
-    - ``{path}/codes``: (neighbor_id, codes) — m small ints per vector.
-      At 100 TB THIS is what every query scans: m bytes/vector instead
-      of the raw embeddings (32× smaller at dim=64 float vs m=8).
-    - ``{path}/vectors``: (neighbor_id, cvec, cn) sorted by id within
-      partitions, so the exact-rerank fetch of k·refine ids per query
-      skips row groups via min/max statistics on the pushed IN filter.
-    - ``{path}/_codebook``: the m×ks×(dim/m) codebook as one JSON row
-      (underscore-prefixed like ``_centroids`` so discovery skips it).
+    - ``{path}/data/_cluster=0``: (neighbor_id, cvec, cn, codes),
+      id-sorted within files, one file per corpus partition (see
+      :func:`_cluster_aligned`). Parquet is columnar, so the ADC candidate
+      pass reads only (neighbor_id, codes) — m small ints per vector,
+      PQ's compression claim made real on disk (32× smaller than the
+      raw embeddings at dim=64 float vs m=8) — and the exact-rerank
+      fetch of k·refine ids per query skips row groups via min/max
+      statistics on the pushed IN filter.
+    - ``{path}/_centroids``: the zero vector (:func:`_one_cluster`), no
+      drift baseline — :func:`maintain_index` reports ``drift_ratio
+      None`` and never auto-retrains a PQ index.
+    - ``{path}/_codebook``: the m×ks×(dim/m) codebook, ``encode``
+      ``"direct"`` (L2-normalized vectors, as :func:`pq_topk` codes).
 
     ``codebook``: pass a saved codebook (``read_pq_codebook``) to
     REBUILD without retraining — the full-rewrite path for an index
     grown by ``append_to_pq_index`` (``dim``/``m``/``ks``/``seed``/
     ``train_sample`` are then ignored); :func:`compact_index` compacts
-    the two tables in place without re-encoding anything.
+    the cluster in place without re-encoding anything.
 
     Returns the codebook (also persisted)."""
-    import json
 
-    if codebook is None:
-        codebook = _pq_train_validated(corpus, vec_col, dim, m, ks, seed, train_sample)
-    _write_pq_tables(_pq_corpus_frames(corpus, id_col, vec_col, codebook), path)
-    corpus.sparkSession.createDataFrame(
-        [(json.dumps([[[float(x) for x in cc] for cc in cs] for cs in codebook]),)],
-        "codebook_json string",
-    ).coalesce(1).write.mode("overwrite").json(f"{path}/_codebook")
-    return codebook
+    def train(sample):
+        return _one_cluster(_pq_train_validated(sample, dim, m, ks, seed)), None
 
-
-def _write_pq_tables(c: DataFrame, out: str) -> None:
-    """PQ's two-table writer — build and append both call it: the
-    id-sorted ``vectors`` table, then ``codes`` (the order
-    :func:`append_to_pq_index` explains)."""
-    (
-        c.select("neighbor_id", "cvec", "cn")
-        .sortWithinPartitions("neighbor_id")
-        .write.mode("overwrite")
-        .parquet(f"{out}/vectors")
-    )
-    c.select("neighbor_id", "codes").write.mode("overwrite").parquet(f"{out}/codes")
+    return _write_index(
+        corpus, path, id_col, vec_col, train_sample, seed, "auto", 1,
+        None if codebook is None else _one_cluster(codebook), train,
+    )[1]
 
 
 def append_to_pq_index(
@@ -1285,27 +1274,17 @@ def append_to_pq_index(
     txn: str | None = None,
 ):
     """Incrementally append a NEW batch to a PQ index written by
-    ``write_pq_index`` — completes the append family (IVF and IVF-PQ
-    have the same shape): the batch encodes under the SAVED codebook
-    (``read_pq_codebook``, never retrained) and appends to both the
-    codes and vectors tables. Post-append probe results are gated
-    equal to ``write_pq_index(full_corpus, codebook=saved)``
-    (test_plans parity). Work is O(batch).
+    ``write_pq_index`` — the IVF-PQ append into its one cluster: the
+    batch encodes under the SAVED codebook (``read_pq_codebook``, never
+    retrained). Post-append probe results are gated equal to
+    ``write_pq_index(full_corpus, codebook=saved)`` (test_plans
+    parity). Work is O(batch).
 
     Retrain-vs-append drift criterion: as ``append_to_ivf_index``,
-    minus the assignment-skew surface (no coarse quantizer here) —
-    only ADC error grows on out-of-distribution appends.
-
-    Move order is VECTORS first, deliberately: a failure between the
-    two tables' moves then leaves vectors rows with no codes —
-    invisible to probes (the ADC pass drives candidate selection off
-    ``codes``) and repaired by re-running the append. The reverse
-    order would leave codes rows whose ids are absent from
-    ``vectors``, and those ADC candidates silently vanish at the
-    rerank fetch while still crowding real candidates out of the
-    k·refine budget. ``txn`` keys the staged-move ledger as in
-    ``append_to_ivf_index``. Returns the codebook as read from the
-    index."""
+    minus the assignment-skew surface (no coarse quantizer to skew) —
+    only ADC error grows on out-of-distribution appends. ``txn`` keys
+    the staged-move ledger as in ``append_to_ivf_index``. Returns the
+    codebook as read from the index."""
     return _append_to_index(batch, path, id_col, vec_col, 1, txn)[1]
 
 
@@ -1317,13 +1296,12 @@ def read_pq_codebook(spark, path: str):
 
 def _read_codebook(spark, path: str) -> tuple:
     """(codebook, encode mode) from ONE read of ``{path}/_codebook``;
-    the mode is 'direct' for PQ and pre-r11 IVF-PQ indexes, which
-    carry no mode field."""
+    the mode is 'direct' for pre-r11 IVF-PQ indexes, which carry no
+    mode field."""
     import json
 
-    row = spark.read.json(f"{path}/_codebook").collect()[0]
-    encode = row["encode"] if "encode" in row.__fields__ else "direct"
-    return json.loads(row.codebook_json), encode
+    row = _read_sidecar(spark, path, "_codebook")
+    return json.loads(row["codebook_json"]), row.get("encode") or "direct"
 
 
 def pq_topk_indexed(
@@ -1336,27 +1314,19 @@ def pq_topk_indexed(
     refine: int = 4,
     salts: int | None = 8,
 ) -> DataFrame:
-    """PQ top-k against an index written by ``write_pq_index``.
+    """PQ top-k against an index written by ``write_pq_index`` — the
+    IVF-PQ probe of its one cluster.
 
-    The candidate pass scans ONLY the codes table (ReadSchema is
+    The candidate pass scans ONLY the codes column (ReadSchema is
     (neighbor_id, codes) — the raw embeddings never enter it), ranks by
     ADC through the same salted two-phase top-k as the in-memory path,
     then the k·refine surviving ids per query are collected (bounded:
     k·refine·n_queries rows — queries are top-k *requests*, inherently
-    small) and pushed as an ``IN`` filter into the vectors scan, so the
-    exact-cosine rerank reads row groups containing only those ids.
-    Same codebook + seed as ``pq_topk`` ⇒ identical results, tested."""
-    codebook = read_pq_codebook(spark, path)
-    codes = spark.read.parquet(f"{path}/codes")
-    if len(codebook[0]) >= _LLOYD_MATMUL_MIN_K:
-        q = _pq_query_frame_driver(spark, queries, id_col, vec_col, codebook)
-    else:
-        q = _pq_query_frame(queries, id_col, vec_col, codebook)
-    n_cand = k * refine
-    cand_rows = _pq_adc_candidates(codes, q, n_cand=n_cand, salts=salts).collect()
-    return _indexed_rerank(
-        spark, spark.read.parquet(f"{path}/vectors"), cand_rows, q, k
-    )
+    small) and pushed as an ``IN`` filter into the vector-column scan,
+    so the exact-cosine rerank reads row groups containing only those
+    ids. Same codebook + seed as ``pq_topk`` ⇒ identical results,
+    tested."""
+    return _topk_indexed(spark, path, queries, id_col, vec_col, k, 1, refine, salts)
 
 
 def _indexed_rerank(spark, vectors: DataFrame, cand_rows, q: DataFrame, k: int) -> DataFrame:
@@ -1461,7 +1431,9 @@ def pq_topk(
     rerank is a broadcast semi-join touching only k·refine rows per
     query. ``salts=None`` disables stage 1 (single exact window) —
     results are identical either way, property-tested."""
-    codebook = _pq_train_validated(corpus, vec_col, dim, m, ks, seed, train_sample)
+    codebook = _pq_train_validated(
+        _driver_sample(corpus, vec_col, train_sample, seed), dim, m, ks, seed
+    )
 
     # two-step selects so encode/LUT reuse the cn/qn norm columns
     # (codegen CSE then computes the O(dim) norm fold once per row)
@@ -1513,41 +1485,35 @@ def _sample_drift_baseline(sample, centroids) -> dict:
     }
 
 
-def _write_centroids_meta(spark, path: str, centroids, drift: dict | None) -> None:
-    import json
-
-    cents = [[float(x) for x in c] for c in centroids]
-    spark.createDataFrame(
-        [(json.dumps(cents), json.dumps(drift) if drift is not None else None)],
-        "centroids_json string, drift_json string",
-    ).coalesce(1).write.mode("overwrite").json(f"{path}/_centroids")
-
-
 def read_drift_baseline(spark, path: str) -> dict | None:
     """The build-time drift baseline persisted by write_ivf_index /
     write_ivfpq_index (None for pre-r11 indexes or no-retrain
     rebuilds, whose metadata carries no baseline)."""
     import json
 
-    row = spark.read.json(f"{path}/_centroids").collect()[0]
-    if "drift_json" not in row.__fields__ or row["drift_json"] is None:
-        return None
-    return json.loads(row["drift_json"])
+    drift = _read_sidecar(spark, path, "_centroids").get("drift_json")
+    return None if drift is None else json.loads(drift)
 
 
 def _index_layout(path: str) -> tuple[str, str, str]:
     """(kind, data dir, data-file glob) of the at-rest ANN index at
     ``path`` — the one place the kind is derived. Layout sniffing goes
-    through the Hadoop FileSystem API, so a pure-IVF or pure-PQ index
-    is classified the same on ``file://``, ``hdfs://`` and ``s3a://``
-    (the r11-advice trap: assuming both sidecars exist whenever the
-    path isn't local misread every object-store index as ivfpq). IVF
-    keeps its cluster dirs at the root and IVF-PQ under ``data/``; a
-    flat PQ index (no ``_centroids``) has its rows in ``codes`` (the
-    table probes scan) and its files in ``codes`` and ``vectors``."""
+    through the Hadoop FileSystem API, so an index is classified the
+    same on ``file://``, ``hdfs://`` and ``s3a://`` (the r11-advice
+    trap: assuming both sidecars exist whenever the path isn't local
+    misread every object-store index as ivfpq). Every index carries
+    ``_centroids``; the coded kinds (IVF-PQ, and PQ as its one-cluster
+    case) also ``_codebook``, with their cluster dirs under ``data/``,
+    while IVF keeps them at the root. A path without ``_centroids`` is
+    refused: it is no index, or one written in the retired flat-PQ
+    layout (``codes/`` + ``vectors/``)."""
     root = path.rstrip("/")
     if not FS.is_dir(f"{root}/_centroids"):
-        return "pq", f"{root}/codes", f"{root}/{{codes,vectors}}/*.parquet"
+        raise ValueError(
+            f"{root} is not an ANN index: it has no _centroids sidecar. An "
+            "index written in the old flat-PQ layout (codes/ + vectors/) "
+            "must be rebuilt with write_pq_index"
+        )
     if FS.is_dir(f"{root}/_codebook"):
         kind, data_dir = "ivfpq", f"{root}/data"
     else:
@@ -1557,34 +1523,32 @@ def _index_layout(path: str) -> tuple[str, str, str]:
 
 def _read_quantizers(spark, path: str, kind: str) -> tuple:
     """(centroids, codebook, encode mode) as the index persisted them,
-    one sidecar read each — None where ``kind`` has no such part."""
-    centroids = read_ivf_centroids(spark, path) if kind != "pq" else None
-    codebook, encode = _read_codebook(spark, path) if kind != "ivf" else (None, None)
-    return centroids, codebook, encode
+    one sidecar read each — (None, None) for IVF's missing codebook."""
+    codebook, encode = _read_codebook(spark, path) if kind == "ivfpq" else (None, None)
+    return read_ivf_centroids(spark, path), codebook, encode
 
 
 def describe_index(spark, path: str) -> dict:
     """Operational introspection for an at-rest ANN index — what an
     operator checks before deciding append vs retrain: kind (ivf /
-    ivfpq / pq by layout), quantizer shape, the persisted encode mode
-    and drift baseline, and row/file counts from the data table
-    (one count + one listing; no vector bytes read)."""
+    ivfpq by layout; a PQ index is ivfpq with ``n_clusters`` 1),
+    quantizer shape, the persisted encode mode and drift baseline, and
+    row/file counts from the data table (one count + one listing; no
+    vector bytes read)."""
     kind, data_dir, file_glob = _index_layout(path)
-    meta: dict = {"path": path, "kind": kind}
     centroids, codebook, encode = _read_quantizers(spark, path, kind)
-    if centroids is not None:
-        meta.update(
-            n_clusters=len(centroids),
-            dim=len(centroids[0]),
-            drift_baseline=read_drift_baseline(spark, path),
-        )
+    meta: dict = {
+        "path": path,
+        "kind": kind,
+        "n_clusters": len(centroids),
+        "dim": len(centroids[0]),
+        "drift_baseline": read_drift_baseline(spark, path),
+    }
     if codebook is not None:
         meta.update(
             m=len(codebook), ks=len(codebook[0]),
-            sub_dim=len(codebook[0][0]),
+            sub_dim=len(codebook[0][0]), encode=encode,
         )
-    if kind == "ivfpq":
-        meta["encode"] = encode
     meta["n_rows"] = spark.read.parquet(data_dir).select("neighbor_id").count()
     meta["n_files"] = FS.count_glob(file_glob)
     return meta
@@ -1630,13 +1594,16 @@ def recover_index_compaction(data_dir: str) -> str | None:
 # a 25k-term IN literal dominated a 1M probe); compaction just loops
 # waves instead of falling back, since each wave is independent.
 _COMPACT_WAVE = 2048
+# a compacted cluster keeps one file per this many bytes (compact_dir's
+# default target), so a big cluster — a PQ index's only one — is never
+# rewritten by a single task into a single file
+_COMPACT_FILE_BYTES = 128 * 1024 * 1024
 
 
 def compact_index(
     spark,
     path: str,
     files_per_cluster: int = 1,
-    target_bytes: int = 128 * 1024 * 1024,
 ) -> dict:
     """Compact an at-rest ANN index grown by the ``append_to_*``
     family WITHOUT rebuilding it — the piece that makes append-only
@@ -1647,21 +1614,18 @@ def compact_index(
     — work is O(bloated bytes), zero quantizer math, and probe results
     are unchanged (gated in tests and in the IO bench's self-check).
 
-    Kind-aware via the same layout sniffing as :func:`describe_index`:
-
-    - **ivf** / **ivfpq**: clusters with more than ``files_per_cluster``
-      data files are re-read (partition-pruned IN filter on
-      ``_cluster``, ≤ ``_COMPACT_WAVE`` clusters per job), rewritten
-      cluster-aligned (ivfpq re-sorted on ``neighbor_id`` to keep the
-      rerank's row-group skipping), staged under
-      ``{data}/_compact_tmp`` (underscore, no ``=`` — invisible to
-      partition discovery), then swapped in with per-cluster renames
-      (crash states repaired by :func:`recover_index_compaction`).
-    - **pq**: the ``codes`` and ``vectors`` tables are plain
-      directories — ``codes`` compacts round-robin to ``target_bytes``
-      files, ``vectors`` range-partitioned + re-sorted on
-      ``neighbor_id`` (tightening the min/max stats the rerank fetch
-      skips row groups with).
+    One path for every kind (PQ is IVF-PQ's one-cluster case), with the
+    data dir from the same layout sniffing as :func:`describe_index`:
+    a cluster's file bound is ``files_per_cluster``, or one file per
+    ``_COMPACT_FILE_BYTES`` of its data when that is more (a 1M-vector
+    PQ index's one cluster is a few of them). Clusters over their bound
+    are re-read (partition-pruned IN filter on ``_cluster``, ≤
+    ``_COMPACT_WAVE`` clusters per job), rewritten cluster-aligned at
+    that bound (the coded kinds re-sorted on ``neighbor_id`` to keep
+    the rerank's row-group skipping), staged under ``{data}/_compact_tmp``
+    (underscore, no ``=`` — invisible to partition discovery), then
+    swapped in with per-cluster renames (crash states repaired by
+    :func:`recover_index_compaction`).
 
     All file ops route through the Hadoop FileSystem API
     (``sources.fsutil``) — one implementation for file/hdfs/s3a. On a
@@ -1670,37 +1634,25 @@ def compact_index(
     (``_compact_tmp``/``_compact_old`` roots contain no ``=``) or
     recoverable (:func:`recover_index_compaction`). Returns
     before/after stats."""
-    from ..sources.compact import compact_dir
-
     kind, data_dir, file_glob = _index_layout(path)
-    if kind == "pq":
-        codes = compact_dir(spark, f"{path}/codes", target_bytes=target_bytes)
-        vecs = compact_dir(
-            spark,
-            f"{path}/vectors",
-            target_bytes=target_bytes,
-            sort_col="neighbor_id",
-        )
-        return {
-            "kind": "pq",
-            "files_before": codes["files"] + vecs["files"],
-            "files_after": codes["files_after"] + vecs["files_after"],
-            "compacted": codes["compacted"] + vecs["compacted"],
-        }
-
     recover_index_compaction(data_dir)
 
     # ONE listing over the data-file glob (not dir_stats: the ivf table
     # root also holds the _centroids sidecar, whose inner json files
     # would skew the count)
-    counts = {
-        int(d.split("=", 1)[1]): n for d, n in FS.files_per_dir(file_glob).items()
+    sizes: dict[int, list[int]] = {}
+    for st in FS.glob_status(file_glob):
+        c = int(st.getPath().getParent().getName().split("=", 1)[1])
+        sizes.setdefault(c, []).append(int(st.getLen()))
+    files_before = sum(len(v) for v in sizes.values())
+    bound = {
+        c: max(files_per_cluster, math.ceil(sum(v) / _COMPACT_FILE_BYTES))
+        for c, v in sizes.items()
     }
-    files_before = sum(counts.values())
-    bloated = sorted(c for c, n in counts.items() if n > files_per_cluster)
+    bloated = sorted(c for c, v in sizes.items() if len(v) > bound[c])
     stats = {
         "kind": kind,
-        "clusters_total": len(counts),
+        "clusters_total": len(sizes),
         "clusters_compacted": len(bloated),
         "files_before": files_before,
     }
@@ -1709,19 +1661,22 @@ def compact_index(
 
     tmp_root = f"{data_dir}/_compact_tmp"
     old_root = f"{data_dir}/_compact_old"
-    for wave_at in range(0, len(bloated), _COMPACT_WAVE):
-        wave = bloated[wave_at : wave_at + _COMPACT_WAVE]
-        _write_clusters(
-            spark.read.parquet(data_dir).filter(F.col("_cluster").isin(wave)),
-            tmp_root, files_per_cluster,
-        )
-        FS.mkdirs(old_root)
-        for c in wave:
-            leaf = f"{data_dir}/_cluster={c}"
-            FS.rename(leaf, f"{old_root}/_cluster={c}")
-            FS.rename(f"{tmp_root}/_cluster={c}", leaf)
-        FS.delete(old_root)
-        FS.delete(tmp_root)
+    # one salt width per wave: clusters of one bound share a wave
+    for n_files in sorted({bound[c] for c in bloated}):
+        same = [c for c in bloated if bound[c] == n_files]
+        for wave_at in range(0, len(same), _COMPACT_WAVE):
+            wave = same[wave_at : wave_at + _COMPACT_WAVE]
+            _write_clusters(
+                spark.read.parquet(data_dir).filter(F.col("_cluster").isin(wave)),
+                tmp_root, n_files,
+            )
+            FS.mkdirs(old_root)
+            for c in wave:
+                leaf = f"{data_dir}/_cluster={c}"
+                FS.rename(leaf, f"{old_root}/_cluster={c}")
+                FS.rename(f"{tmp_root}/_cluster={c}", leaf)
+            FS.delete(old_root)
+            FS.delete(tmp_root)
     return {
         **stats,
         "files_after": FS.count_glob(file_glob),
@@ -1749,7 +1704,7 @@ def maintain_index(
 
     1. measure the batch's drift under the SAVED coarse quantizer
        (``assign_drift_stats`` vs the build-time baseline the index
-       persists) — ivf/ivfpq only; a PQ index has no coarse quantizer,
+       persists) — a PQ index's one zero centroid carries no baseline,
        so its ``drift_ratio`` is None and it never auto-retrains
        (matching its documented drift surface: only ADC error grows);
     2. if ``retrain="auto"`` and the batch's mean nearest-centroid
@@ -1764,8 +1719,7 @@ def maintain_index(
     3. otherwise APPEND under the saved quantizers (the
        ``append_to_*_index`` family), then restore the file bound with
        :func:`compact_index` (probe-identical) when the worst cluster
-       exceeds ``compact_trigger x files_per_cluster`` files (PQ: when
-       either plain table exceeds ``compact_trigger`` files).
+       exceeds ``compact_trigger x files_per_cluster`` files.
 
     A no-baseline index (pre-r11 layout or no-retrain rebuild) can't
     compute the ratio, so it never auto-retrains — surfaced as
@@ -1798,14 +1752,10 @@ def maintain_index(
         return {"action": "skipped_replay", "txn": txn}
 
     kind, data_dir, file_glob = _index_layout(root)
-    has_centroids = kind != "pq"
-    centroids = read_ivf_centroids(spark, path) if has_centroids else None
-    baseline = read_drift_baseline(spark, path) if has_centroids else None
-    if centroids is not None:
-        drift = assign_drift_stats(batch, centroids, vec_col=vec_col).first()
-        n_batch, drift_mean = drift["n_vectors"], drift["mean_dist"]
-    else:
-        n_batch, drift_mean = batch.count(), None
+    centroids = read_ivf_centroids(spark, path)
+    baseline = read_drift_baseline(spark, path)
+    drift = assign_drift_stats(batch, centroids, vec_col=vec_col).first()
+    n_batch, drift_mean = drift["n_vectors"], drift["mean_dist"]
     ratio = (
         float(drift_mean) / float(baseline["mean_dist"])
         if drift_mean is not None and baseline and baseline.get("mean_dist")
@@ -1856,11 +1806,10 @@ def maintain_index(
     else:
         _append_to_index(batch, path, id_col, vec_col, files_per_cluster, txn)
         report["action"] = "appended"
-        # the trigger the semantic ingest round shares; PQ's plain
-        # tables compact to target bytes, so their bound is per table
+        # the trigger the semantic ingest round shares
         report["compacted"] = _maybe_compact_index(
             spark, root, file_glob, files_per_cluster,
-            compact_trigger * (files_per_cluster if kind != "pq" else 1),
+            compact_trigger * files_per_cluster,
         )
     report["files_after"] = FS.count_glob(file_glob)
     return report
@@ -1954,36 +1903,6 @@ def assign_and_encode_batched(
     )
 
 
-def _ivfpq_encoded(
-    corpus: DataFrame,
-    centroids,
-    codebook,
-    id_col: str,
-    vec_col: str,
-    assignment: str,
-    encode: str = "direct",
-) -> DataFrame:
-    """(neighbor_id, cvec, cn, _cluster, codes) under GIVEN quantizers
-    — the encode pass shared by index build and incremental append.
-    ``"auto"`` routes through :func:`assign_and_encode_batched` above
-    the shared thresholds; gate-scale indexes keep the pure-JVM HOF
-    maps. ``encode="residual"`` always runs batched (the residual
-    subtraction is numpy arithmetic; a HOF form would embed the full
-    centroid matrix twice)."""
-    if encode == "residual" or assignment == "auto":
-        assignment = _assign_regime(centroids, codebook, encode)
-    if assignment == "batched":
-        return assign_and_encode_batched(
-            corpus, centroids, codebook, id_col, vec_col, encode=encode
-        )
-    return corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        VX.norm(F.col(vec_col)).alias("cn"),
-        _nearest_centroid(F.col(vec_col), centroids).alias("_cluster"),
-    ).withColumn("codes", _pq_codes(F.col("cvec"), codebook, norm_col=F.col("cn")))
-
-
 def write_ivfpq_index(
     corpus: DataFrame,
     path: str,
@@ -2012,10 +1931,10 @@ def write_ivfpq_index(
       the ADC candidate scan prunes COLUMNS to (neighbor_id, codes) —
       m small ints per row, no vector bytes — while the exact rerank
       prunes PARTITIONS to the probed clusters and row-groups to the
-      candidate ids. (The PQ-alone index needs two tables because it
-      has no partition column; here a split layout would leave the
+      candidate ids. (A split codes/vectors layout would leave the
       rerank scanning every cluster — the r10 1M probe measured that
-      full vector scan as the dominant probe cost.)
+      full vector scan as the dominant probe cost.) ``write_pq_index``
+      writes this same layout with one cluster.
     - ``{path}/_centroids`` / ``{path}/_codebook``: the two quantizers,
       readable by ``read_ivf_centroids`` / ``read_pq_codebook``.
 
@@ -2051,22 +1970,17 @@ def write_ivfpq_index(
     default-built indexes rebuild consistently without it).
 
     Returns (centroids, codebook)."""
-    import json
-
     if encode not in ("auto", "direct", "residual"):
         raise ValueError(
             f"encode must be 'auto', 'direct' or 'residual', got {encode!r}"
         )
-    drift = None
-    if quantizers is not None:
-        centroids, codebook = quantizers
-        n_clusters, ks = len(centroids), len(codebook[0])
     if encode == "auto":
         # the r11 1M A/B's winner at production sizes; direct at gate
         # scale keeps small indexes byte-stable (COVERAGE.md probe)
-        encode = "residual" if n_clusters >= _BATCHED_ASSIGN_MIN_K else "direct"
-    if quantizers is None:
-        sample = _driver_sample(corpus, vec_col, train_sample, seed)
+        n = len(quantizers[0]) if quantizers is not None else n_clusters
+        encode = "residual" if n >= _BATCHED_ASSIGN_MIN_K else "direct"
+
+    def train(sample):
         if not sample:
             raise ValueError(
                 "cannot train a quantizer on an empty corpus sample — "
@@ -2076,7 +1990,6 @@ def write_ivfpq_index(
         if dim % m != 0:
             raise ValueError(f"dim {dim} not divisible by m {m} sub-quantizers")
         centroids = _fit_quantizer(sample, n_clusters, seed)
-        drift = _sample_drift_baseline(sample, centroids)
         if encode == "residual":
             # residuals are ALREADY in encode space — train as given
             codebook = pq_train(
@@ -2085,28 +1998,13 @@ def write_ivfpq_index(
             )
         else:
             codebook = pq_train(sample, dim=dim, m=m, ks=ks, seed=seed)
+        return (centroids, codebook, encode), _sample_drift_baseline(sample, centroids)
 
-    _write_clusters(
-        _ivfpq_encoded(
-            corpus, centroids, codebook, id_col, vec_col, assignment, encode=encode
-        ),
-        f"{path}/data", files_per_cluster,
+    centroids, codebook, _ = _write_index(
+        corpus, path, id_col, vec_col, train_sample, seed, assignment,
+        files_per_cluster, None if quantizers is None else (*quantizers, encode), train,
     )
-    spark = corpus.sparkSession
-    cents = [[float(x) for x in c] for c in centroids]
-    _write_centroids_meta(spark, path, cents, drift)
-    spark.createDataFrame(
-        [
-            (
-                json.dumps(
-                    [[[float(x) for x in cc] for cc in cs] for cs in codebook]
-                ),
-                encode,
-            )
-        ],
-        "codebook_json string, encode string",
-    ).coalesce(1).write.mode("overwrite").json(f"{path}/_codebook")
-    return cents, codebook
+    return centroids, codebook
 
 
 def _residual_sample(sample, centroids):
@@ -2235,18 +2133,78 @@ def ivfpq_topk_indexed(
     LUT over q' = unit(q) − unit(c_cluster) — the ADC then
     approximates ‖unit(q) − unit(v)‖² exactly as the direct mode
     does, just anchored at the cell centroid."""
+    return _topk_indexed(
+        spark, path, queries, id_col, vec_col, k, n_probe, refine, salts
+    )
+
+
+def _topk_indexed(
+    spark, path: str, queries: DataFrame, id_col: str, vec_col: str, k: int,
+    n_probe: int, refine: int | None, salts: int | None,
+) -> DataFrame:
+    """The one probe of the three index kinds: the collected probe frame
+    (:func:`_probe_frame`), a scan pruned to the probed clusters
+    (``PartitionFilters`` on ``_cluster``), then exact cosine over those
+    clusters for IVF — or, for the coded kinds, ADC candidates (salted
+    two-phase top-k, each query joining only its probed clusters' codes)
+    and the exact :func:`_indexed_rerank` of the ``k·refine``
+    survivors."""
+    kind, data_dir, _ = _index_layout(path)
+    quantizers = _read_quantizers(spark, path, kind)
+    q, probed = _probe_frame(spark, queries, quantizers, id_col, vec_col, n_probe)
+    data = spark.read.parquet(data_dir).filter(F.col("_cluster").isin(probed))
+    if quantizers[1] is None:
+        return _score_probed(data, q, k)
+    cand_rows = _pq_adc_candidates(
+        data, q, n_cand=k * refine, salts=salts, join_on="_cluster"
+    ).collect()
+    return _indexed_rerank(spark, data.select("neighbor_id", "cvec", "cn"), cand_rows, q, k)
+
+
+def _probe_frame(
+    spark, queries: DataFrame, quantizers, id_col: str, vec_col: str, n_probe: int
+) -> tuple[DataFrame, list]:
+    """The probe side of an indexed top-k — (query_id, qvec, qn,
+    _cluster[, lut]), one row per (query, probed cluster), the LUT only
+    for the coded kinds — collected ONCE and rebuilt as a local relation,
+    plus the sorted probed cluster ids. It is consumed twice (probe-id
+    list, then scoring) and is bounded by construction: queries are
+    top-k REQUESTS (n_queries × n_probe rows), so one computation and
+    no persist to leak across a long-lived session (r6 persisted here
+    and never unpersisted).
+
+    The regime is the index's write-side one (:func:`_assign_regime`):
+    a corpus assigned by the batched regime is always probed by it too.
+    There the probe ids and the LUT (:func:`_np_lut`) compute
+    driver-side in numpy over the collected query rows — the HOF forms
+    embed the centroid matrix / codebook as plan constants, and the
+    r10 1M probes measured their query-side plan overhead in seconds.
+    Same tie policy ((distance, cluster-id) ascending) and NULL-vector
+    queries drop, as in :func:`_probed_queries`. A residual index
+    builds one LUT per (query, probed cluster), over unit(q) −
+    unit(c_cluster).
+
+    An exhaustive HOF probe (``n_probe`` ≥ the cluster count, as every
+    probe of a one-cluster PQ index is) already knows its probed ids,
+    so its frame stays lazy and nothing is collected."""
     import numpy as np
 
     from pyspark.sql import types as T
 
-    centroids, codebook, enc_mode = _read_quantizers(spark, path, "ivfpq")
-    cb = np.asarray(codebook, dtype=np.float64)
-    m, ks, sub = cb.shape
-    # the write-side regime: a corpus assigned by the batched regime is
-    # always probed by it too
-    if _assign_regime(centroids, codebook, enc_mode) == "batched":
+    centroids, codebook, encode = quantizers
+    if _assign_regime(*quantizers) == "hof":
+        q_plan = _probed_queries(queries, centroids, id_col, vec_col, n_probe)
+        if codebook is not None:
+            q_plan = q_plan.withColumn(
+                "lut", _pq_lut(F.col("qvec"), codebook, norm_col=F.col("qn"))
+            )
+        if n_probe >= len(centroids):
+            return q_plan, list(range(len(centroids)))
+        rows, schema = q_plan.collect(), q_plan.schema
+    else:
         c = np.asarray(centroids, dtype=np.float64)
-        cu = _unit_centroids(centroids).astype(np.float64)
+        cb = None if codebook is None else np.asarray(codebook, dtype=np.float64)
+        cu = _unit_centroids(centroids).astype(np.float64) if encode == "residual" else None
         rows = []
         for r in queries.select(id_col, vec_col).collect():
             v = r[vec_col]
@@ -2257,46 +2215,24 @@ def ivfpq_topk_indexed(
             order = np.lexsort((np.arange(len(c)), d2))[:n_probe]
             qn = float(np.sqrt((v64 * v64).sum()))
             unit = v64 / (qn if qn != 0 else 1.0)
-            if enc_mode == "residual":
-                for cl in order:
-                    qr = unit - cu[cl]
-                    lut = [
-                        ((cb[mi] - qr[mi * sub : (mi + 1) * sub]) ** 2).sum(-1).tolist()
-                        for mi in range(m)
-                    ]
-                    rows.append((r[id_col], v, qn, int(cl), lut))
-                continue
-            lut = [
-                ((cb[mi] - unit[mi * sub : (mi + 1) * sub]) ** 2).sum(-1).tolist()
-                for mi in range(m)
-            ]
-            rows.extend((r[id_col], v, qn, int(cl), lut) for cl in order)
-        schema = T.StructType(
-            [
-                T.StructField("query_id", queries.schema[id_col].dataType, True),
-                T.StructField("qvec", queries.schema[vec_col].dataType, True),
-                T.StructField("qn", T.DoubleType(), True),
-                T.StructField("_cluster", T.IntegerType(), True),
-                T.StructField(
-                    "lut", T.ArrayType(T.ArrayType(T.DoubleType(), True), True), True
-                ),
-            ]
-        )
-        q = spark.createDataFrame(rows, schema)
-        probed = sorted({r[3] for r in rows})
-    else:
-        q_plan = _probed_queries(queries, centroids, id_col, vec_col, n_probe).withColumn(
-            "lut", _pq_lut(F.col("qvec"), codebook, norm_col=F.col("qn"))
-        )
-        q_rows = q_plan.collect()
-        q = spark.createDataFrame(q_rows, q_plan.schema)
-        probed = sorted({r["_cluster"] for r in q_rows})
-    data = spark.read.parquet(f"{path}/data").filter(F.col("_cluster").isin(probed))
-    cand_rows = _pq_adc_candidates(
-        data, q, n_cand=k * refine, salts=salts, join_on="_cluster"
-    ).collect()
-    vectors = data.select("neighbor_id", "cvec", "cn")
-    return _indexed_rerank(spark, vectors, cand_rows, q, k)
+            lut = _np_lut(cb, unit) if cb is not None and cu is None else None
+            for cl in order:
+                row = (r[id_col], v, qn, int(cl))
+                if cb is not None:
+                    row += (lut if cu is None else _np_lut(cb, unit - cu[cl]),)
+                rows.append(row)
+        fields = [
+            T.StructField("query_id", queries.schema[id_col].dataType, True),
+            T.StructField("qvec", queries.schema[vec_col].dataType, True),
+            T.StructField("qn", T.DoubleType(), True),
+            T.StructField("_cluster", T.IntegerType(), True),
+        ]
+        if cb is not None:
+            fields.append(T.StructField(
+                "lut", T.ArrayType(T.ArrayType(T.DoubleType(), True), True), True
+            ))
+        schema = T.StructType(fields)
+    return spark.createDataFrame(rows, schema), sorted({r[3] for r in rows})
 
 
 def _assign_regime(centroids, codebook=None, encode=None) -> str:
@@ -2642,7 +2578,7 @@ def semantic_dedup_against(
     should use :func:`semantic_ingest_round`, which owns this
     release internally per round."""
     spark = batch.sparkSession
-    kind, data_dir, _ = _semantic_index(path, "semantic_dedup_against")
+    kind, data_dir, _ = _semantic_index(path)
     centroids = read_ivf_centroids(spark, path)
     regime = _index_assign_regime(spark, path, kind == "ivfpq", centroids)
     # the returned frame is lazy, so the matmul broadcast (if any)
@@ -2659,16 +2595,11 @@ def semantic_dedup_against(
     return (survivors, release) if return_release else survivors
 
 
-def _semantic_index(path: str, caller: str) -> tuple[str, str, str]:
-    """:func:`_index_layout` of the index a semantic probe runs against
-    — refused for a flat PQ table, and repaired first if a compaction
-    crashed mid-swap (never trust a mid-swap table)."""
+def _semantic_index(path: str) -> tuple[str, str, str]:
+    """:func:`_index_layout` of the index a semantic probe runs against,
+    repaired first if a compaction crashed mid-swap (never trust a
+    mid-swap table)."""
     kind, data_dir, file_glob = _index_layout(path)
-    if kind == "pq":
-        raise ValueError(
-            f"{caller} needs a cluster-partitioned index (ivf, ivfpq) — a "
-            "flat PQ table has no coarse quantizer to probe with"
-        )
     recover_index_compaction(data_dir)
     return kind, data_dir, file_glob
 
@@ -2676,10 +2607,9 @@ def _semantic_index(path: str, caller: str) -> tuple[str, str, str]:
 def _maybe_compact_index(
     spark, path: str, file_glob: str, files_per_cluster: int, bound: float
 ) -> int:
-    """Trigger-gated :func:`compact_index`: compact when the data dir
-    holding the most files (a cluster; a PQ table) exceeds ``bound``
-    — one globStatus listing over ``file_glob`` (from
-    :func:`_index_layout`)."""
+    """Trigger-gated :func:`compact_index`: compact when the cluster
+    holding the most files exceeds ``bound`` — one globStatus listing
+    over ``file_glob`` (from :func:`_index_layout`)."""
     if max(FS.files_per_dir(file_glob).values(), default=0) > bound:
         return compact_index(spark, path, files_per_cluster=files_per_cluster)[
             "compacted"
@@ -2741,7 +2671,7 @@ def semantic_ingest_round(
 
     spark = batch.sparkSession
     root = path.rstrip("/")
-    kind, data_dir, file_glob = _semantic_index(root, "semantic_ingest_round")
+    kind, data_dir, file_glob = _semantic_index(root)
     quantizers = _read_quantizers(spark, root, kind)
     centroids = quantizers[0]
     regime = _assign_regime(*quantizers)
@@ -2755,7 +2685,7 @@ def semantic_ingest_round(
 
     def write_rows(survivors: DataFrame, stage: str) -> None:
         _write_index_rows(
-            survivors, stage, kind, quantizers, id_col, vec_col, files_per_cluster
+            survivors, stage, quantizers, id_col, vec_col, files_per_cluster
         )
 
     return _txn_ingest_round(
@@ -2790,7 +2720,7 @@ def _semantic_round_edges(
 
 def delete_from_index(spark, path: str, ids: DataFrame) -> dict:
     """Right-to-be-forgotten for the at-rest ANN indexes: hard-delete
-    vectors by id from an IVF or IVF-PQ index via the partition-pruned
+    vectors by id from an IVF, IVF-PQ or PQ index via the partition-pruned
     deletion plan (``sources.forget``) — one column-pruned
     (neighbor_id, _cluster) scan finds the deleted vectors' clusters,
     only those cluster partitions rewrite; probes never see the ids
@@ -2800,22 +2730,11 @@ def delete_from_index(spark, path: str, ids: DataFrame) -> dict:
     more data than remains is still a valid (if slightly stale)
     coarse quantizer, exactly the append case's mirror image — the
     drift criterion in ``append_to_ivf_index`` governs retrain timing
-    for both directions.
-
-    PQ's flat codes/vectors tables are refused: they carry no
-    partition column to prune, so deletion there is a filtered rewrite
-    of both tables (compact_dir with a filter) — at 100 TB that is a
-    different operation and silently doing it here would hide an
-    O(table) cost behind a delete call."""
+    for both directions. A PQ index is one cluster, so a delete there
+    rewrites that whole partition: O(index), as its probe is."""
     from ..sources.forget import delete_rows_partitioned
 
     kind, data_dir, _ = _index_layout(path)
-    if kind == "pq":
-        raise ValueError(
-            "delete_from_index supports cluster-partitioned indexes (ivf, "
-            "ivfpq); a flat PQ table needs a filtered rewrite of codes AND "
-            "vectors (compact_dir) — an O(table) operation this API won't hide"
-        )
     # quiescence guard (same contract as dedup.forget_documents): a
     # crashed-but-uncommitted streamed append holds a frozen staging
     # whose remaining moves target these cluster partitions —

@@ -1433,11 +1433,12 @@ def emb_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     "emb_pq_pruned",
     oracle=_ANN_GATE_ORACLE,
     doc="PQ index AT REST (operators/similarity.py write_pq_index / "
-    "pq_topk_indexed): the codes table persisted as (id, codes) parquet "
-    "— m small ints per vector, PQ's compression made real ON DISK: the "
-    "candidate scan's ReadSchema carries no embedding column — with the "
-    "full vectors in a second id-sorted table read only for the "
-    "k·refine rerank ids through a pushed IN filter (both asserted in "
+    "pq_topk_indexed): an IVF-PQ index with ONE cluster, its rows "
+    "(id, vector, norm, codes) id-sorted parquet under data/_cluster=0 — "
+    "m small ints per vector, PQ's compression made real ON DISK: the "
+    "candidate scan's ReadSchema carries no embedding column, and the "
+    "vector columns are read only for the k·refine rerank ids through "
+    "a pushed IN filter (both asserted in "
     "tests/test_plans.py). Same codebook/seed as emb_pq_topk, so the "
     "same cardinality + recall@5 gate applies; result parity with the "
     "in-memory pq_topk is pinned exactly in tests/test_llm_ops.py.",

@@ -112,40 +112,21 @@ def compact_dir(
     fmt: str = "parquet",
     target_bytes: int = 128 * 1024 * 1024,
     min_files: int = 2,
-    sort_col: str | None = None,
-    n_files: int | None = None,
 ) -> dict[str, int]:
     """Rewrite ``path`` (one non-partitioned dataset directory) into
     ~``target_bytes`` files. No-op if it already has fewer than
-    ``min_files`` files. Returns before/after stats.
-
-    ``sort_col``: preserve (and tighten) a sorted-within-files layout —
-    the rewrite range-partitions on the column and sorts within
-    partitions, so per-file row-group min/max stats stay selective for
-    id-fetch scans (the PQ ``vectors`` table's contract). Round-robin
-    ``repartition`` would destroy that ordering.
-
-    ``n_files``: exact output file count override (e.g. an index's
-    ``files_per_cluster``) instead of the size-derived count."""
+    ``min_files`` files. Returns before/after stats."""
     recover_compaction(path)
     before = dir_stats(path)
     if before["files"] < min_files:
         return {**before, "files_after": before["files"], "compacted": 0}
 
-    n_out = n_files if n_files else max(1, math.ceil(before["bytes"] / target_bytes))
+    n_out = max(1, math.ceil(before["bytes"] / target_bytes))
     if n_out >= before["files"]:  # already at/under target size
         return {**before, "files_after": before["files"], "compacted": 0}
 
     tmp, old = _staging_paths(path)
-    df = spark.read.format(fmt).load(path)
-    if sort_col is not None:
-        df = (
-            df.repartitionByRange(n_out, sort_col).sortWithinPartitions(sort_col)
-            if n_out > 1
-            else df.coalesce(1).sortWithinPartitions(sort_col)
-        )
-    else:
-        df = df.repartition(n_out)
+    df = spark.read.format(fmt).load(path).repartition(n_out)
     df.write.format(fmt).mode("overwrite").save(tmp)
 
     FS.rename(path, old)

@@ -214,8 +214,9 @@ def dir_stats(path: str, spark: SparkSession | None = None) -> dict[str, int]:
 
 
 def write_text(path: str, text: str, spark: SparkSession | None = None) -> None:
-    """Create (overwrite) a small control file — ledger markers and
-    staging manifests; NOT a data path. Parent dirs are created."""
+    """Create (overwrite) a small control file — ledger markers,
+    staging manifests and ANN index sidecars; NOT a data path. Parent
+    dirs are created."""
     fs, p = fs_and_path(path, spark)
     out = fs.create(p, True)
     try:

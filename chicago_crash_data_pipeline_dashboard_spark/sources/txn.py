@@ -1,9 +1,10 @@
 """The one append path of every at-rest table: the staged-move ledger.
 Six tables grow batch by batch through it — the three ANN index kinds
-(operators/similarity.py: IVF, IVF-PQ, PQ) and the three signature
-families (operators/dedup.py: MinHash banded, exact fingerprints,
-SimHash segments) — and every append and ingest round of them, keyed
-or not, runs :func:`staged_append`.
+(operators/similarity.py: IVF, IVF-PQ, and PQ as one-cluster IVF-PQ,
+all cluster-partitioned) and the three signature families
+(operators/dedup.py: MinHash banded, exact fingerprints, SimHash
+segments) — and every append and ingest round of them, keyed or not,
+runs :func:`staged_append`.
 
 foreachBatch is AT-LEAST-ONCE: a crash after an append succeeds but
 before the stream checkpoint commits replays the same micro-batch on
@@ -125,7 +126,7 @@ def ledger_txn(table_root: str, txn: str | None, owned=lambda key: ()):
 
 
 def staged_append(
-    table_root: str, txn: str | None, write_stage, routes=None, order_key=None
+    table_root: str, txn: str | None, write_stage, routes=None
 ) -> bool:
     """Run the staged-move protocol above under ``txn`` (or an
     anonymous id, :func:`ledger_txn`). ``write_stage(stage_dir)``
@@ -133,10 +134,8 @@ def staged_append(
     own layout: a staged data file ``{dir}/{file}`` moves to
     ``{table_root}/{dir}/{txn prefix}{file}``. ``routes`` maps a
     top-level stage subdir to a destination dir of its own (the
-    ingest round's survivor record), ``order_key`` orders the moves
-    (PQ moves ``vectors/`` before ``codes/`` so even the transient
-    crash window keeps the invisible-state invariant). Returns False
-    when the txn had already committed (replay), True otherwise."""
+    ingest round's survivor record). Returns False when the txn had
+    already committed (replay), True otherwise."""
     root = table_root.rstrip("/")
     routes = routes or {}
     with ledger_txn(root, txn) as txn:
@@ -165,8 +164,7 @@ def staged_append(
                     p.split(token, 1)[1]
                     for p in FS.glob_paths(f"{stage}/*/*.parquet")
                     + FS.glob_paths(f"{stage}/*/*/*.parquet")
-                ),
-                key=order_key,
+                )
             )
             FS.write_text(manifest, json.dumps(rels))
         else:

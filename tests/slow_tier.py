@@ -49,7 +49,7 @@ SLOW_TESTS = frozenset([
     "tests/test_analytics_oracle.py::test_query_matches_oracle[streaming_ingest_e2e]",  # 16s
     "tests/test_forget.py::test_bare_txn_appends_replay_idempotent",  # 32s
     "tests/test_forget.py::test_bucket_size_refresh_never_newly_drops_multi_segment_buckets",  # 15s
-    "tests/test_forget.py::test_delete_from_ivfpq_index_and_pq_refusal",  # 48s
+    "tests/test_forget.py::test_delete_from_ivfpq_and_pq_index",  # 48s
     "tests/test_forget.py::test_forget_documents_simhash_layout",  # 14s
     "tests/test_forget.py::test_forget_nodes_relabels_and_preserves_star_property",  # 35s
     "tests/test_forget.py::test_forget_refreshes_bucket_size_stats",  # 13s
@@ -101,7 +101,6 @@ SLOW_TESTS = frozenset([
     "tests/test_plans.py::test_signature_table_probe_prunes_partitions",  # 15s
     "tests/test_plans.py::test_txn_append_completes_partial_move",  # 9s
     "tests/test_plans.py::test_txn_append_exactly_once_under_replay",  # 11s
-    "tests/test_plans.py::test_txn_pq_append_moves_vectors_first",  # 13s
     "tests/test_properties.py::test_dedup_exact_against_matches_set_model",  # 27s
     "tests/test_properties.py::test_explode_pairs_matches_itertools_combinations",  # 8s
     "tests/test_properties.py::test_extend_components_matches_full_recompute",  # 26s

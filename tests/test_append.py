@@ -113,8 +113,8 @@ APPENDERS = {
         ),
         SIM.append_to_pq_index,
         lambda spark, p, q: _rows(SIM.pq_topk_indexed(spark, p, q, k=3)),
-        "*/*.parquet", True,
-        (SIM, "_write_pq_tables", None), None,
+        "data/_cluster=*/*.parquet", True,
+        (SIM, "_cluster_aligned", "neighbor_id"), SIM.delete_from_index,
     ),
     "ivfpq": (
         _vecs, "vec_id",

@@ -100,10 +100,8 @@ def test_forget_documents_simhash_layout(spark, tmp_path):
             assert (i, i + 500) in got
 
 
-def test_delete_from_ivfpq_index_and_pq_refusal(spark, tmp_path):
+def test_delete_from_ivfpq_and_pq_index(spark, tmp_path):
     import numpy as np
-
-    import pytest
 
     rng = np.random.RandomState(11)
     full = spark.createDataFrame(
@@ -128,11 +126,18 @@ def test_delete_from_ivfpq_index_and_pq_refusal(spark, tmp_path):
     want = SIM.ivfpq_topk_indexed(spark, rebuilt, q, k=5, n_probe=4, refine=8)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
+    # PQ is one cluster: the same delete equals a same-codebook rebuild
     pq = str(tmp_path / "pq")
-    SIM.write_pq_index(full, pq, id_col="vec_id", vec_col="embedding",
-                       dim=16, m=8, ks=16, seed=42)
-    with pytest.raises(ValueError, match="cluster-partitioned"):
-        SIM.delete_from_index(spark, pq, doomed.select("vec_id"))
+    cb = SIM.write_pq_index(full, pq, id_col="vec_id", vec_col="embedding",
+                            dim=16, m=8, ks=16, seed=42)
+    st = SIM.delete_from_index(spark, pq, doomed.select("vec_id"))
+    assert st["kind"] == "ivfpq" and st["rows_deleted"] == doomed.count()
+    pq_rebuilt = str(tmp_path / "pq_rebuilt")
+    SIM.write_pq_index(survivors, pq_rebuilt, codebook=cb)
+    got = SIM.pq_topk_indexed(spark, pq, q, k=5, refine=8)
+    want = SIM.pq_topk_indexed(spark, pq_rebuilt, q, k=5, refine=8)
+    assert not ({r.neighbor_id for r in got.collect()} & doomed_ids)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
 def test_forget_nodes_relabels_and_preserves_star_property(spark, tmp_path):

@@ -949,8 +949,8 @@ def test_compact_index_ivfpq_keeps_sort_and_probe(spark, tmp_path):
 
 
 def test_compact_index_pq_tables(spark, tmp_path):
-    """PQ compaction: codes compacts round-robin, vectors re-sorts on
-    neighbor_id (globally range-partitioned); probes unchanged."""
+    """PQ compaction: the one cluster compacts like any IVF-PQ
+    cluster; probes unchanged."""
     import glob as globmod
 
     from chicago_crash_data_pipeline_dashboard_spark.operators import similarity as SIM
@@ -963,10 +963,35 @@ def test_compact_index_pq_tables(spark, tmp_path):
     q = full.filter(F.col("vec_id") < 8)
     before = sorted(map(tuple, SIM.pq_topk_indexed(spark, path, q, k=5, refine=4).collect()))
     stats = SIM.compact_index(spark, path)
-    assert stats["kind"] == "pq"
-    assert stats["compacted"] == 2
-    assert len(globmod.glob(f"{path}/codes/*.parquet")) == 1
-    assert len(globmod.glob(f"{path}/vectors/*.parquet")) == 1
+    assert stats["kind"] == "ivfpq"
+    assert stats["compacted"] == 1
+    assert len(globmod.glob(f"{path}/data/_cluster=0/*.parquet")) == 1
+    after = sorted(map(tuple, SIM.pq_topk_indexed(spark, path, q, k=5, refine=4).collect()))
+    assert before == after
+
+
+def test_pq_index_files_follow_input_and_size(spark, tmp_path, monkeypatch):
+    """A PQ index's one cluster is written with the corpus's parallelism
+    (not funnelled through one task into one file), and compaction
+    leaves it alone while it holds no more files than one per
+    _COMPACT_FILE_BYTES; probes unchanged."""
+    from chicago_crash_data_pipeline_dashboard_spark.operators import similarity as SIM
+    from chicago_crash_data_pipeline_dashboard_spark.sources import fsutil as FS
+
+    full = _rand_vec_frame(spark, 35, n=400).repartition(4)
+    path = str(tmp_path / "pq")
+    SIM.write_pq_index(full, path, dim=16, m=4, ks=8, seed=42)
+    part = f"{path}/data/_cluster=0"
+    assert len(FS.glob_paths(f"{part}/*.parquet")) == 4
+
+    q = full.filter(F.col("vec_id") < 8)
+    before = sorted(map(tuple, SIM.pq_topk_indexed(spark, path, q, k=5, refine=4).collect()))
+    monkeypatch.setattr(SIM, "_COMPACT_FILE_BYTES", FS.dir_stats(part)["bytes"] // 4 + 1)
+    assert SIM.compact_index(spark, path)["compacted"] == 0
+    assert len(FS.glob_paths(f"{part}/*.parquet")) == 4
+    monkeypatch.undo()
+    assert SIM.compact_index(spark, path)["compacted"] == 1
+    assert len(FS.glob_paths(f"{part}/*.parquet")) == 1
     after = sorted(map(tuple, SIM.pq_topk_indexed(spark, path, q, k=5, refine=4).collect()))
     assert before == after
 
@@ -1146,7 +1171,7 @@ def test_pq_append_equals_rebuild_with_saved_codebook(spark, tmp_path):
     want = SIM.pq_topk_indexed(spark, rebuilt, q, k=5, refine=4).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
     assert len(got) == 8 * 5
-    ids = {r.neighbor_id for r in spark.read.parquet(f"{grown}/codes").collect()}
+    ids = {r.neighbor_id for r in spark.read.parquet(f"{grown}/data").collect()}
     assert ids == set(range(240))
 
 
@@ -1240,7 +1265,8 @@ def test_describe_index_reports_all_three_kinds(spark, tmp_path):
     p = str(tmp_path / "pq")
     SIM.write_pq_index(df, p, dim=8, m=4, ks=8, seed=42)
     d = SIM.describe_index(spark, p)
-    assert d["kind"] == "pq" and d["m"] == 4 and d["ks"] == 8 and d["sub_dim"] == 2
+    assert d["kind"] == "ivfpq" and d["n_clusters"] == 1
+    assert d["m"] == 4 and d["ks"] == 8 and d["sub_dim"] == 2
     assert d["n_rows"] == 120
 
     p = str(tmp_path / "ivfpq")
@@ -1248,6 +1274,25 @@ def test_describe_index_reports_all_three_kinds(spark, tmp_path):
     d = SIM.describe_index(spark, p)
     assert d["kind"] == "ivfpq" and d["encode"] == "direct"
     assert d["n_clusters"] == 4 and d["m"] == 4 and d["n_rows"] == 120
+
+
+def test_non_index_path_is_refused(spark, tmp_path):
+    """A plain parquet table is no ANN index: compact_index and
+    describe_index refuse it, naming the path and the missing
+    _centroids sidecar, instead of reading it as a flat PQ index (a
+    silent no-op compaction, a PATH_NOT_FOUND on _codebook)."""
+    import re
+
+    import pytest
+
+    from chicago_crash_data_pipeline_dashboard_spark.operators import similarity as SIM
+
+    path = str(tmp_path / "plain")
+    spark.range(40).repartition(4).write.parquet(path)
+    for call in (SIM.compact_index, SIM.describe_index):
+        with pytest.raises(ValueError, match=re.escape(path)) as err:
+            call(spark, path)
+        assert "_centroids" in str(err.value) and "write_pq_index" in str(err.value)
 
 
 def test_maintain_index_policy_round_ivf(spark, tmp_path):
@@ -1352,9 +1397,9 @@ def test_maintain_index_recovers_crashed_retrain_swap(spark, tmp_path):
 
 
 def test_maintain_index_pq_and_ivfpq_kinds(spark, tmp_path):
-    """The policy is kind-dispatched: a PQ index (no coarse quantizer)
-    reports drift_ratio None and never auto-retrains, compacting its
-    two plain tables once the trigger trips; an IVF-PQ index retrains
+    """The policy is kind-dispatched: a PQ index (one cluster, no drift
+    baseline) reports drift_ratio None and never auto-retrains,
+    compacting its cluster once the trigger trips; an IVF-PQ index retrains
     on drift with BOTH quantizers refit and its persisted encode mode
     carried through the swap."""
     import glob as globmod
@@ -1380,11 +1425,11 @@ def test_maintain_index_pq_and_ivfpq_kinds(spark, tmp_path):
         )
         for lo in (200, 240, 280, 320)
     ]
-    assert all(r["kind"] == "pq" and r["action"] == "appended" for r in reports)
+    assert all(r["kind"] == "ivfpq" and r["action"] == "appended" for r in reports)
     assert all(r["drift_ratio"] is None for r in reports)  # never auto-retrains
     assert any(r["compacted"] for r in reports)
-    assert len(globmod.glob(f"{pq_path}/codes/*.parquet")) <= 3
-    ids = {r.neighbor_id for r in spark.read.parquet(f"{pq_path}/codes").collect()}
+    assert len(globmod.glob(f"{pq_path}/data/_cluster=0/*.parquet")) <= 3
+    ids = {r.neighbor_id for r in spark.read.parquet(f"{pq_path}/data").collect()}
     assert ids == set(range(360))
 
     ivfpq_path = str(tmp_path / "ivfpq_ops")
@@ -1525,53 +1570,6 @@ def test_txn_append_completes_partial_move(spark, tmp_path):
     assert SIM.txn_committed(path, "cpy-b0")
 
 
-def test_txn_pq_append_moves_vectors_first(spark, tmp_path):
-    """PQ's two-table append keeps the invisible-crash-state invariant
-    under txn staging: vectors move before codes, so a crash between
-    them leaves vectors-without-codes (invisible to the ADC pass) —
-    never codes whose rerank fetch comes up empty."""
-    import unittest.mock as mock
-
-    import pytest
-
-    from chicago_crash_data_pipeline_dashboard_spark.operators import similarity as SIM
-    from chicago_crash_data_pipeline_dashboard_spark.sources import fsutil
-
-    full = _txn_corpus(spark, seed=62)
-    path = str(tmp_path / "pq_txn")
-    SIM.write_pq_index(full.filter(F.col("vec_id") < 200), path, dim=16, m=4, ks=8, seed=42)
-    batch = full.filter(F.col("vec_id") >= 200)
-    n_codes_before = spark.read.parquet(f"{path}/codes").count()
-
-    real_rename = fsutil.rename
-
-    def crash_on_codes(src, dst, spark_=None):
-        if "/_ingest_tmp/" in src and "/codes/" in src:
-            raise OSError("injected crash before codes move")
-        return real_rename(src, dst, spark_)
-
-    # route bulk_rename's pairs (r15 ledger move loop) through the
-    # per-file injector — order_key still moves vectors before codes
-    def crash_on_codes_bulk(pairs, spark_=None, skip_existing=False):
-        for src, dst in pairs:
-            crash_on_codes(src, dst, spark_)
-        return len(pairs)
-
-    with mock.patch.object(fsutil, "bulk_rename", crash_on_codes_bulk):
-        with pytest.raises(OSError, match="injected"):
-            SIM.append_to_pq_index(batch, path, txn="cpz-b0")
-
-    # crash window: codes table untouched (probe-consistent); any
-    # moved vectors rows are invisible to the ADC candidate pass
-    assert spark.read.parquet(f"{path}/codes").count() == n_codes_before
-
-    SIM.append_to_pq_index(batch, path, txn="cpz-b0")
-    assert spark.read.parquet(f"{path}/codes").count() == 250
-    assert spark.read.parquet(f"{path}/vectors").count() == 250
-    got = SIM.pq_topk_indexed(spark, path, batch.limit(3), k=3, refine=6)
-    assert got.count() == 3 * 3
-
-
 def test_maintain_index_txn_skips_replay_and_retrain_marker_is_atomic(
     spark, tmp_path
 ):
@@ -1615,9 +1613,8 @@ def test_semantic_dedup_against_index(spark, tmp_path):
     probe equals brute force (drops exactly the rows with a >=threshold
     corpus partner), the pruned probe still drops every EXACT clone
     (identical vectors share a nearest-centroid list), the non-broadcast
-    path agrees, and flat PQ tables are refused."""
+    path agrees, and a PQ index (one cluster) probes exhaustively."""
     import numpy as np
-    import pytest
     from pyspark.sql import functions as F
 
     from chicago_crash_data_pipeline_dashboard_spark.operators import (
@@ -1668,13 +1665,13 @@ def test_semantic_dedup_against_index(spark, tmp_path):
     }
     assert got_nb == got
 
-    # flat PQ: no coarse quantizer to prune with — refused
+    # PQ: one cluster, so every probe is exhaustive — brute force
     pq = str(tmp_path / "pq")
     SIM.write_pq_index(
         corpus, pq, id_col="vec_id", vec_col="embedding", dim=16, m=8, ks=16, seed=42
     )
-    with pytest.raises(ValueError, match="cluster-partitioned"):
-        SIM.semantic_dedup_against(batch, pq, threshold=0.99)
+    got_pq = SIM.semantic_dedup_against(batch, pq, threshold=0.99)
+    assert {r.vec_id for r in got_pq.select("vec_id").collect()} == got
 
     # large-k regime: at >= _BATCHED_ASSIGN_MIN_K clusters the index is
     # numpy-assigned at write time and the probe MUST use the matched
