@@ -23,12 +23,14 @@ drop pathological buckets the way production near-dup pipelines do.
 from __future__ import annotations
 
 import random
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
 from ..functions import vectors as VX
+from ..sources import fsutil as FS
 
 # Universal-hash modulus: the Mersenne prime 2^31-1. Token hashes are
 # 32-bit; (a·(h mod p) + b) mod p with a,b < p keeps every product
@@ -470,16 +472,10 @@ def minhash_near_duplicates(
     from this path (literal clones still surface via ``dedup_exact``).
     Dropping candidates is a behavior choice, so callers opt in
     explicitly (the driver gates pass max_bucket=1000)."""
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by bands ({bands}); "
-            "trailing signature positions would be silently dropped"
-        )
-    rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n, seed, hash_mode)
-    banded = sigs.select(
-        "doc", "signature", F.explode(_band_structs(bands, rows_per_band)).alias("bb")
-    ).select("doc", "signature", "bb.band", "bb.bucket")
+    banded = _banded_signatures(df, id_col, text_col, {
+        "num_hashes": num_hashes, "bands": bands, "shingle_n": shingle_n,
+        "seed": seed, "hash_mode": hash_mode,
+    })
     buckets = (
         banded.groupBy("band", "bucket")
         .agg(F.sort_array(F.collect_list(F.struct("doc", "signature"))).alias("docs"))
@@ -493,16 +489,7 @@ def minhash_near_duplicates(
             F.col("y.doc").alias("doc_b"),
             F.col("y.signature").alias("sig_b"),
         )
-        .withColumn(
-            "est_jaccard",
-            F.size(
-                F.filter(
-                    F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-                    lambda v: v == 1,
-                )
-            ).cast("double")
-            / F.lit(num_hashes),
-        )
+        .withColumn("est_jaccard", _est_jaccard("sig_a", "sig_b", num_hashes))
     )
     return (
         est.filter(F.col("est_jaccard") >= threshold)
@@ -511,13 +498,162 @@ def minhash_near_duplicates(
     )
 
 
+def _est_jaccard(sig_a: str, sig_b: str, num_hashes: int):
+    """Signature-estimated Jaccard of two MinHash signature columns:
+    the fraction of equal positions."""
+    return F.size(
+        F.filter(
+            F.zip_with(sig_a, sig_b, lambda x, y: (x == y).cast("int")),
+            lambda v: v == 1,
+        )
+    ).cast("double") / F.lit(num_hashes)
+
+
+# --------------------------------------------------------------------------
+# Cross-run signature tables at rest — MinHash bands (``banded``), exact
+# fingerprints (``fingerprints``), SimHash segments (``segments``): one
+# table body, one descriptor per family.
+# --------------------------------------------------------------------------
+
+
+class _SigTable(NamedTuple):
+    """One family of the cross-run dedup tables. All three share the
+    layout: the rows ``rows(df, id_col, text_col, params)`` builds, keyed
+    by the bucket-key columns ``keys``, stored as parquet
+    ``partitionBy(part = pmod(xxhash64(keys), parts))`` under
+    ``{path}/{sub}``, beside a ``{path}/_params`` sidecar that pins the
+    params they were computed under. ``bucket_size`` says whether each
+    row carries its bucket's write-time row count (the probe's
+    hot-bucket cap)."""
+
+    sub: str
+    keys: tuple[str, ...]
+    bucket_size: bool
+    rows: Callable[..., DataFrame]
+
+
+def _read_params(spark, path: str) -> dict:
+    """The params pinned in the ``{path}/_params`` sidecar of a
+    signature or components table — a driver-side read, no Spark job.
+    Tables written before ``files_per_part`` was pinned carry none: 1."""
+    p = FS.read_sidecar(f"{path}/_params", spark)
+    return {**p, "files_per_part": p.get("files_per_part") or 1}
+
+
+def _with_part(rows: DataFrame, t: _SigTable, parts: int) -> DataFrame:
+    """``rows`` plus the hive partition key ``part`` of their bucket."""
+    return rows.withColumn(
+        "part", F.pmod(F.xxhash64(*t.keys), F.lit(parts)).cast("int")
+    )
+
+
+def _part_aligned(rows: DataFrame, files_per_part: int, *sort_cols: str) -> DataFrame:
+    """Repartition on ``part`` (+ a doc-hash salt when ``files_per_part``
+    > 1) and sort within partitions — the file-count discipline of all
+    three signature tables: each write adds at most ``files_per_part``
+    files per touched partition (without it, tasks × parts files)."""
+    if files_per_part > 1:
+        salt = F.pmod(F.xxhash64("doc"), F.lit(files_per_part))
+        rows = rows.repartition(F.col("part"), salt)
+    else:
+        rows = rows.repartition(F.col("part"))
+    return rows.sortWithinPartitions("part", *sort_cols)
+
+
+def _write_rows(
+    t: _SigTable, df: DataFrame, id_col: str, text_col: str, out: str,
+    p: dict, files_per_part: int,
+) -> None:
+    """The one row writer of the three families: ``df``'s rows under
+    the table's params ``p`` with their ``part``, the per-write-segment
+    ``bucket_size`` window when the family has one, then the
+    part-aligned partitioned write of ``{out}/{t.sub}``. The initial
+    write, the append and the ingest round's stage all call it."""
+    rows = _with_part(t.rows(df, id_col, text_col, p), t, p["parts"])
+    if t.bucket_size:
+        rows = rows.withColumn(
+            "bucket_size", F.count(F.lit(1)).over(Window.partitionBy(*t.keys))
+        )
+    _part_aligned(rows, files_per_part, *t.keys).write.partitionBy("part").mode(
+        "overwrite"
+    ).parquet(f"{out}/{t.sub}")
+
+
+def _write_table(
+    t: _SigTable, df: DataFrame, path: str, id_col: str, text_col: str, p: dict
+) -> None:
+    """Write the whole table: its rows, then the ``_params`` sidecar."""
+    _write_rows(t, df, id_col, text_col, path, p, p["files_per_part"])
+    FS.write_sidecar(f"{path}/_params", p, df.sparkSession)
+
+
+def _append_rows(
+    t: _SigTable, batch: DataFrame, path: str, id_col: str, text_col: str,
+    files_per_part: int | None, txn: str | None,
+) -> None:
+    """The one appender body: the batch's rows under the table's own
+    params (``files_per_part`` too, unless overridden), written through
+    the staged-move ledger (sources/txn.py) keyed on ``txn``."""
+    from ..sources.txn import staged_append
+
+    p = _read_params(batch.sparkSession, path)
+    fpp = p["files_per_part"] if files_per_part is None else files_per_part
+    staged_append(
+        path, txn, lambda stage: _write_rows(t, batch, id_col, text_col, stage, p, fpp)
+    )
+
+
+def _probe_corpus(
+    t: _SigTable, batch: DataFrame, path: str, id_col: str, text_col: str,
+    max_bucket: int | None = None,
+) -> tuple[dict, DataFrame, DataFrame]:
+    """The pruned-corpus prefix of the three probes: (params, the
+    batch's rows with their ``part``, the corpus scan). The scan reads
+    ONLY the hive partitions the batch's buckets hash into
+    (``PartitionFilters`` on ``part`` — at most ``parts`` literal
+    values, collected from a ≤``parts``-row distinct); ``max_bucket``
+    (opt-in) drops corpus buckets whose write-time size exceeds the cap
+    — a scan-side filter on the stored ``bucket_size`` column, no
+    query-time aggregation of the corpus."""
+    from ..sources.compact import ensure_recovered
+
+    spark = batch.sparkSession
+    ensure_recovered(f"{path}/{t.sub}")
+    p = _read_params(spark, path)
+    b = _with_part(t.rows(batch, id_col, text_col, p), t, p["parts"])
+    # bounded collect: at most `parts` distinct values by construction
+    mods = sorted(r.part for r in b.select("part").distinct().collect())
+    corpus = spark.read.parquet(f"{path}/{t.sub}").filter(F.col("part").isin(mods))
+    if max_bucket is not None:
+        corpus = corpus.filter(F.col("bucket_size") <= max_bucket)
+    return p, b, corpus
+
+
+def _candidates(
+    t: _SigTable, b: DataFrame, corpus: DataFrame, payload: str,
+    broadcast_batch: bool,
+) -> DataFrame:
+    """(corpus_doc, batch_doc, corpus_{payload}, batch_{payload}) for
+    every corpus and batch row sharing a bucket key. The join is
+    broadcast on the batch side by default (a batch is small next to
+    the corpus); ``broadcast_batch=False`` degrades it gracefully to a
+    shuffle join on the keys, for backfill-sized batches."""
+    bside = b.select(
+        *t.keys, F.col("doc").alias("batch_doc"),
+        F.col(payload).alias(f"batch_{payload}"),
+    )
+    if broadcast_batch:
+        bside = F.broadcast(bside)
+    return corpus.select(
+        *t.keys, F.col("doc").alias("corpus_doc"),
+        F.col(payload).alias(f"corpus_{payload}"),
+    ).join(bside, list(t.keys))
+
+
 def _banded_signatures(df: DataFrame, id_col: str, text_col: str, p: dict) -> DataFrame:
-    """(doc, signature, band, bucket, part) — the banded MinHash frame
-    under the table's params ``p`` (``_params``), shared by the at-rest
-    signature write, the append and the incoming-batch probe.
-    ``part`` = pmod(xxhash64(band, bucket), parts): the hive partition
-    key that lets a batch prune the persisted table to only the
-    partitions its own buckets hash into."""
+    """(doc, signature, band, bucket) — each doc's MinHash signature
+    under the params ``p``, once per band: the table's rows and the
+    in-frame pair generator's."""
     num_hashes, bands = p["num_hashes"], p["bands"]
     if num_hashes % bands != 0:
         raise ValueError(
@@ -528,15 +664,12 @@ def _banded_signatures(df: DataFrame, id_col: str, text_col: str, p: dict) -> Da
     sigs = minhash_signatures(
         df, id_col, text_col, num_hashes, p["shingle_n"], p["seed"], p["hash_mode"]
     )
-    return (
-        sigs.select(
-            "doc", "signature", F.explode(_band_structs(bands, rows_per_band)).alias("bb")
-        )
-        .select("doc", "signature", "bb.band", "bb.bucket")
-        .withColumn(
-            "part", F.pmod(F.xxhash64("band", "bucket"), F.lit(p["parts"])).cast("int")
-        )
-    )
+    return sigs.select(
+        "doc", "signature", F.explode(_band_structs(bands, rows_per_band)).alias("bb")
+    ).select("doc", "signature", "bb.band", "bb.bucket")
+
+
+_BANDED = _SigTable("banded", ("band", "bucket"), True, _banded_signatures)
 
 
 def write_minhash_signatures(
@@ -559,7 +692,8 @@ def write_minhash_signatures(
     the thing this table exists to avoid.
 
     Layout (``{path}/banded``, parquet ``partitionBy("part")`` where
-    ``part = pmod(xxhash64(band, bucket), parts)``):
+    ``part = pmod(xxhash64(band, bucket), parts)`` — the layout of all
+    three signature tables, :class:`_SigTable`):
 
     - an incoming batch computes its own bucket parts and reads ONLY
       those hive partitions (``PartitionFilters``, plan-asserted) —
@@ -579,9 +713,7 @@ def write_minhash_signatures(
     discipline as ``write_ivf_index`` (without it, tasks × parts
     files). One shuffle for the bucket_size window + alignment; the
     table is written once and probed per batch."""
-    import json
-
-    p = {
+    _write_table(_BANDED, df, path, id_col, text_col, {
         "num_hashes": num_hashes,
         "bands": bands,
         "shingle_n": shingle_n,
@@ -589,11 +721,7 @@ def write_minhash_signatures(
         "hash_mode": hash_mode,
         "parts": parts,
         "files_per_part": files_per_part,
-    }
-    _write_banded(_banded_signatures(df, id_col, text_col, p), path, files_per_part)
-    df.sparkSession.createDataFrame(
-        [(json.dumps(p),)], "params_json string"
-    ).coalesce(1).write.mode("overwrite").json(f"{path}/_params")
+    })
 
 
 def write_fingerprints(
@@ -605,57 +733,29 @@ def write_fingerprints(
     files_per_part: int = 1,
 ) -> None:
     """Persist the corpus's EXACT-dedup fingerprints AT REST — the
-    exact-match sibling of ``write_minhash_signatures``: one (doc,
-    fingerprint) row per document (``TX.fingerprint`` — md5 of
-    normalized text, the same fingerprint ``exact_duplicates`` groups
-    on), parquet ``partitionBy(part = pmod(xxhash64(fingerprint),
-    parts))`` so an incoming batch prunes its scan to only the
-    partitions its own fingerprints hash into. The table holds a hash
-    per doc, never text — at 100 TB it is ~1/1000th of the corpus and
-    the thing every ingest batch anti-joins before appending."""
-    _fingerprint_rows(df, id_col, text_col, parts, files_per_part).write.partitionBy(
-        "part"
-    ).mode("overwrite").parquet(f"{path}/fingerprints")
-    df.sparkSession.createDataFrame(
-        [(parts, files_per_part)], "parts int, files_per_part int"
-    ).coalesce(1).write.mode("overwrite").json(f"{path}/_params")
+    exact-match sibling of ``write_minhash_signatures``, in the same
+    layout: one (doc, fingerprint) row per document
+    (``TX.fingerprint`` — md5 of normalized text, the same fingerprint
+    ``exact_duplicates`` groups on), parquet ``partitionBy(part =
+    pmod(xxhash64(fingerprint), parts))`` so an incoming batch prunes
+    its scan to only the partitions its own fingerprints hash into. The
+    table holds a hash per doc, never text — at 100 TB it is ~1/1000th
+    of the corpus and the thing every ingest batch anti-joins before
+    appending. ``{path}/_params`` pins (parts, files_per_part)."""
+    _write_table(_FINGERPRINTS, df, path, id_col, text_col, {
+        "parts": parts, "files_per_part": files_per_part,
+    })
 
 
-def _fingerprint_params(spark, path: str) -> dict:
-    row = spark.read.json(f"{path}/_params").collect()[0]
-    return {
-        "parts": int(row.parts),
-        # pre-r12 tables carry no files_per_part field
-        "files_per_part": int(row.files_per_part)
-        if "files_per_part" in row.__fields__ and row.files_per_part is not None
-        else 1,
-    }
-
-
-def _fingerprint_rows(
-    batch: DataFrame, id_col: str, text_col: str, parts: int, files_per_part: int
-) -> DataFrame:
-    """(doc, fingerprint, part) rows in the table's layout — the one
-    row writer of the family: the initial write, the append and the
-    ingest round's stage all write what it returns."""
-    fps = batch.select(
+def _fingerprint_rows(batch: DataFrame, id_col: str, text_col: str, p: dict) -> DataFrame:
+    """(doc, fingerprint) — the exact fingerprint table's rows."""
+    return batch.select(
         F.col(id_col).alias("doc"),
         TX.fingerprint(F.col(text_col)).alias("fingerprint"),
-    ).withColumn("part", F.pmod(F.xxhash64("fingerprint"), F.lit(parts)).cast("int"))
-    return _part_aligned(fps, files_per_part, "fingerprint")
+    )
 
 
-def _part_aligned(rows: DataFrame, files_per_part: int, *sort_cols: str) -> DataFrame:
-    """Repartition on ``part`` (+ a doc-hash salt when ``files_per_part``
-    > 1) and sort within partitions — the file-count discipline of all
-    three signature tables: each write adds at most ``files_per_part``
-    files per touched partition (without it, tasks × parts files)."""
-    if files_per_part > 1:
-        salt = F.pmod(F.xxhash64("doc"), F.lit(files_per_part))
-        rows = rows.repartition(F.col("part"), salt)
-    else:
-        rows = rows.repartition(F.col("part"))
-    return rows.sortWithinPartitions("part", *sort_cols)
+_FINGERPRINTS = _SigTable("fingerprints", ("fingerprint",), False, _fingerprint_rows)
 
 
 def append_fingerprints(
@@ -675,19 +775,7 @@ def append_fingerprints(
     drains), keying the staged-move ledger (sources/txn.py) every
     append runs. For the full probe-before-append replay safety use
     :func:`fingerprint_ingest_round` with ``txn``."""
-    from ..sources.txn import staged_append
-
-    p = _fingerprint_params(batch.sparkSession, path)
-    fps = _fingerprint_rows(
-        batch, id_col, text_col, p["parts"],
-        p["files_per_part"] if files_per_part is None else files_per_part,
-    )
-    staged_append(
-        path, txn,
-        lambda stage: fps.write.partitionBy("part")
-        .mode("overwrite")
-        .parquet(f"{stage}/fingerprints"),
-    )
+    _append_rows(_FINGERPRINTS, batch, path, id_col, text_col, files_per_part, txn)
 
 
 def dedup_exact_against(
@@ -696,16 +784,16 @@ def dedup_exact_against(
     """Rows of ``batch`` whose exact content fingerprint is NOT already
     in the corpus table written by ``write_fingerprints`` — cross-run
     exact dedup, the primitive every 100 TB ingest runs before
-    appending anything.
+    appending anything. Every batch column passes through.
 
     Join shape (deliberate, scale-first): the corpus side is huge and
     must NOT shuffle, and a plain ``batch LEFT ANTI corpus`` would
     shuffle it (the anti side of a join cannot broadcast). Instead:
 
     1. the corpus scan prunes to the batch's fingerprint partitions
-       (``part`` IN-list — a bounded ≤``parts``-row collect), then
-       LEFT SEMI joins the BROADCAST batch fingerprints — map-side,
-       zero corpus shuffle, output ≤ |batch| rows;
+       (:func:`_probe_corpus`), then LEFT SEMI joins the BROADCAST
+       batch fingerprints — map-side, zero corpus shuffle, output
+       ≤ |batch| rows;
     2. the batch anti-joins that tiny hit set (broadcast again).
 
     Within-batch duplicates are NOT collapsed here (run
@@ -713,49 +801,19 @@ def dedup_exact_against(
     clean, then gate)."""
     if "_fp" in batch.columns:
         raise ValueError("dedup_exact_against reserves the column name '_fp'")
-    from ..sources.compact import ensure_recovered
-
-    spark = batch.sparkSession
-    ensure_recovered(f"{path}/fingerprints")
-    parts = _fingerprint_params(spark, path)["parts"]
-    bf = batch.withColumn("_fp", TX.fingerprint(F.col(text_col))).withColumn(
-        "part", F.pmod(F.xxhash64("_fp"), F.lit(parts)).cast("int")
-    )
-    # bounded collect: at most `parts` distinct values by construction
-    mods = sorted(r.part for r in bf.select("part").distinct().collect())
-    corpus = spark.read.parquet(f"{path}/fingerprints").filter(
-        F.col("part").isin(mods)
-    )
+    _, b, corpus = _probe_corpus(_FINGERPRINTS, batch, path, id_col, text_col)
     hits = (
         corpus.join(
-            F.broadcast(bf.select(F.col("_fp").alias("fingerprint")).distinct()),
-            "fingerprint",
-            "left_semi",
+            F.broadcast(b.select("fingerprint").distinct()), "fingerprint", "left_semi"
         )
         .select(F.col("fingerprint").alias("_fp"))
         .distinct()
     )
-    return bf.join(F.broadcast(hits), "_fp", "left_anti").drop("_fp", "part")
-
-
-def _write_banded(banded: DataFrame, path: str, files_per_part: int) -> None:
-    """bucket_size window + part-aligned partitioned write of
-    ``{path}/banded`` — the one row writer of the family: the initial
-    write, the append and the ingest round's stage all call it."""
-    banded = banded.withColumn(
-        "bucket_size", F.count(F.lit(1)).over(Window.partitionBy("band", "bucket"))
+    return (
+        batch.withColumn("_fp", TX.fingerprint(F.col(text_col)))
+        .join(F.broadcast(hits), "_fp", "left_anti")
+        .drop("_fp")
     )
-    _part_aligned(banded, files_per_part, "band", "bucket").write.partitionBy(
-        "part"
-    ).mode("overwrite").parquet(f"{path}/banded")
-
-
-def read_minhash_params(spark, path: str) -> dict:
-    """Signature parameters pinned by ``write_minhash_signatures``
-    (one tiny JSON row — driver-side read by design)."""
-    import json
-
-    return json.loads(spark.read.json(f"{path}/_params").collect()[0].params_json)
 
 
 def append_minhash_signatures(
@@ -778,13 +836,7 @@ def append_minhash_signatures(
     direction: extra candidates cost time, never recall). The append
     runs the staged-move ledger (sources/txn.py) under an anonymous id;
     streaming callers use :func:`minhash_ingest_round` with ``txn``."""
-    from ..sources.txn import staged_append
-
-    p = read_minhash_params(batch.sparkSession, path)
-    if files_per_part is None:
-        files_per_part = p.get("files_per_part", 1)
-    banded = _banded_signatures(batch, id_col, text_col, p)
-    staged_append(path, None, lambda stage: _write_banded(banded, stage, files_per_part))
+    _append_rows(_BANDED, batch, path, id_col, text_col, files_per_part, None)
 
 
 def near_duplicates_against(
@@ -807,47 +859,15 @@ def near_duplicates_against(
     appending it (``append_minhash_signatures``), or each batch doc
     pairs with its own just-appended signature.
 
-    Scale shape: the batch's banded frame computes its bucket parts,
-    and the corpus scan reads ONLY those hive partitions
-    (``PartitionFilters`` on ``part`` — at most ``parts`` literal
-    values, collected from a ≤``parts``-row distinct). The join is
-    broadcast on the batch side by default (a batch is small next to
-    the corpus; pass ``broadcast_batch=False`` for backfill-sized
-    batches, where it degrades gracefully to a shuffle join on
-    (band, bucket)). ``max_bucket`` (opt-in, same policy as the rest
-    of the family) drops corpus buckets whose WRITE-TIME size exceeds
-    the cap — a scan-side filter on the stored ``bucket_size`` column,
-    no query-time aggregation of the corpus."""
-    from ..sources.compact import ensure_recovered
-
-    spark = batch.sparkSession
-    ensure_recovered(f"{path}/banded")
-    p = read_minhash_params(spark, path)
-    b = _banded_signatures(batch, id_col, text_col, p)
-    # bounded collect: at most `parts` distinct values by construction
-    mods = sorted(r.part for r in b.select("part").distinct().collect())
-    corpus = spark.read.parquet(f"{path}/banded").filter(F.col("part").isin(mods))
-    if max_bucket is not None:
-        corpus = corpus.filter(F.col("bucket_size") <= max_bucket)
-    bside = b.select(
-        F.col("band"), F.col("bucket"),
-        F.col("doc").alias("batch_doc"), F.col("signature").alias("batch_sig"),
-    )
-    if broadcast_batch:
-        bside = F.broadcast(bside)
-    cand = corpus.select(
-        "band", "bucket", F.col("doc").alias("corpus_doc"),
-        F.col("signature").alias("corpus_sig"),
-    ).join(bside, ["band", "bucket"])
-    est = cand.withColumn(
+    Scale shape: the corpus scan reads ONLY the hive partitions the
+    batch's bucket parts name, capped at ``max_bucket`` (opt-in, same
+    policy as the rest of the family) on the stored ``bucket_size``
+    (:func:`_probe_corpus`), and joins the batch on (band, bucket),
+    broadcast unless ``broadcast_batch=False`` (:func:`_candidates`)."""
+    p, b, corpus = _probe_corpus(_BANDED, batch, path, id_col, text_col, max_bucket)
+    est = _candidates(_BANDED, b, corpus, "signature", broadcast_batch).withColumn(
         "est_jaccard",
-        F.size(
-            F.filter(
-                F.zip_with("corpus_sig", "batch_sig", lambda x, y: (x == y).cast("int")),
-                lambda v: v == 1,
-            )
-        ).cast("double")
-        / F.lit(p["num_hashes"]),
+        _est_jaccard("corpus_signature", "batch_signature", p["num_hashes"]),
     )
     return (
         est.filter(F.col("est_jaccard") >= threshold)
@@ -963,6 +983,23 @@ def _simhash_segments(max_distance: int, bits: int):
     )
 
 
+def _simhash_segment_rows(
+    batch: DataFrame, id_col: str, text_col: str, p: dict
+) -> DataFrame:
+    """(doc, simhash, seg, val) — each doc's SimHash fingerprint under
+    the params ``p`` (bits, max_distance, hash_mode), once per Manku
+    segment: the index's rows and the in-frame pair generator's."""
+    segs = _simhash_segments(p["max_distance"], p["bits"])
+    fp = simhash(batch, id_col, text_col, p["bits"], p["hash_mode"])
+    return fp.select("doc", "simhash", F.explode(segs).alias("sv")).select(
+        "doc", "simhash", "sv.seg", "sv.val"
+    )
+
+
+_SEGMENTS = _SigTable("segments", ("seg", "val"), True, _simhash_segment_rows)
+_SIG_TABLES = (_BANDED, _FINGERPRINTS, _SEGMENTS)
+
+
 def write_simhash_index(
     df: DataFrame,
     path: str,
@@ -977,38 +1014,23 @@ def write_simhash_index(
     """Persist the corpus's SimHash fingerprints AT REST, pre-exploded
     into Manku pigeonhole segments — the Hamming-tolerant member of
     the cross-run dedup family (exact fingerprints / MinHash
-    signatures / SimHash segments all share the layout): rows
-    (doc, simhash, seg, val, bucket_size) parquet
-    ``partitionBy(part = pmod(xxhash64(seg, val), parts))``, so an
-    incoming batch prunes its scan to only the partitions its own
+    signatures / SimHash segments all share the layout,
+    :class:`_SigTable`): rows (doc, simhash, seg, val, bucket_size)
+    parquet ``partitionBy(part = pmod(xxhash64(seg, val), parts))``, so
+    an incoming batch prunes its scan to only the partitions its own
     segment values hash into, and the hot-bucket cap is a scan-side
     filter on the stored write-time ``bucket_size``.
-    ``{path}/_params`` pins (bits, max_distance, hash_mode, parts)."""
-    import json
-
+    ``{path}/_params`` pins (bits, max_distance, hash_mode, parts,
+    files_per_part)."""
     if max_distance < 1:
         raise ValueError(f"max_distance must be >= 1, got {max_distance}")
-    p = {
+    _write_table(_SEGMENTS, df, path, id_col, text_col, {
         "bits": bits,
         "max_distance": max_distance,
         "hash_mode": hash_mode,
         "parts": parts,
         "files_per_part": files_per_part,
-    }
-    _simhash_segment_rows(
-        df, id_col, text_col, p, files_per_part
-    ).write.partitionBy("part").mode("overwrite").parquet(f"{path}/segments")
-    df.sparkSession.createDataFrame(
-        [(json.dumps(p),)], "params_json string"
-    ).coalesce(1).write.mode("overwrite").json(f"{path}/_params")
-
-
-def read_simhash_params(spark, path: str) -> dict:
-    import json
-
-    return json.loads(
-        spark.read.json(f"{path}/_params").collect()[0].params_json
-    )
+    })
 
 
 def simhash_near_duplicates_against(
@@ -1033,11 +1055,7 @@ def simhash_near_duplicates_against(
     would miss pairs, so that is rejected. Returns
     (corpus_doc, batch_doc, hamming); probe BEFORE appending
     (``append_simhash_index``)."""
-    from ..sources.compact import ensure_recovered
-
-    spark = batch.sparkSession
-    ensure_recovered(f"{path}/segments")
-    p = read_simhash_params(spark, path)
+    p, b, corpus = _probe_corpus(_SEGMENTS, batch, path, id_col, text_col, max_bucket)
     if max_distance is None:
         max_distance = p["max_distance"]
     if max_distance > p["max_distance"]:
@@ -1046,62 +1064,17 @@ def simhash_near_duplicates_against(
             f"({p['max_distance']}) — pairs beyond it would be silently "
             "missed; rebuild the index with the larger distance instead"
         )
-    segs = _simhash_segments(p["max_distance"], p["bits"])
-    fp = simhash(batch, id_col, text_col, p["bits"], p["hash_mode"])
-    b = (
-        fp.select("doc", "simhash", F.explode(segs).alias("sv"))
-        .select("doc", "simhash", "sv.seg", "sv.val")
-        .withColumn(
-            "part", F.pmod(F.xxhash64("seg", "val"), F.lit(p["parts"])).cast("int")
-        )
-    )
-    # bounded collect: at most `parts` distinct values by construction
-    mods = sorted(r.part for r in b.select("part").distinct().collect())
-    corpus = spark.read.parquet(f"{path}/segments").filter(F.col("part").isin(mods))
-    if max_bucket is not None:
-        corpus = corpus.filter(F.col("bucket_size") <= max_bucket)
-    bside = b.select(
-        "seg", "val",
-        F.col("doc").alias("batch_doc"), F.col("simhash").alias("batch_fp"),
-    )
-    if broadcast_batch:
-        bside = F.broadcast(bside)
-    cand = corpus.select(
-        "seg", "val", F.col("doc").alias("corpus_doc"),
-        F.col("simhash").alias("corpus_fp"),
-    ).join(bside, ["seg", "val"])
+    cand = _candidates(_SEGMENTS, b, corpus, "simhash", broadcast_batch)
     return (
-        cand.select("corpus_doc", "batch_doc", "corpus_fp", "batch_fp")
+        cand.select("corpus_doc", "batch_doc", "corpus_simhash", "batch_simhash")
         .distinct()  # a close pair can share several segments
         .withColumn(
-            "hamming", F.bit_count(F.col("corpus_fp").bitwiseXOR(F.col("batch_fp")))
+            "hamming",
+            F.bit_count(F.col("corpus_simhash").bitwiseXOR(F.col("batch_simhash"))),
         )
         .filter(F.col("hamming") <= max_distance)
         .select("corpus_doc", "batch_doc", F.col("hamming").cast("int").alias("hamming"))
     )
-
-
-def _simhash_segment_rows(
-    batch: DataFrame, id_col: str, text_col: str, p: dict, files_per_part: int
-) -> DataFrame:
-    """(doc, simhash, seg, val, bucket_size, part) rows in the index's
-    layout under its pinned params — per-write-segment bucket_size,
-    part-aligned repartition, within-partition sort. The one row writer
-    of the family: the initial write, the append and the ingest round's
-    stage all write what it returns."""
-    segs = _simhash_segments(p["max_distance"], p["bits"])
-    fp = simhash(batch, id_col, text_col, p["bits"], p["hash_mode"])
-    exploded = (
-        fp.select("doc", "simhash", F.explode(segs).alias("sv"))
-        .select("doc", "simhash", "sv.seg", "sv.val")
-        .withColumn(
-            "part", F.pmod(F.xxhash64("seg", "val"), F.lit(p["parts"])).cast("int")
-        )
-        .withColumn(
-            "bucket_size", F.count(F.lit(1)).over(Window.partitionBy("seg", "val"))
-        )
-    )
-    return _part_aligned(exploded, files_per_part, "seg", "val")
 
 
 def append_simhash_index(
@@ -1122,18 +1095,7 @@ def append_simhash_index(
     drains), keying the staged-move ledger (sources/txn.py) every
     append runs. For the full probe-before-append replay safety use
     :func:`simhash_ingest_round` with ``txn``."""
-    from ..sources.txn import staged_append
-
-    p = read_simhash_params(batch.sparkSession, path)
-    if files_per_part is None:
-        files_per_part = p.get("files_per_part", 1)
-    exploded = _simhash_segment_rows(batch, id_col, text_col, p, files_per_part)
-    staged_append(
-        path, txn,
-        lambda stage: exploded.write.partitionBy("part")
-        .mode("overwrite")
-        .parquet(f"{stage}/segments"),
-    )
+    _append_rows(_SEGMENTS, batch, path, id_col, text_col, files_per_part, txn)
 
 
 def simhash_hamming_pairs(
@@ -1169,11 +1131,10 @@ def simhash_hamming_pairs(
             f"max_distance must be >= 1, got {max_distance} "
             "(distance 0 is simhash_near_duplicates' bucket form)"
         )
-    segs = _simhash_segments(max_distance, bits)
-    fp = simhash(df, id_col, text_col, bits, hash_mode)
-    exploded = fp.select(
-        "doc", "simhash", F.explode(segs).alias("sv")
-    ).select("doc", "simhash", "sv.seg", "sv.val")
+    exploded = _simhash_segment_rows(
+        df, id_col, text_col,
+        {"max_distance": max_distance, "bits": bits, "hash_mode": hash_mode},
+    )
     buckets = (
         exploded.groupBy("seg", "val")
         .agg(F.sort_array(F.collect_list(F.struct("doc", "simhash"))).alias("docs"))
@@ -1420,8 +1381,7 @@ def minhash_ingest_round(
     import json
 
     spark = batch.sparkSession
-    p = read_minhash_params(spark, sig_path)
-    files_per_part = p.get("files_per_part", 1)
+    p = _read_params(spark, sig_path)
 
     def probe():
         vs_corpus = near_duplicates_against(
@@ -1436,9 +1396,7 @@ def minhash_ingest_round(
         return vs_corpus, within, lambda: None
 
     def write_rows(survivors: DataFrame, stage: str) -> None:
-        _write_banded(
-            _banded_signatures(survivors, id_col, text_col, p), stage, files_per_part
-        )
+        _write_rows(_BANDED, survivors, id_col, text_col, stage, p, p["files_per_part"])
 
     def fold(edges: DataFrame) -> dict:
         from ..operators.graph import extend_components_at_rest
@@ -1459,27 +1417,24 @@ def minhash_ingest_round(
             else None,
         },
         after_commit=lambda: _maybe_compact_subdir(
-            spark, sig_path, "banded", compact_trigger, files_per_part
+            spark, sig_path, _BANDED, compact_trigger, p["files_per_part"]
         ),
     )
 
 
 def _maybe_compact_subdir(
-    spark, root: str, sub: str, compact_trigger: float, files_per_part: int
+    spark, root: str, t: _SigTable, compact_trigger: float, files_per_part: int
 ) -> int:
-    """Compact a signature-family data subdir (``banded`` /
-    ``fingerprints`` / ``segments``) when its worst partition exceeds
-    ``compact_trigger`` x the table's files_per_part. ONE globStatus
-    listing over the table for the trigger — Hadoop FileSystem API, so
-    the same trigger works on file/hdfs/s3a."""
-    from ..sources import fsutil as FS
+    """Compact a signature table's data subdir ``t.sub`` when its worst
+    partition exceeds ``compact_trigger`` x the table's files_per_part.
+    ONE globStatus listing over the table for the trigger — Hadoop
+    FileSystem API, so the same trigger works on file/hdfs/s3a."""
     from ..sources.compact import compact_partitioned
 
-    per_part = FS.files_per_dir(f"{root.rstrip('/')}/{sub}/part=*/*.parquet")
+    data_dir = f"{root.rstrip('/')}/{t.sub}"
+    per_part = FS.files_per_dir(f"{data_dir}/part=*/*.parquet")
     if max(per_part.values(), default=0) > compact_trigger * files_per_part:
-        return compact_partitioned(spark, f"{root.rstrip('/')}/{sub}")[
-            "compacted"
-        ]
+        return compact_partitioned(spark, data_dir)["compacted"]
     return 0
 
 
@@ -1501,8 +1456,6 @@ def _reconstruct_round_survivors(spark, batch, id_col: str, rounds_dir: str):
     reader-side twin of forget's own recovery walk — and returns the
     survivor count FROM the record: a later forget legitimately shrinks
     it, while the staged stats hold only the write-time value."""
-    from ..sources import fsutil as FS
-
     tmp_rec = f"{rounds_dir}__scrub_tmp"
     if FS.exists(tmp_rec) and not FS.exists(rounds_dir):
         FS.rename(tmp_rec, rounds_dir)
@@ -1564,7 +1517,6 @@ def _txn_ingest_round(
     ``txn=None`` runs the same protocol under a throwaway id
     (``sources.txn.ledger_txn``), whose ledger marker and round record
     are dropped once the report is built."""
-    from ..sources import fsutil as FS
     from ..sources import txn as TXN
 
     secs, lap = _lap_timer()
@@ -1706,7 +1658,7 @@ def fingerprint_ingest_round(
     compacted, secs}; ``secs`` laps within / probe / append /
     compact."""
     spark = batch.sparkSession
-    p = _fingerprint_params(spark, path)
+    p = _read_params(spark, path)
     fpp = p["files_per_part"]
 
     def write_stage(stage: str, state: dict, lap) -> None:
@@ -1723,11 +1675,7 @@ def fingerprint_ingest_round(
         lap("probe")
         n_batch = batch.count()
         state["survivors"] = survivors
-        _fingerprint_rows(
-            survivors, id_col, text_col, p["parts"], fpp
-        ).write.partitionBy("part").mode("overwrite").parquet(
-            f"{stage}/fingerprints"
-        )
+        _write_rows(_FINGERPRINTS, survivors, id_col, text_col, stage, p, fpp)
         _stage_round_record(
             spark, stage, survivors, id_col,
             (n_batch, n_batch - n_ded, n_ded - n_surv, n_surv),
@@ -1743,7 +1691,7 @@ def fingerprint_ingest_round(
             "n_corpus_hits": lambda st: int(st.n_corpus_hits),
         },
         after_commit=lambda: _maybe_compact_subdir(
-            spark, path, "fingerprints", compact_trigger, fpp
+            spark, path, _FINGERPRINTS, compact_trigger, fpp
         ),
     )
 
@@ -1781,8 +1729,8 @@ def simhash_ingest_round(
     ledger id. Returns {action, txn, survivors, n_batch,
     n_cross_pairs, n_within_pairs, n_survivors, compacted, secs}."""
     spark = batch.sparkSession
-    p = read_simhash_params(spark, path)
-    fpp = p.get("files_per_part", 1)
+    p = _read_params(spark, path)
+    fpp = p["files_per_part"]
     d = p["max_distance"] if max_distance is None else max_distance
 
     def probe():
@@ -1807,16 +1755,14 @@ def simhash_ingest_round(
         return vs_corpus, within, lambda: None
 
     def write_rows(survivors: DataFrame, stage: str) -> None:
-        _simhash_segment_rows(
-            survivors, id_col, text_col, p, fpp
-        ).write.partitionBy("part").mode("overwrite").parquet(f"{stage}/segments")
+        _write_rows(_SEGMENTS, survivors, id_col, text_col, stage, p, fpp)
 
     return _txn_ingest_round(
         batch, path.rstrip("/"), id_col, txn,
         _edge_round_stage(batch, id_col, probe, write_rows),
         stats_extract=_EDGE_ROUND_STATS,
         after_commit=lambda: _maybe_compact_subdir(
-            spark, path, "segments", compact_trigger, fpp
+            spark, path, _SEGMENTS, compact_trigger, fpp
         ),
     )
 
@@ -1841,7 +1787,6 @@ def forget_documents(spark, table_path: str, ids: DataFrame) -> dict:
     ``delete_rows_partitioned``). Untouched partitions keep their
     per-write-segment values. Returns the deletion stats dict plus
     ``table`` (which layout was hit)."""
-    from ..sources import fsutil as FS
     from ..sources.compact import ensure_recovered
     from ..sources.forget import delete_rows_partitioned
 
@@ -1863,25 +1808,19 @@ def forget_documents(spark, table_path: str, ids: DataFrame) -> dict:
             f"{root}/_ingest_tmp — re-drain the stream (completing the "
             "replay) before forgetting, or delete the staging to abandon it"
         )
-    for sub, params_reader, refresh in (
-        ("banded", lambda: read_minhash_params(spark, root),
-         ("bucket_size", ["band", "bucket"])),
-        ("fingerprints", lambda: _fingerprint_params(spark, root), None),
-        ("segments", lambda: read_simhash_params(spark, root),
-         ("bucket_size", ["seg", "val"])),
-    ):
-        if FS.exists(f"{root}/{sub}"):
-            ensure_recovered(f"{root}/{sub}")
-            fpp = params_reader().get("files_per_part", 1)
+    for t in _SIG_TABLES:
+        if FS.exists(f"{root}/{t.sub}"):
+            ensure_recovered(f"{root}/{t.sub}")
             # refresh_stats: the hot-bucket cap column recomputes over
             # the touched partitions' survivors inside the rewrite, so
             # a capped probe no longer under-recalls on a shrunk bucket
             stats = delete_rows_partitioned(
-                spark, f"{root}/{sub}", ids, key_col="doc",
-                partition_col="part", files_per_part=fpp,
-                refresh_stats=refresh,
+                spark, f"{root}/{t.sub}", ids, key_col="doc",
+                partition_col="part",
+                files_per_part=_read_params(spark, root)["files_per_part"],
+                refresh_stats=("bucket_size", list(t.keys)) if t.bucket_size else None,
             )
-            stats["table"] = sub
+            stats["table"] = t.sub
             # hard delete means the whole ROOT: the per-txn survivor
             # records under _rounds/ also hold doc ids — scrub them
             # too (filtered copy + swap, with recovery for a crashed
@@ -1913,6 +1852,6 @@ def forget_documents(spark, table_path: str, ids: DataFrame) -> dict:
             stats["round_records_scrubbed"] = int(scrubbed)
             return stats
     raise ValueError(
-        f"{table_path} holds no banded/fingerprints/segments table — "
+        f"{table_path} holds no {'/'.join(t.sub for t in _SIG_TABLES)} table — "
         "not a cross-run dedup table root"
     )

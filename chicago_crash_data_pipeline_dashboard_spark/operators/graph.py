@@ -30,6 +30,10 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..sources import fsutil as FS
+from .dedup import _read_params
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -211,8 +215,6 @@ def write_components(
     without touching (or reading) the rest of the table. Same
     ``_params`` sidecar and file-count discipline (repartition on part
     + optional salt before partitionBy) as the signature tables."""
-    import json
-
     out = assignments.select(
         "node", "comp", F.pmod(F.xxhash64("comp"), F.lit(parts)).alias("part")
     )
@@ -222,23 +224,15 @@ def write_components(
     else:
         out = out.repartition(F.col("part"))
     out.write.partitionBy("part").mode("overwrite").parquet(f"{path}/assign")
-    assignments.sparkSession.createDataFrame(
-        [(json.dumps({"parts": parts, "files_per_part": files_per_part}),)],
-        "params_json string",
-    ).coalesce(1).write.mode("overwrite").json(f"{path}/_params")
+    FS.write_sidecar(
+        f"{path}/_params", {"parts": parts, "files_per_part": files_per_part},
+        assignments.sparkSession,
+    )
 
 
 def read_components(spark, path: str) -> DataFrame:
     """The (node, comp) table persisted by :func:`write_components`."""
     return spark.read.parquet(f"{path}/assign").select("node", "comp")
-
-
-def _components_params(spark, path: str) -> dict:
-    import json
-
-    return json.loads(
-        spark.read.json(f"{path}/_params").collect()[0].params_json
-    )
 
 
 def extend_components_at_rest(
@@ -293,9 +287,7 @@ def extend_components_at_rest(
     larger ``parts`` at the next full :func:`write_components`, or
     consolidating batches. Returns {touched_comps, rewritten_parts,
     touched_parts_ratio, n_updated}."""
-    from ..sources import fsutil as FS
-
-    parts = _components_params(spark, path)["parts"]
+    parts = _read_params(spark, path)["parts"]
     table = spark.read.parquet(f"{path}/assign")
 
     endpoints = (
@@ -478,9 +470,7 @@ def forget_nodes(spark, path: str, ids: DataFrame) -> dict:
     {rows_deleted, comps_touched, comps_relabeled, rewritten_parts}."""
     from pyspark.sql import types as T
 
-    from ..sources import fsutil as FS
-
-    parts = _components_params(spark, path)["parts"]
+    parts = _read_params(spark, path)["parts"]
     table = spark.read.parquet(f"{path}/assign")
     key = F.broadcast(ids.select(F.col(ids.columns[0]).alias("node")).distinct())
 

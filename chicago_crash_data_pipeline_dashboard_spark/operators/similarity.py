@@ -718,28 +718,13 @@ def _write_index(
             ),
             "encode": encode,
         }
-    # each sidecar is one JSON row written (and read back, by
-    # _read_sidecar) through the FileSystem API: a Spark JSON write
-    # costs a job and an output commit (~0.9 s each on 4 cores, more
-    # than the cluster write of a small index)
+    # each sidecar is one JSON row written (and read back) through the
+    # FileSystem API: a Spark JSON write costs a job and an output
+    # commit (~0.9 s each on 4 cores, more than the cluster write of a
+    # small index)
     for name, row in sidecars.items():
-        FS.delete(f"{path}/{name}", corpus.sparkSession)
-        FS.write_text(
-            f"{path}/{name}/part-00000.json", json.dumps(row) + "\n", corpus.sparkSession
-        )
+        FS.write_sidecar(f"{path}/{name}", row, corpus.sparkSession)
     return quantizers
-
-
-def _read_sidecar(spark, path: str, name: str) -> dict:
-    """The one JSON row of the index sidecar ``{path}/{name}``, read
-    driver-side through the FileSystem API — no Spark job. Indexes
-    written before the sidecars were written this way hold the row in a
-    Spark JSON part file, which the ``part-*`` glob matches too (its
-    NULL fields omitted, so read fields with ``.get``)."""
-    import json
-
-    part = FS.glob_paths(f"{path}/{name}/part-*", spark)[0]
-    return json.loads(FS.read_text(part, spark).splitlines()[0])
 
 
 def read_ivf_centroids(spark, path: str) -> list[list[float]]:
@@ -747,7 +732,7 @@ def read_ivf_centroids(spark, path: str) -> list[list[float]]:
     row — a driver-side read by design, like the quantizer sample)."""
     import json
 
-    return json.loads(_read_sidecar(spark, path, "_centroids")["centroids_json"])
+    return json.loads(FS.read_sidecar(f"{path}/_centroids", spark)["centroids_json"])
 
 
 # --------------------------------------------------------------------------
@@ -1300,7 +1285,7 @@ def _read_codebook(spark, path: str) -> tuple:
     mode field."""
     import json
 
-    row = _read_sidecar(spark, path, "_codebook")
+    row = FS.read_sidecar(f"{path}/_codebook", spark)
     return json.loads(row["codebook_json"]), row.get("encode") or "direct"
 
 
@@ -1491,7 +1476,7 @@ def read_drift_baseline(spark, path: str) -> dict | None:
     rebuilds, whose metadata carries no baseline)."""
     import json
 
-    drift = _read_sidecar(spark, path, "_centroids").get("drift_json")
+    drift = FS.read_sidecar(f"{path}/_centroids", spark).get("drift_json")
     return None if drift is None else json.loads(drift)
 
 

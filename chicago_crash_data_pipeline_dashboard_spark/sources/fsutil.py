@@ -23,9 +23,16 @@ iterate the returned statuses (2-3 roundtrips per entry). The
 maintenance paths only ever list FILE COUNTS of bounded layouts
 (parts/clusters × files_per_part), never data — measured ~1 ms/file
 locally, noise next to the Spark jobs these functions schedule.
+
+Sidecars: the one-row JSON metadata of every at-rest table (the
+signature and components tables' ``_params``, the ANN indexes'
+``_centroids`` / ``_codebook``) is a control format this module owns —
+:func:`write_sidecar` / :func:`read_sidecar`, driver-side, no Spark job.
 """
 
 from __future__ import annotations
+
+import json
 
 from pyspark.sql import SparkSession
 
@@ -215,7 +222,7 @@ def dir_stats(path: str, spark: SparkSession | None = None) -> dict[str, int]:
 
 def write_text(path: str, text: str, spark: SparkSession | None = None) -> None:
     """Create (overwrite) a small control file — ledger markers,
-    staging manifests and ANN index sidecars; NOT a data path. Parent
+    staging manifests and sidecars; NOT a data path. Parent
     dirs are created."""
     fs, p = fs_and_path(path, spark)
     out = fs.create(p, True)
@@ -236,3 +243,22 @@ def read_text(path: str, spark: SparkSession | None = None) -> str:
         return bytes(buf.toByteArray()).decode("utf-8") if n >= 0 else ""
     finally:
         stream.close()
+
+
+def write_sidecar(path: str, row: dict, spark: SparkSession | None = None) -> None:
+    """Replace the sidecar directory ``path`` with one JSON row in one
+    ``part-00000.json`` file — the layout a Spark JSON write of one row
+    leaves, so :func:`read_sidecar` reads both."""
+    delete(path, spark)
+    write_text(f"{path}/part-00000.json", json.dumps(row) + "\n", spark)
+
+
+def read_sidecar(path: str, spark: SparkSession | None = None) -> dict:
+    """The one JSON row of the sidecar directory ``path``. Sidecars
+    written by Spark's JSON writer match the ``part-*`` glob too; they
+    omit NULL fields (read fields with ``.get``), and the signature and
+    components tables' ones wrap the row in a ``params_json`` string,
+    unwrapped here."""
+    part = glob_paths(f"{path}/part-*", spark)[0]
+    row = json.loads(read_text(part, spark).splitlines()[0])
+    return json.loads(row["params_json"]) if "params_json" in row else row

@@ -72,7 +72,7 @@ APPENDERS = {
             DD.near_duplicates_against(q, p, "doc_id", "text", threshold=0.5)
         ),
         "banded/*/*.parquet", False,
-        (DD, "_write_banded", None), DD.forget_documents,
+        (DD, "_part_aligned", "doc"), DD.forget_documents,
     ),
     "fingerprint": (
         _docs, "doc_id",
@@ -80,7 +80,7 @@ APPENDERS = {
         lambda b, p, **kw: DD.append_fingerprints(b, p, "doc_id", "text", **kw),
         lambda spark, p, q: _rows(DD.dedup_exact_against(q, p, "doc_id", "text")),
         "fingerprints/*/*.parquet", True,
-        (DD, "_fingerprint_rows", "doc"), DD.forget_documents,
+        (DD, "_part_aligned", "doc"), DD.forget_documents,
     ),
     "simhash": (
         _docs, "doc_id",
@@ -92,7 +92,7 @@ APPENDERS = {
             DD.simhash_near_duplicates_against(q, p, "doc_id", "text")
         ),
         "segments/*/*.parquet", True,
-        (DD, "_simhash_segment_rows", "doc"), DD.forget_documents,
+        (DD, "_part_aligned", "doc"), DD.forget_documents,
     ),
     "ivf": (
         _vecs, "vec_id",
@@ -172,7 +172,7 @@ def test_one_append_path(spark, tmp_path, monkeypatch, name):
 
     def failing(*args, **kwargs):
         rows = real(*args, **kwargs)
-        if col is None:  # the writer staged its rows itself
+        if col is None:  # a writer that stages its rows itself (none today)
             raise RuntimeError("injected")
         return rows.withColumn(col, F.raise_error(F.lit("injected")).cast("long"))
 

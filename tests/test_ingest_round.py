@@ -62,14 +62,14 @@ FAMILIES = {
             b, p, "doc_id", "text", threshold=0.9, **kw
         ),
         _EDGE_KEYS | {"extended"}, _ROUND_SECS,
-        (DD, "_write_banded", None), DD.forget_documents,
+        (DD, "_part_aligned", "doc"), DD.forget_documents,
     ),
     "fingerprint": (
         _docs, "doc_id",
         lambda df, p: DD.write_fingerprints(df, p, "doc_id", "text", parts=2),
         lambda b, p, **kw: DD.fingerprint_ingest_round(b, p, "doc_id", "text", **kw),
         {"n_within_dups", "n_corpus_hits"}, {"within", "probe", "append", "compact"},
-        (DD, "_fingerprint_rows", "doc"), DD.forget_documents,
+        (DD, "_part_aligned", "doc"), DD.forget_documents,
     ),
     "simhash": (
         _docs, "doc_id",
@@ -78,7 +78,7 @@ FAMILIES = {
         ),
         lambda b, p, **kw: DD.simhash_ingest_round(b, p, "doc_id", "text", **kw),
         _EDGE_KEYS, _ROUND_SECS,
-        (DD, "_simhash_segment_rows", "doc"), DD.forget_documents,
+        (DD, "_part_aligned", "doc"), DD.forget_documents,
     ),
     "semantic": (
         _vecs, "vec_id",
@@ -138,7 +138,7 @@ def test_failed_anonymous_round_does_not_block_forget(
 
     def failing(*args, **kwargs):
         rows = real(*args, **kwargs)
-        if col is None:  # _write_banded staged its rows itself
+        if col is None:  # a writer that stages its rows itself (none today)
             raise RuntimeError("injected")
         # the staged write starts (creating the stage dir), then its
         # job fails on the poisoned id column
