@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from .registry import load, register
+from .registry import _scratch_dir, load, register
 
 # A money-safe exact-sum helper: per-row double expr -> exact decimal sum
 # -> double. Per-row precision 13 keeps the cast on Spark's long-backed
@@ -1371,13 +1371,10 @@ def _drain_events_stream(
     sources; each keeps its own file-source offsets). The streams read
     with ``load``'s schema, so ``ts`` is ``timestamp_ntz`` as in batch."""
     import os
-    import shutil
-    import tempfile
 
     schema = load(spark, sf_dir, "events").schema
-    tmp = tempfile.mkdtemp(prefix=f"{name}_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{tmp}/events.parquet")
-    try:
+    with _scratch_dir(f"{name}_") as tmp:
+        os.symlink(f"{sf_dir}/events.parquet", f"{tmp}/events.parquet")
         streams = [spark.readStream.schema(schema).parquet(tmp) for _ in range(n_streams)]
         q = (
             build_query(*streams)
@@ -1388,8 +1385,6 @@ def _drain_events_stream(
             .start()
         )
         q.awaitTermination()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
     return spark.table(name)
 
 
@@ -1413,8 +1408,6 @@ def windowed_stream_cost_probe(spark: SparkSession, sf_dir: str) -> dict:
     nulls with ``noisy: true`` rather than a fabricated number (same
     posture as streaming_ingest_throughput_probe)."""
     import os
-    import shutil
-    import tempfile
     import time as _time
 
     from ..streaming.ingest import windowed_event_counts
@@ -1437,8 +1430,7 @@ def windowed_stream_cost_probe(spark: SparkSession, sf_dir: str) -> dict:
         spark.catalog.dropTempView(name)
         return sec
 
-    tmp = tempfile.mkdtemp(prefix="ccpd_wstream_probe_")
-    try:
+    with _scratch_dir("ccpd_wstream_probe_") as tmp:
         # unmeasured warm-up (first stream in a session pays one-time
         # engine + codegen costs that belong to neither bucket)
         os.makedirs(f"{tmp}/warm")
@@ -1457,8 +1449,6 @@ def windowed_stream_cost_probe(spark: SparkSession, sf_dir: str) -> dict:
         t0 = _time.perf_counter()
         n_windows = batch.count()
         batch_twin_sec = _time.perf_counter() - t0
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
     overhead = drain_full_sec - batch_twin_sec
     noisy = overhead <= 0

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.clean import clean_crashes
-from .registry import load, register
+from .registry import _scratch_dir, load, register
 
 # ---------------------------------------------------------------------------
 # deterministic messy-bronze synthesis (identical in Spark + DuckDB)
@@ -361,9 +361,6 @@ _PPL_SYNTH = f"""
     "duplicated ANYWHERE in the chain breaks the gate.",
 )
 def pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from pyspark.sql import types as T
 
     from ..operators.gold import GoldTable
@@ -374,8 +371,7 @@ def pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     veh = spark.sql(_VEH_SYNTH.replace("__STR__", "STRING"))
     ppl = spark.sql(_PPL_SYNTH.replace("__STR__", "STRING"))
 
-    tmp = tempfile.mkdtemp(prefix="ccpd_e2e_")
-    try:
+    with _scratch_dir("ccpd_e2e_") as tmp:
         # S3/S4: partitioned gzip-JSON bronze sink; S5-S7: read it back
         write_bronze(bronze_src, f"{tmp}/bronze", "crashes", corr="e2e",
                      year_col="crash_date", fmt="json")
@@ -418,8 +414,6 @@ def pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         cleaned.unpersist()
         crashes.unpersist()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
     out_schema = T.StructType(
         [
@@ -458,9 +452,6 @@ def pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     "never advance, extractor/main.go:693-702).",
 )
 def streaming_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from pyspark.sql import types as T
 
     from ..operators.gold import GoldTable
@@ -472,8 +463,7 @@ def streaming_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = T.StructType(
         [T.StructField(c, T.StringType(), True) for c in bronze_src.columns]
     )
-    tmp = tempfile.mkdtemp(prefix="ccpd_ingest_")
-    try:
+    with _scratch_dir("ccpd_ingest_") as tmp:
         args = dict(
             spark=spark, bronze_dir=f"{tmp}/bronze", alias="crashes",
             schema=schema, gold_path=f"{tmp}/gold",
@@ -508,8 +498,6 @@ def streaming_ingest_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             bool(wm_after_first == str(max_date)),
             bool(wm_after_backfill == wm_after_first),
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
     out_schema = T.StructType(
         [
@@ -549,8 +537,6 @@ def streaming_ingest_throughput_probe(spark: SparkSession, sf_dir: str) -> dict:
     foreachBatch body is the same distributed clean/upsert plan the
     batch twins measure — while the fixed cost is per-trigger and
     amortizes to zero as batches grow."""
-    import shutil
-    import tempfile
     import time as _time
 
     from pyspark.sql import types as T
@@ -562,8 +548,7 @@ def streaming_ingest_throughput_probe(spark: SparkSession, sf_dir: str) -> dict:
     schema = T.StructType(
         [T.StructField(c, T.StringType(), True) for c in bronze_src.columns]
     )
-    tmp = tempfile.mkdtemp(prefix="ccpd_ingest_probe_")
-    try:
+    with _scratch_dir("ccpd_ingest_probe_") as tmp:
         # unmeasured warm-up: the FIRST stream start in a session pays
         # a multi-second one-time cost (streaming engine + foreachBatch
         # Python plumbing) that belongs to neither bucket — absorb it
@@ -593,8 +578,6 @@ def streaming_ingest_throughput_probe(spark: SparkSession, sf_dir: str) -> dict:
         t0 = _time.perf_counter()
         stats_zero = stream_bronze_to_gold(mode="streaming", **args)
         drain_zero_sec = _time.perf_counter() - t0
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
     # A zero-batch drain measuring SLOWER than the rows drain means
     # host noise swamped the data-proportional cost — publish null

@@ -40,33 +40,7 @@ from ..sources.silver import (
     validate_upload_schema,
     write_silver_csv,
 )
-from .registry import load, register
-
-# ---------------------------------------------------------------------------
-# Shared plumbing for the file-round-trip gates (compact / ORC / bucketed /
-# schema-evolution / dirty-JSON / partition-overwrite): one scratch-dir
-# lifecycle and one eager-materialization helper instead of per-gate copies.
-# ---------------------------------------------------------------------------
-import contextlib as _contextlib
-import shutil as _shutil
-import tempfile as _tempfile
-
-
-@_contextlib.contextmanager
-def _scratch_dir(prefix: str):
-    """Temp dir for a file round-trip gate, removed on exit."""
-    tmp = _tempfile.mkdtemp(prefix=prefix)
-    try:
-        yield tmp
-    finally:
-        _shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _materialize(spark: SparkSession, out: DataFrame) -> DataFrame:
-    """Eagerly collect a gate result whose backing files/tables are
-    about to disappear, preserving the schema (these gates return
-    data, not a lazy plan)."""
-    return spark.createDataFrame(out.collect(), out.schema)
+from .registry import _materialize, _scratch_dir, load, register
 
 # Injected run date for reproducible since_days/default predicates
 # (the reference reads the clock; build_where takes ``today`` so
@@ -253,9 +227,6 @@ _UPLOAD_REQUIRED = ["doc_id", "text", "lang", "source", "n_chars"]
     "driver-side by nature (rows ~ number of tables, not data size).",
 )
 def silver_catalog_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     rows: list[tuple[str, int, str, bool]] = []
 
     # S12: register temp views for the three LLM-surface tables and
@@ -284,8 +255,7 @@ def silver_catalog_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     subset = docs.filter(F.col("doc_id") % 10 == 0).select(
         "doc_id", "lang", "source", "n_chars"
     )
-    tmp = tempfile.mkdtemp(prefix="ccpd_silver_")
-    try:
+    with _scratch_dir("ccpd_silver_") as tmp:
         write_silver_csv(subset, tmp, corr="dl")
         back = read_silver_csv(spark, tmp, corr="dl", schema=subset.schema)
         agg = back.agg(
@@ -293,8 +263,6 @@ def silver_catalog_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).first()
         n_src = subset.count()
         rows.append(("csv_roundtrip", agg["n"], str(agg["chars"]), agg["n"] == n_src))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
     return spark.createDataFrame(
         rows, "item string, n long, detail string, ok boolean"
@@ -323,17 +291,17 @@ def silver_catalog_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.compact import compact_partitioned, dir_stats
-    from .llm_ops import _PhaseTimer
+    from .llm_ops import _phase_laps
 
     ev = load(spark, sf_dir, "events").filter(F.col("event_id") % 5 == 0)
-    t = _PhaseTimer("compact_small_files")
+    _, lap = _phase_laps("compact_small_files")
     with _scratch_dir("ccpd_compact_") as tmp:
         base = f"{tmp}/events"
         ev.repartition(8).write.partitionBy("event_type").parquet(base)
         before = dir_stats(base)
-        t.lap("write_fixture")
+        lap("write_fixture")
         totals = compact_partitioned(spark, base, target_bytes=256 * 1024 * 1024)
-        t.lap("compact")  # <- the OPERATOR under test
+        lap("compact")  # <- the OPERATOR under test
         after = dir_stats(base)
         ok = bool(
             totals["compacted"] >= 1
@@ -352,7 +320,7 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("compacted_ok", F.lit(ok))
         )
         res = _materialize(spark, out)
-        t.lap("readback_agg")
+        lap("readback_agg")
         return res
 
 

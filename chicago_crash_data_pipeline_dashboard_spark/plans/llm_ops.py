@@ -32,7 +32,7 @@ from ..functions import vectors as VX
 from ..operators import dedup as DD
 from ..operators import multimodal as MM
 from ..operators import similarity as SIM
-from .registry import load, register
+from .registry import _scratch_dir, load, register
 
 # --------------------------------------------------------------------------
 # Shared DuckDB SQL fragments (mirror functions/text.py exactly)
@@ -819,6 +819,89 @@ def doc_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# --------------------------------------------------------------------------
+# The planted-clone split of the cross-run gates, and its SQL twin
+# --------------------------------------------------------------------------
+
+_AGAINST_CLONE_OFFSET = 1_000_000
+
+
+def _clone_queries(
+    corpus: DataFrame,
+    queries: DataFrame,
+    offset: int,
+    key: str = "vec_id",
+    payload: str = "embedding",
+) -> DataFrame:
+    """One exact duplicate of every query row under id
+    ``key + offset`` — the planted ground truth of the ANN and
+    cross-run gates.
+
+    Guards that the offset actually clears the corpus id space (ADVICE
+    r7): on a larger fixture a clone id colliding with a real id
+    would SILENTLY corrupt the gates (a "planted hit" could be a
+    real corpus row). The max-id probe is one tiny agg job; failing
+    loudly here beats a quietly meaningless green row."""
+    max_id = corpus.agg(F.max(key).alias("m")).first()["m"]
+    if max_id is not None and max_id >= offset:
+        raise AssertionError(
+            f"planted-clone offset {offset} collides with the corpus "
+            f"{key} space (max {key} = {max_id}); raise the offset"
+        )
+    return queries.select((F.col(key) + F.lit(offset)).alias(key), payload)
+
+
+def _planted_split(
+    d: DataFrame,
+    key: str,
+    payload: str,
+    every: int = 50,
+    at: int = 1,
+    offset: int = _AGAINST_CLONE_OFFSET,
+) -> tuple[DataFrame, DataFrame, set]:
+    """The held-out split of the planted-clone gates, over ``d``'s
+    ``key`` and ``payload`` columns: corpus = ``key % 5 != 0`` (the
+    side at rest), batch = ``key % 5 == 0`` plus a clone of every
+    corpus row with ``key % every == at`` (``% 50 == 1`` unless a gate
+    passes its own rule) under id ``key + offset``. Returns (corpus,
+    batch, planted clone ids). Raises when nothing is planted — every
+    check on the plant would then pass vacuously — and, through
+    :func:`_clone_queries`, when the offset collides with ``d``'s ids.
+    :func:`_planted_split_sql` selects the same rows in DuckDB."""
+    d = d.select(key, payload)
+    corpus = d.filter(F.col(key) % 5 != 0)
+    clones = _clone_queries(
+        d, corpus.filter(F.col(key) % every == at), offset, key, payload
+    )
+    planted = {r[key] for r in clones.select(key).collect()}
+    if not planted:
+        raise AssertionError("no clones planted — gate is vacuous")
+    return corpus, d.filter(F.col(key) % 5 == 0).unionByName(clones), planted
+
+
+def _planted_split_sql(
+    src: str,
+    key: str,
+    payload: str,
+    alias: str | None = None,
+    every: int = 50,
+    at: int = 1,
+    offset: int = _AGAINST_CLONE_OFFSET,
+) -> tuple[str, str]:
+    """DuckDB twin of :func:`_planted_split`: the (corpus, batch) CTE
+    bodies over the view or CTE ``src``, selecting ``key`` (renamed
+    ``alias``) and ``payload``."""
+    alias = alias or key
+    cols = f"{key} AS {alias}, {payload}"
+    return (
+        f"SELECT {cols} FROM {src} WHERE {key} % 5 <> 0",
+        f"""SELECT {cols} FROM {src} WHERE {key} % 5 = 0
+      UNION ALL
+      SELECT {key} + {offset} AS {alias}, {payload} FROM {src}
+      WHERE {key} % 5 <> 0 AND {key} % {every} = {at}""",
+    )
+
+
 def _minhash_against_oracle(
     num_hashes: int,
     bands: int,
@@ -826,15 +909,15 @@ def _minhash_against_oracle(
     seed: int,
     threshold: float,
     max_bucket: int,
-    clone_offset: int,
 ) -> str:
     """DuckDB twin of write_minhash_signatures + near_duplicates_against
-    over the gate's corpus/batch split: corpus = doc_id % 5 != 0 (its
-    signatures are 'at rest'), batch = doc_id % 5 = 0 plus clones of
-    every corpus doc with doc_id % 50 = 1 under id + clone_offset. The
-    oracle replays the SAME band-bucket join — corpus side banded and
-    cap-filtered on its WRITE-TIME bucket size, batch side banded
-    fresh — and the same signature-estimated Jaccard."""
+    over the gate's corpus/batch split (:func:`_planted_split_sql`:
+    corpus = doc_id % 5 != 0, its signatures 'at rest'; batch =
+    doc_id % 5 = 0 plus clones of every corpus doc with doc_id % 50 = 1
+    under id + the clone offset). The oracle replays the SAME
+    band-bucket join — corpus side banded and cap-filtered on its
+    WRITE-TIME bucket size, batch side banded fresh — and the same
+    signature-estimated Jaccard."""
     rows = num_hashes // bands
     params = DD._hash_params(num_hashes, seed)
     mins = ", ".join(
@@ -852,16 +935,10 @@ def _minhash_against_oracle(
             )
         return " UNION ALL ".join(selects)
 
+    corpus_docs, batch_docs = _planted_split_sql("documents", "doc_id", "text", "doc")
     return f"""
-    WITH corpus_docs AS (
-      SELECT doc_id AS doc, text FROM documents WHERE doc_id % 5 <> 0
-    ),
-    batch_docs AS (
-      SELECT doc_id AS doc, text FROM documents WHERE doc_id % 5 = 0
-      UNION ALL
-      SELECT doc_id + {clone_offset} AS doc, text FROM documents
-      WHERE doc_id % 5 <> 0 AND doc_id % 50 = 1
-    ),
+    WITH corpus_docs AS ({corpus_docs}),
+    batch_docs AS ({batch_docs}),
     csh AS (SELECT doc, {_shingles_sql(shingle_n)} AS shingles FROM corpus_docs),
     chv AS (SELECT doc, list_transform(shingles, s -> {_H32.format(s='s')}) AS hvals FROM csh),
     csig AS (SELECT doc, [{mins}] AS signature FROM chv),
@@ -893,14 +970,10 @@ def _minhash_against_oracle(
     """
 
 
-_AGAINST_CLONE_OFFSET = 1_000_000
-
-
 @register(
     "doc_minhash_against_corpus",
     oracle=_minhash_against_oracle(
-        num_hashes=32, bands=8, shingle_n=3, seed=42, threshold=0.5,
-        max_bucket=1000, clone_offset=_AGAINST_CLONE_OFFSET,
+        num_hashes=32, bands=8, shingle_n=3, seed=42, threshold=0.5, max_bucket=1000
     ),
     doc="Cross-run dedup against signatures AT REST (operators/dedup.py "
     "write_minhash_signatures / near_duplicates_against — VERDICT r10 "
@@ -923,17 +996,10 @@ _AGAINST_CLONE_OFFSET = 1_000_000
     "signature partitions.",
 )
 def doc_minhash_against_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = d.filter(F.col("doc_id") % 5 != 0)
-    clones = corpus.filter(F.col("doc_id") % 50 == 1).select(
-        (F.col("doc_id") + _AGAINST_CLONE_OFFSET).alias("doc_id"), "text"
+    corpus, batch, planted = _planted_split(
+        load(spark, sf_dir, "documents"), "doc_id", "text"
     )
-    batch = d.filter(F.col("doc_id") % 5 == 0).unionByName(clones)
-    tmp = tempfile.mkdtemp(prefix="ccpd_sigs_")
-    try:
+    with _scratch_dir("ccpd_sigs_") as tmp:
         path = f"{tmp}/sigs"
         DD.write_minhash_signatures(
             corpus, path, "doc_id", "text",
@@ -945,19 +1011,16 @@ def doc_minhash_against_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         rows = pairs.collect()
         got = {(r.corpus_doc, r.batch_doc): r.est_jaccard for r in rows}
-        planted = [r.doc_id for r in clones.select("doc_id").collect()]
         missed = [
-            b for b in planted
+            b for b in sorted(planted)
             if got.get((b - _AGAINST_CLONE_OFFSET, b)) != 1.0
         ]
-        if planted and missed:
+        if missed:
             raise AssertionError(
                 f"planted cross-run clones not caught at est_jaccard=1.0: {missed}"
             )
         # the signature files vanish with the scratch dir — return data
         return spark.createDataFrame(rows, pairs.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _simhash_fp_ctes(bits: int) -> str:
@@ -1053,26 +1116,6 @@ _ANN_CLONE_GATE_ORACLE = f"""
     """
 
 _IVF_CLONE_OFFSET = 2_000_000
-
-
-def _clone_queries(corpus: DataFrame, queries: DataFrame, offset: int) -> DataFrame:
-    """One exact duplicate of every query vector under id
-    ``query_id + offset`` — the planted ground truth of the ANN gates.
-
-    Guards that the offset actually clears the corpus id space (ADVICE
-    r7): on a larger fixture a clone id colliding with a real vec_id
-    would SILENTLY corrupt the recall gates (a "planted hit" could be a
-    real corpus vector). The max-id probe is one tiny agg job; failing
-    loudly here beats a quietly meaningless green row."""
-    max_id = corpus.agg(F.max("vec_id").alias("m")).first()["m"]
-    if max_id is not None and max_id >= offset:
-        raise AssertionError(
-            f"planted-clone offset {offset} collides with the corpus "
-            f"vec_id space (max vec_id = {max_id}); raise the offset"
-        )
-    return queries.select(
-        (F.col("vec_id") + F.lit(offset)).alias("vec_id"), "embedding"
-    )
 
 
 def _ann_recall_gate(
@@ -1407,13 +1450,9 @@ def emb_ivf_largek(spark: SparkSession, sf_dir: str) -> DataFrame:
     "twin is fully hash-gated as emb_knn_brute.",
 )
 def emb_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     e = load(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < _NQ)
-    tmp = tempfile.mkdtemp(prefix="ccpd_ivf_")
-    try:
+    with _scratch_dir("ccpd_ivf_") as tmp:
         path = f"{tmp}/ivf_index"
         SIM.write_ivf_index(
             e, path, id_col="vec_id", vec_col="embedding", n_clusters=16, seed=42
@@ -1425,8 +1464,6 @@ def emb_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         gate = _ann_recall_gate(approx, exact)
         # the index files vanish with the scratch dir — return data, not a plan
         return spark.createDataFrame(gate.collect(), gate.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @register(
@@ -1444,13 +1481,9 @@ def emb_ivf_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     "in-memory pq_topk is pinned exactly in tests/test_llm_ops.py.",
 )
 def emb_pq_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     e = load(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < _NQ)
-    tmp = tempfile.mkdtemp(prefix="ccpd_pq_")
-    try:
+    with _scratch_dir("ccpd_pq_") as tmp:
         path = f"{tmp}/pq_index"
         SIM.write_pq_index(
             e, path, id_col="vec_id", vec_col="embedding",
@@ -1463,8 +1496,6 @@ def emb_pq_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         gate = _ann_recall_gate(approx, exact)
         # the index files vanish with the scratch dir — return data, not a plan
         return spark.createDataFrame(gate.collect(), gate.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @register(
@@ -1484,13 +1515,9 @@ def emb_pq_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tests/test_plans.py.",
 )
 def emb_ivfpq_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     e = load(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < _NQ)
-    tmp = tempfile.mkdtemp(prefix="ccpd_ivfpq_")
-    try:
+    with _scratch_dir("ccpd_ivfpq_") as tmp:
         path = f"{tmp}/ivfpq_index"
         SIM.write_ivfpq_index(
             e, path, id_col="vec_id", vec_col="embedding",
@@ -1504,8 +1531,6 @@ def emb_ivfpq_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
         gate = _ann_recall_gate(approx, exact)
         # the index files vanish with the scratch dir — return data, not a plan
         return spark.createDataFrame(gate.collect(), gate.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @register(
@@ -2272,7 +2297,7 @@ def emb_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _exact_against_oracle(clone_offset: int) -> str:
+def _exact_against_oracle() -> str:
     """DuckDB twin of write_fingerprints + dedup_exact_against over the
     family's corpus/batch split: survivors are the batch docs whose
     normalized-content md5 does not appear among the corpus
@@ -2280,16 +2305,11 @@ def _exact_against_oracle(clone_offset: int) -> str:
     fingerprint, never equal to anything in either engine, so it
     always survives (Spark's left_anti has the same null-key
     semantics)."""
+    corpus_docs, batch_docs = _planted_split_sql("documents", "doc_id", "text", "doc")
     return f"""
-    WITH corpus AS (
-      SELECT {_FPRINT} AS f FROM documents WHERE doc_id % 5 <> 0
-    ),
-    batch_docs AS (
-      SELECT doc_id AS doc, text FROM documents WHERE doc_id % 5 = 0
-      UNION ALL
-      SELECT doc_id + {clone_offset} AS doc, text FROM documents
-      WHERE doc_id % 5 <> 0 AND doc_id % 50 = 1
-    ),
+    WITH corpus_docs AS ({corpus_docs}),
+    corpus AS (SELECT {_FPRINT} AS f FROM corpus_docs),
+    batch_docs AS ({batch_docs}),
     bf AS (SELECT doc, {_FPRINT} AS f FROM batch_docs)
     SELECT doc AS doc_id FROM bf b
     WHERE NOT EXISTS (SELECT 1 FROM corpus c WHERE c.f = b.f)
@@ -2298,7 +2318,7 @@ def _exact_against_oracle(clone_offset: int) -> str:
 
 @register(
     "doc_exact_against_corpus",
-    oracle=_exact_against_oracle(_AGAINST_CLONE_OFFSET),
+    oracle=_exact_against_oracle(),
     doc="Cross-run EXACT dedup against fingerprints AT REST "
     "(operators/dedup.py write_fingerprints / dedup_exact_against): the "
     "corpus persists one (doc, md5-of-normalized-text) row per document, "
@@ -2312,37 +2332,24 @@ def _exact_against_oracle(clone_offset: int) -> str:
     "NOT-EXISTS replay.",
 )
 def doc_exact_against_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = d.filter(F.col("doc_id") % 5 != 0)
-    clones = corpus.filter(F.col("doc_id") % 50 == 1).select(
-        (F.col("doc_id") + _AGAINST_CLONE_OFFSET).alias("doc_id"), "text"
+    corpus, batch, planted = _planted_split(
+        load(spark, sf_dir, "documents"), "doc_id", "text"
     )
-    batch = d.filter(F.col("doc_id") % 5 == 0).unionByName(clones)
-    tmp = tempfile.mkdtemp(prefix="ccpd_xfps_")
-    try:
+    with _scratch_dir("ccpd_xfps_") as tmp:
         path = f"{tmp}/fps"
         DD.write_fingerprints(corpus, path, "doc_id", "text", parts=16)
         surv = DD.dedup_exact_against(batch, path, "doc_id", "text").select("doc_id")
         rows = surv.collect()
-        survived = {r.doc_id for r in rows}
-        planted = {r.doc_id for r in clones.select("doc_id").collect()}
-        leaked = sorted(survived & planted)
+        leaked = sorted({r.doc_id for r in rows} & planted)
         if leaked:
             raise AssertionError(
                 f"planted exact clones survived cross-run dedup: {leaked}"
             )
-        if not planted:
-            raise AssertionError("no clones planted — gate is vacuous")
         # the fingerprint files vanish with the scratch dir — return data
         return spark.createDataFrame(rows, surv.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
-def _simhash_against_oracle(bits: int, max_distance: int, clone_offset: int) -> str:
+def _simhash_against_oracle(bits: int, max_distance: int) -> str:
     """DuckDB twin of write_simhash_index + simhash_near_duplicates_against:
     md5-mode SimHash fingerprints for the corpus and batch sides computed
     independently, then BRUTE-FORCE joined on popcount(xor) <= d. The
@@ -2358,16 +2365,10 @@ def _simhash_against_oracle(bits: int, max_distance: int, clone_offset: int) -> 
     fp = " + ".join(
         f"(CASE WHEN b{i} > 0 THEN {1 << i} ELSE 0 END)" for i in range(bits)
     )
+    cdocs, bdocs = _planted_split_sql("documents", "doc_id", "text", "doc")
     return f"""
-    WITH cdocs AS (
-      SELECT doc_id AS doc, text FROM documents WHERE doc_id % 5 <> 0
-    ),
-    bdocs AS (
-      SELECT doc_id AS doc, text FROM documents WHERE doc_id % 5 = 0
-      UNION ALL
-      SELECT doc_id + {clone_offset} AS doc, text FROM documents
-      WHERE doc_id % 5 <> 0 AND doc_id % 50 = 1
-    ),
+    WITH cdocs AS ({cdocs}),
+    bdocs AS ({bdocs}),
     chv AS (SELECT doc, list_transform({_TOKS}, t -> {_H32.format(s='t')}) AS hvals
             FROM cdocs),
     cbs AS (SELECT doc, {bsums} FROM chv),
@@ -2385,9 +2386,7 @@ def _simhash_against_oracle(bits: int, max_distance: int, clone_offset: int) -> 
 
 @register(
     "doc_simhash_against_corpus",
-    oracle=_simhash_against_oracle(
-        bits=32, max_distance=3, clone_offset=_AGAINST_CLONE_OFFSET
-    ),
+    oracle=_simhash_against_oracle(bits=32, max_distance=3),
     doc="Cross-run SimHash near-dup probe against the segment index AT "
     "REST (operators/dedup.py write_simhash_index / "
     "simhash_near_duplicates_against): the corpus fingerprints persist "
@@ -2402,17 +2401,10 @@ def _simhash_against_oracle(bits: int, max_distance: int, clone_offset: int) -> 
     "must surface at hamming 0 (raised in-gate).",
 )
 def doc_simhash_against_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = d.filter(F.col("doc_id") % 5 != 0)
-    clones = corpus.filter(F.col("doc_id") % 50 == 1).select(
-        (F.col("doc_id") + _AGAINST_CLONE_OFFSET).alias("doc_id"), "text"
+    corpus, batch, planted = _planted_split(
+        load(spark, sf_dir, "documents"), "doc_id", "text"
     )
-    batch = d.filter(F.col("doc_id") % 5 == 0).unionByName(clones)
-    tmp = tempfile.mkdtemp(prefix="ccpd_xsim_")
-    try:
+    with _scratch_dir("ccpd_xsim_") as tmp:
         path = f"{tmp}/simhash"
         DD.write_simhash_index(
             corpus, path, "doc_id", "text",
@@ -2421,20 +2413,15 @@ def doc_simhash_against_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs = DD.simhash_near_duplicates_against(batch, path, "doc_id", "text")
         rows = pairs.collect()
         got = {(r.corpus_doc, r.batch_doc): r.hamming for r in rows}
-        planted = [r.doc_id for r in clones.select("doc_id").collect()]
         missed = [
-            b for b in planted if got.get((b - _AGAINST_CLONE_OFFSET, b)) != 0
+            b for b in sorted(planted) if got.get((b - _AGAINST_CLONE_OFFSET, b)) != 0
         ]
-        if not planted:
-            raise AssertionError("no clones planted — gate is vacuous")
         if missed:
             raise AssertionError(
                 f"planted clones not found at hamming 0 by the segment probe: {missed}"
             )
         # the segment files vanish with the scratch dir — return data
         return spark.createDataFrame(rows, pairs.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _ingest_round_oracle(
@@ -2444,7 +2431,6 @@ def _ingest_round_oracle(
     seed: int,
     threshold: float,
     max_bucket: int,
-    clone_offset: int,
 ) -> str:
     """DuckDB twin of the ENTIRE minhash_ingest_round survivor policy:
     (1) cross pairs — the corpus banded with its write-time bucket
@@ -2479,16 +2465,10 @@ def _ingest_round_oracle(
         f"CAST(len(list_filter(range(1, {num_hashes} + 1), "
         f"i -> sa.signature[i] = sb.signature[i])) AS DOUBLE) / {num_hashes}"
     )
+    corpus_docs, batch_docs = _planted_split_sql("documents", "doc_id", "text", "doc")
     return f"""
-    WITH RECURSIVE corpus_docs AS (
-      SELECT doc_id AS doc, text FROM documents WHERE doc_id % 5 <> 0
-    ),
-    batch_docs AS (
-      SELECT doc_id AS doc, text FROM documents WHERE doc_id % 5 = 0
-      UNION ALL
-      SELECT doc_id + {clone_offset} AS doc, text FROM documents
-      WHERE doc_id % 5 <> 0 AND doc_id % 50 = 1
-    ),
+    WITH RECURSIVE corpus_docs AS ({corpus_docs}),
+    batch_docs AS ({batch_docs}),
     csh AS (SELECT doc, {_shingles_sql(shingle_n)} AS shingles FROM corpus_docs),
     chv AS (SELECT doc, list_transform(shingles, s -> {_H32.format(s='s')}) AS hvals FROM csh),
     csig AS (SELECT doc, [{mins}] AS signature FROM chv),
@@ -2568,11 +2548,76 @@ def _ingest_round_oracle(
 _ROUND_SIG = dict(num_hashes=32, bands=8, shingle_n=3, seed=42, hash_mode="md5")
 
 
+# Last run's per-phase wall-time split for the composite at-rest gates
+# (query name -> {phase: secs}). bench_io.py copies these into its
+# artifact's ``notes`` so a gate's total is attributable from the
+# artifact alone (VERDICT r11 items 6-7 / r12 item 4: emb_ivfpq_append
+# grew 26.4 -> 34.9 s across rounds with no way to tell the timed
+# OPERATOR from the gate's own oracle scaffolding — rebuild, double
+# probe, brute-force twin).
+LAST_PHASE_SECS: dict[str, dict] = {}
+
+
+def _phase_laps(query: str):
+    """dedup's lap recorder (``secs``, ``lap(phase)``), its ``secs``
+    published as ``LAST_PHASE_SECS[query]``."""
+    secs, lap = DD._lap_timer()
+    LAST_PHASE_SECS[query] = secs
+    return secs, lap
+
+
+def _round_gate(
+    spark: SparkSession,
+    sf_dir: str,
+    query: str,
+    source: str,
+    key: str,
+    payload: str,
+    build,
+    build_phase: str,
+    run_round,
+    round_noun: str,
+) -> DataFrame:
+    """Shared body of the one-call ingest-round gates: plant clones of
+    corpus rows into the held-out batch (:func:`_planted_split`),
+    ``build(corpus, table)`` the at-rest table, ``run_round(batch,
+    table)``, and raise in-gate unless every planted clone dropped,
+    the round found at least one cross pair per plant, and something
+    survived. The round's own per-step ``secs`` land in the gate's
+    phase notes as ``round_<step>``. Returns the survivor ids."""
+    corpus, batch, planted = _planted_split(load(spark, sf_dir, source), key, payload)
+    with _scratch_dir("ccpd_round_") as tmp:
+        secs, lap = _phase_laps(query)
+        table = f"{tmp}/table"
+        build(corpus, table)
+        lap(build_phase)
+        rep = run_round(batch, table)
+        # the round reports its own per-step split — surface it in the
+        # gate's phase notes instead of one opaque "round" lap
+        for step, sec in rep["secs"].items():
+            secs[f"round_{step}"] = sec
+        lap("round_total")
+        surv = rep["survivors"].select(key)
+        rows = surv.collect()
+        leaked = sorted({r[key] for r in rows} & planted)
+        if leaked:
+            raise AssertionError(f"planted clones survived {round_noun}: {leaked}")
+        if rep["n_cross_pairs"] < len(planted):
+            raise AssertionError(
+                f"only {rep['n_cross_pairs']} cross pairs for {len(planted)} "
+                "planted clones — the corpus probe missed plants"
+            )
+        if rep["n_survivors"] == 0:
+            raise AssertionError("round dropped everything — gate is vacuous")
+        lap("survivor_collect_and_asserts")
+        # the at-rest table vanishes with the scratch dir — return data
+        return spark.createDataFrame(rows, surv.schema)
+
+
 @register(
     "doc_ingest_round",
     oracle=_ingest_round_oracle(
-        num_hashes=32, bands=8, shingle_n=3, seed=42, threshold=0.5,
-        max_bucket=1000, clone_offset=_AGAINST_CLONE_OFFSET,
+        num_hashes=32, bands=8, shingle_n=3, seed=42, threshold=0.5, max_bucket=1000
     ),
     doc="ONE ingest round of cross-run dedup as one call "
     "(operators/dedup.py minhash_ingest_round — the highest-frequency "
@@ -2591,52 +2636,17 @@ _ROUND_SIG = dict(num_hashes=32, bands=8, shingle_n=3, seed=42, hash_mode="md5")
     "the replay.",
 )
 def doc_ingest_round(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = d.filter(F.col("doc_id") % 5 != 0)
-    clones = corpus.filter(F.col("doc_id") % 50 == 1).select(
-        (F.col("doc_id") + _AGAINST_CLONE_OFFSET).alias("doc_id"), "text"
+    return _round_gate(
+        spark, sf_dir, "doc_ingest_round", "documents", "doc_id", "text",
+        build=lambda corpus, table: DD.write_minhash_signatures(
+            corpus, table, "doc_id", "text", parts=16, **_ROUND_SIG
+        ),
+        build_phase="corpus_signature_build",
+        run_round=lambda batch, table: DD.minhash_ingest_round(
+            batch, table, "doc_id", "text", threshold=0.5, max_bucket=1000
+        ),
+        round_noun="the ingest round",
     )
-    batch = d.filter(F.col("doc_id") % 5 == 0).unionByName(clones)
-    tmp = tempfile.mkdtemp(prefix="ccpd_round_")
-    t = _PhaseTimer("doc_ingest_round")
-    try:
-        path = f"{tmp}/sigs"
-        DD.write_minhash_signatures(
-            corpus, path, "doc_id", "text", parts=16, **_ROUND_SIG
-        )
-        t.lap("corpus_signature_build")
-        rep = DD.minhash_ingest_round(
-            batch, path, "doc_id", "text", threshold=0.5, max_bucket=1000
-        )
-        # the round reports its own per-step split — surface it in the
-        # gate's phase notes instead of one opaque "round" lap
-        for step, s in rep["secs"].items():
-            t.secs[f"round_{step}"] = s
-        t.lap("round_total")
-        surv = rep["survivors"].select("doc_id")
-        rows = surv.collect()
-        t.lap("survivor_collect_and_asserts")
-        survived = {r.doc_id for r in rows}
-        planted = {r.doc_id for r in clones.select("doc_id").collect()}
-        leaked = sorted(survived & planted)
-        if leaked:
-            raise AssertionError(f"planted clones survived the ingest round: {leaked}")
-        if not planted:
-            raise AssertionError("no clones planted — gate is vacuous")
-        if rep["n_cross_pairs"] < len(planted):
-            raise AssertionError(
-                f"only {rep['n_cross_pairs']} cross pairs for {len(planted)} "
-                "planted clones — the corpus probe missed plants"
-            )
-        if rep["n_survivors"] == 0:
-            raise AssertionError("round dropped everything — gate is vacuous")
-        # the signature table vanishes with the scratch dir — return data
-        return spark.createDataFrame(rows, surv.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @register(
@@ -2675,9 +2685,6 @@ def doc_ingest_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     "full-union twin so a divergence names the side that moved.",
 )
 def doc_cc_extend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..operators.graph import (
         connected_components,
         extend_components_at_rest,
@@ -2693,9 +2700,8 @@ def doc_cc_extend(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta = pairs.filter((F.col("doc_a") % 5 == 0) | (F.col("doc_b") % 5 == 0))
     if delta.limit(1).count() == 0:
         raise AssertionError("no edges touch the held-out split — gate is vacuous")
-    tmp = tempfile.mkdtemp(prefix="ccpd_ccext_")
-    t = _PhaseTimer("doc_cc_extend")
-    try:
+    with _scratch_dir("ccpd_ccext_") as tmp:
+        _, lap = _phase_laps("doc_cc_extend")
         path = f"{tmp}/components"
         # parts=256 honors the operator's measured sizing rule (parts >=
         # ~20x touched comps) at both driver scales — the gate checks
@@ -2703,16 +2709,16 @@ def doc_cc_extend(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_components(
             connected_components(base, src="doc_a", dst="doc_b"), path, parts=256
         )
-        t.lap("base_cc_and_write")
+        lap("base_cc_and_write")
         extend_components_at_rest(spark, path, delta, src="doc_a", dst="doc_b")
-        t.lap("extend_at_rest")
+        lap("extend_at_rest")
         ext = read_components(spark, path)
         rows = sorted(map(tuple, ext.collect()))
-        t.lap("read_back")
+        lap("read_back")
         full = sorted(
             map(tuple, connected_components(pairs, src="doc_a", dst="doc_b").collect())
         )
-        t.lap("full_union_recompute_twin")
+        lap("full_union_recompute_twin")
         if rows != full:
             raise AssertionError(
                 "incremental extend diverged from the full-union recompute "
@@ -2720,8 +2726,6 @@ def doc_cc_extend(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         # the component table vanishes with the scratch dir — return data
         return spark.createDataFrame(rows, ext.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _COMPACT_GATE_ORACLE = f"""
@@ -2731,31 +2735,6 @@ _COMPACT_GATE_ORACLE = f"""
            TRUE AS probe_unchanged
     FROM embeddings WHERE vec_id < {_NQ}
     """
-
-# Last run's per-phase wall-time split for the composite at-rest gates
-# (query name -> {phase: secs}). bench_io.py copies these into its
-# artifact's ``notes`` so a gate's total is attributable from the
-# artifact alone (VERDICT r11 items 6-7 / r12 item 4: emb_ivfpq_append
-# grew 26.4 -> 34.9 s across rounds with no way to tell the timed
-# OPERATOR from the gate's own oracle scaffolding — rebuild, double
-# probe, brute-force twin).
-LAST_PHASE_SECS: dict[str, dict] = {}
-
-
-class _PhaseTimer:
-    def __init__(self, query: str):
-        import time as _time
-
-        self._time = _time
-        self.secs: dict[str, float] = {}
-        self._t0 = _time.perf_counter()
-        LAST_PHASE_SECS[query] = self.secs
-
-    def lap(self, phase: str) -> None:
-        now = self._time.perf_counter()
-        self.secs[phase] = round(now - self._t0, 3)
-        self._t0 = now
-
 
 @register(
     "emb_ivfpq_append",
@@ -2773,26 +2752,22 @@ class _PhaseTimer:
     "brute-force twin.",
 )
 def emb_ivfpq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     e = load(spark, sf_dir, "embeddings")
     initial = e.filter(F.col("vec_id") % 5 != 0)
     batch = e.filter(F.col("vec_id") % 5 == 0)
     q = e.filter(F.col("vec_id") < _NQ)
-    tmp = tempfile.mkdtemp(prefix="ccpd_ivfpq_append_")
-    t = _PhaseTimer("emb_ivfpq_append")
-    try:
+    with _scratch_dir("ccpd_ivfpq_append_") as tmp:
+        _, lap = _phase_laps("emb_ivfpq_append")
         grown = f"{tmp}/grown"
         cents, cb = SIM.write_ivfpq_index(
             initial, grown, n_clusters=16, m=16, ks=16, seed=42
         )
-        t.lap("build_initial_index")
+        lap("build_initial_index")
         SIM.append_to_ivfpq_index(batch, grown)
-        t.lap("append")  # <- the OPERATOR under test; the rest is gate scaffolding
+        lap("append")  # <- the OPERATOR under test; the rest is gate scaffolding
         rebuilt = f"{tmp}/rebuilt"
         SIM.write_ivfpq_index(e, rebuilt, quantizers=(cents, cb))
-        t.lap("rebuild_twin")
+        lap("rebuild_twin")
         # n_probe=8 (vs the full-build gates' 4): the coarse quantizer is
         # trained on 80% of a tiny fixture, so cluster geometry is noisier
         # than a full-corpus build — probing half the clusters restores the
@@ -2802,7 +2777,7 @@ def emb_ivfpq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         want = SIM.ivfpq_topk_indexed(spark, rebuilt, q, k=5, n_probe=8, refine=8)
         g = sorted(map(tuple, got.collect()))
         w = sorted(map(tuple, want.collect()))
-        t.lap("probe_both")
+        lap("probe_both")
         if g != w:
             raise AssertionError(
                 "append-grown probe diverged from the same-quantizer rebuild"
@@ -2812,10 +2787,8 @@ def emb_ivfpq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         gate = _ann_recall_gate(approx, exact)
         # the index files vanish with the scratch dir — return data
         out = spark.createDataFrame(gate.collect(), gate.schema)
-        t.lap("brute_force_recall_gate")
+        lap("brute_force_recall_gate")
         return out
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @register(
@@ -2834,32 +2807,28 @@ def emb_ivfpq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     "probe_unchanged verdict.",
 )
 def emb_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..sources import fsutil as FS
 
     e = load(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < _NQ)
-    tmp = tempfile.mkdtemp(prefix="ccpd_compact_")
-    t = _PhaseTimer("emb_index_compact")
-    try:
+    with _scratch_dir("ccpd_compact_") as tmp:
+        _, lap = _phase_laps("emb_index_compact")
         path = f"{tmp}/ivf"
         SIM.write_ivf_index(
             e.filter(F.col("vec_id") % 10 > 2), path, n_clusters=16, seed=42
         )
-        t.lap("build_initial_index")
+        lap("build_initial_index")
         for r in (0, 1, 2):
             SIM.append_to_ivf_index(e.filter(F.col("vec_id") % 10 == r), path)
-        t.lap("three_appends")
+        lap("three_appends")
         # n_probe=8: quantizer trained on 70% of the tiny fixture — see
         # emb_ivfpq_append; the before==after equality is probe-independent
         before = sorted(
             map(tuple, SIM.ivf_topk_indexed(spark, path, q, k=5, n_probe=8).collect())
         )
-        t.lap("probe_before")
+        lap("probe_before")
         stats = SIM.compact_index(spark, path, files_per_cluster=1)
-        t.lap("compact")  # <- the OPERATOR under test
+        lap("compact")  # <- the OPERATOR under test
         if stats["clusters_compacted"] < 1:
             raise AssertionError("appends produced nothing to compact — gate is vacuous")
         bad = [
@@ -2870,7 +2839,7 @@ def emb_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise AssertionError(f"clusters above the file bound after compaction: {bad}")
         got = SIM.ivf_topk_indexed(spark, path, q, k=5, n_probe=8)
         after = sorted(map(tuple, got.collect()))
-        t.lap("probe_after")
+        lap("probe_after")
         if before != after:
             raise AssertionError("compaction changed probe results")
         approx = spark.createDataFrame(after, got.schema)
@@ -2880,24 +2849,19 @@ def emb_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # the index files vanish with the scratch dir — return data
         out = spark.createDataFrame(gate.collect(), gate.schema)
-        t.lap("brute_force_recall_gate")
+        lap("brute_force_recall_gate")
         return out
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
-@register(
-    "emb_semantic_dedup_against",
-    oracle=f"""
-    WITH corpus AS (
-      SELECT vec_id, embedding FROM embeddings WHERE vec_id % 5 <> 0
-    ),
-    batch AS (
-      SELECT vec_id, embedding FROM embeddings WHERE vec_id % 5 = 0
-      UNION ALL
-      SELECT vec_id + {_AGAINST_CLONE_OFFSET} AS vec_id, embedding
-      FROM embeddings WHERE vec_id % 5 <> 0 AND vec_id % 50 = 1
-    ),
+def _semantic_against_oracle(**split) -> str:
+    """DuckDB twin of an exhaustive-probe semantic_dedup_against at
+    threshold 0.9 over the planted split (``split`` overrides
+    :func:`_planted_split_sql`'s clone rule): the batch rows with no
+    corpus vector at cosine >= 0.9, by brute force."""
+    corpus, batch = _planted_split_sql("embeddings", "vec_id", "embedding", **split)
+    return f"""
+    WITH corpus AS ({corpus}),
+    batch AS ({batch}),
     hits AS (
       -- plain join, not correlated NOT EXISTS: DuckDB cannot bind an
       -- outer column inside a list_transform lambda
@@ -2909,7 +2873,12 @@ def emb_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT vec_id FROM batch
     WHERE vec_id NOT IN (SELECT vec_id FROM hits)
-    """,
+    """
+
+
+@register(
+    "emb_semantic_dedup_against",
+    oracle=_semantic_against_oracle(),
     doc="Cross-run SEMANTIC dedup against the at-rest ANN index "
     "(operators/similarity.py semantic_dedup_against — r13, completing "
     "the against-corpus family: exact fingerprints / MinHash / SimHash "
@@ -2925,20 +2894,10 @@ def emb_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "near-threshold pairs).",
 )
 def emb_semantic_dedup_against(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    corpus = e.filter(F.col("vec_id") % 5 != 0)
-    clones = corpus.filter(F.col("vec_id") % 50 == 1).select(
-        (F.col("vec_id") + _AGAINST_CLONE_OFFSET).alias("vec_id"), "embedding"
+    corpus, batch, planted = _planted_split(
+        load(spark, sf_dir, "embeddings"), "vec_id", "embedding"
     )
-    batch = e.filter(F.col("vec_id") % 5 == 0).unionByName(clones)
-    planted = {r.vec_id for r in clones.select("vec_id").collect()}
-    if not planted:
-        raise AssertionError("no clones planted — gate is vacuous")
-    tmp = tempfile.mkdtemp(prefix="ccpd_semdd_")
-    try:
+    with _scratch_dir("ccpd_semdd_") as tmp:
         idx = f"{tmp}/ivf"
         SIM.write_ivf_index(corpus, idx, n_clusters=16, seed=42)
         # exhaustive probe (n_probe = n_clusters) == brute force: the
@@ -2962,35 +2921,15 @@ def emb_semantic_dedup_against(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise AssertionError(f"pruned probe missed exact clones: {leaked4}")
         # the index vanishes with the scratch dir — return data
         return spark.createDataFrame(rows, surv.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
-_SEM_BATCHED_OFFSET = 3_000_000
+# emb_semantic_batched's own clone rule: vec_id % 25 == 3 under this offset
+_SEM_BATCHED_SPLIT = dict(every=25, at=3, offset=3_000_000)
 
 
 @register(
     "emb_semantic_batched",
-    oracle=f"""
-    WITH corpus AS (
-      SELECT vec_id, embedding FROM embeddings WHERE vec_id % 5 <> 0
-    ),
-    batch AS (
-      SELECT vec_id, embedding FROM embeddings WHERE vec_id % 5 = 0
-      UNION ALL
-      SELECT vec_id + {_SEM_BATCHED_OFFSET} AS vec_id, embedding
-      FROM embeddings WHERE vec_id % 5 <> 0 AND vec_id % 25 = 3
-    ),
-    hits AS (
-      SELECT DISTINCT vec_id FROM (
-        SELECT b.vec_id,
-               {_cosine_sql('c.embedding', 'b.embedding', _DIM)} AS cos
-        FROM batch b, corpus c
-      ) WHERE cos >= 0.9
-    )
-    SELECT vec_id FROM batch
-    WHERE vec_id NOT IN (SELECT vec_id FROM hits)
-    """,
+    oracle=_semantic_against_oracle(**_SEM_BATCHED_SPLIT),
     doc="Cross-run semantic dedup with the PRODUCTION-REGIME executed "
     "path under the driver differential (r15, VERDICT r14 item 2): the "
     "index is written with 40 clusters — at or above "
@@ -3009,31 +2948,21 @@ _SEM_BATCHED_OFFSET = 3_000_000
     "released explicitly.",
 )
 def emb_semantic_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from ..operators.similarity import (
         _BATCHED_ASSIGN_MIN_K,
         _index_assign_regime,
         _resolve_verify,
     )
 
-    e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    corpus = e.filter(F.col("vec_id") % 5 != 0)
-    clones = corpus.filter(F.col("vec_id") % 25 == 3).select(
-        (F.col("vec_id") + _SEM_BATCHED_OFFSET).alias("vec_id"), "embedding"
+    corpus, batch, planted = _planted_split(
+        load(spark, sf_dir, "embeddings"), "vec_id", "embedding", **_SEM_BATCHED_SPLIT
     )
-    batch = e.filter(F.col("vec_id") % 5 == 0).unionByName(clones)
-    planted = {r.vec_id for r in clones.select("vec_id").collect()}
-    if not planted:
-        raise AssertionError("no clones planted — gate is vacuous")
     n_clusters = 40
     if n_clusters < _BATCHED_ASSIGN_MIN_K:
         raise AssertionError(
             "gate misconfigured: index must sit in the batched regime"
         )
-    tmp = tempfile.mkdtemp(prefix="ccpd_sembat_")
-    try:
+    with _scratch_dir("ccpd_sembat_") as tmp:
         idx = f"{tmp}/ivf"
         # auto assignment at 40 clusters -> assign_clusters_batched
         SIM.write_ivf_index(corpus, idx, n_clusters=n_clusters, seed=42)
@@ -3054,15 +2983,12 @@ def emb_semantic_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
         if leaked:
             raise AssertionError(f"planted exact clones survived: {leaked}")
         return spark.createDataFrame(rows, "vec_id long")
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @register(
     "doc_ingest_stream",
     oracle=_ingest_round_oracle(
-        num_hashes=32, bands=8, shingle_n=3, seed=42, threshold=0.5,
-        max_bucket=1000, clone_offset=_AGAINST_CLONE_OFFSET,
+        num_hashes=32, bands=8, shingle_n=3, seed=42, threshold=0.5, max_bucket=1000
     ),
     doc="Cross-run MinHash dedup AS A STREAM (streaming/ingest.py "
     "stream_minhash_ingest — the dedup twin of stream_maintain_index): "
@@ -3082,77 +3008,35 @@ def emb_semantic_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     "one round, so the oracle is shared.",
 )
 def doc_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
+    from ..streaming.ingest import stream_minhash_ingest
 
-    from ..sources import fsutil as FS
-    from ..streaming.ingest import _stream_ledger_id, stream_minhash_ingest
-
-    d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = d.filter(F.col("doc_id") % 5 != 0)
-    clones = corpus.filter(F.col("doc_id") % 50 == 1).select(
-        (F.col("doc_id") + _AGAINST_CLONE_OFFSET).alias("doc_id"), "text"
+    return _streamed_round_gate(
+        spark, sf_dir, "documents", "doc_id", "text",
+        write_corpus=lambda corpus, table: DD.write_minhash_signatures(
+            corpus, table, "doc_id", "text", parts=16, **_ROUND_SIG
+        ),
+        run_stream=lambda src, table, ckpt, sink: stream_minhash_ingest(
+            spark, src, table, ckpt, threshold=0.5, max_bucket=1000,
+            survivors_dir=sink,
+        ),
+        run_replay=lambda batch, table, txn: DD.minhash_ingest_round(
+            batch, table, "doc_id", "text", threshold=0.5, max_bucket=1000, txn=txn
+        ),
+        census_glob="banded/part=*/*.parquet",
+        table_noun="signature table",
     )
-    batch = d.filter(F.col("doc_id") % 5 == 0).unionByName(clones)
-    n_planted = clones.count()
-    if n_planted == 0:
-        raise AssertionError("no clones planted — gate is vacuous")
-    tmp = tempfile.mkdtemp(prefix="ccpd_ingest_stream_")
-    try:
-        sigs = f"{tmp}/sigs"
-        DD.write_minhash_signatures(
-            corpus, sigs, "doc_id", "text", parts=16, **_ROUND_SIG
-        )
-        batch.coalesce(1).write.parquet(f"{tmp}/src")
-        args = dict(
-            spark=spark, src_dir=f"{tmp}/src", sig_path=sigs,
-            checkpoint_dir=f"{tmp}/ckpt", threshold=0.5, max_bucket=1000,
-            survivors_dir=f"{tmp}/survivors",
-        )
-        reports = stream_minhash_ingest(**args)
-        if len(reports) != 1 or reports[0]["action"] != "appended":
-            raise AssertionError(f"expected one appended batch, got {reports}")
-        if stream_minhash_ingest(**args):  # re-drain: checkpoint dedups input
-            raise AssertionError("re-drain with no new files ran batches")
-        census = len(FS.glob_paths(f"{sigs}/banded/part=*/*.parquet"))
-        replay = DD.minhash_ingest_round(
-            batch, sigs, "doc_id", "text", threshold=0.5, max_bucket=1000,
-            txn=f"{_stream_ledger_id(args['checkpoint_dir'])}-b0",
-        )
-        if replay["action"] != "skipped_replay":
-            raise AssertionError(f"txn replay re-ran the round: {replay['action']}")
-        if replay["n_survivors"] != reports[0]["n_survivors"]:
-            raise AssertionError("replay reconstructed a different survivor count")
-        if len(FS.glob_paths(f"{sigs}/banded/part=*/*.parquet")) != census:
-            raise AssertionError("txn replay changed the signature table")
-        surv = spark.read.parquet(f"{tmp}/survivors/batch=0").select("doc_id")
-        rows = surv.collect()
-        leaked = sorted(
-            {r.doc_id for r in rows}
-            & {r.doc_id for r in clones.select("doc_id").collect()}
-        )
-        if leaked:
-            raise AssertionError(f"planted clones survived the streamed round: {leaked}")
-        # scratch table and sink vanish with the tempdir — return data
-        return spark.createDataFrame(rows, surv.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
-def _exact_ingest_round_oracle(clone_offset: int) -> str:
+def _exact_ingest_round_oracle() -> str:
     """DuckDB twin of one fingerprint_ingest_round: within-batch exact
     dedup keeps the min id per identical-content group, then every
     batch doc whose fingerprint exists in the corpus drops — one
     streamed micro-batch IS one round, so the stream gate shares it."""
+    corpus, bf = _planted_split_sql("fpt", "doc", "f")
     return f"""
     WITH fpt AS (SELECT doc_id AS doc, {_FPRINT} AS f FROM documents),
-    corpus AS (SELECT f FROM fpt WHERE doc % 5 <> 0),
-    bf AS (
-      SELECT doc, f FROM fpt WHERE doc % 5 = 0
-      UNION ALL
-      SELECT doc + {clone_offset} AS doc, f FROM fpt
-      WHERE doc % 5 <> 0 AND doc % 50 = 1
-    ),
+    corpus AS ({corpus}),
+    bf AS ({bf}),
     dedup AS (
       SELECT doc, f FROM (
         SELECT doc, f, row_number() OVER (PARTITION BY f ORDER BY doc) AS rn
@@ -3164,9 +3048,7 @@ def _exact_ingest_round_oracle(clone_offset: int) -> str:
     """
 
 
-def _simhash_ingest_round_oracle(
-    bits: int, max_distance: int, clone_offset: int
-) -> str:
+def _simhash_ingest_round_oracle(bits: int, max_distance: int) -> str:
     """DuckDB twin of one simhash_ingest_round: brute-force popcount
     pairs (cross AND within — the Spark side's pigeonhole probe is
     complete for d <= the index segmentation and precision-filtered by
@@ -3175,15 +3057,11 @@ def _simhash_ingest_round_oracle(
     wins transitively; corpus-free components keep their min batch
     member). Clones share their source's text, hence its fingerprint —
     the batch side reuses the corpus fp rows at the shifted ids."""
+    cfp, bfp = _planted_split_sql("fp", "doc", "simhash")
     return f"""
     WITH RECURSIVE {_simhash_fp_ctes(bits)},
-    cfp AS (SELECT doc, simhash FROM fp WHERE doc % 5 <> 0),
-    bfp AS (
-      SELECT doc, simhash FROM fp WHERE doc % 5 = 0
-      UNION ALL
-      SELECT doc + {clone_offset} AS doc, simhash FROM fp
-      WHERE doc % 5 <> 0 AND doc % 50 = 1
-    ),
+    cfp AS ({cfp}),
+    bfp AS ({bfp}),
     cross_pairs AS (
       SELECT c.doc AS corpus_doc, b.doc AS batch_doc
       FROM cfp c JOIN bfp b
@@ -3229,72 +3107,77 @@ def _simhash_ingest_round_oracle(
     """
 
 
+def _stream_round_checks(
+    drain, replay, ckpt: str, census_glob: str, table_noun: str, counted: bool = True
+) -> dict:
+    """The exactly-once checks of one streamed at-rest round, raised
+    in-gate: ``drain()`` runs exactly ONE batch with action=appended, a
+    second ``drain()`` with no new files runs ZERO batches, and
+    ``replay(txn)`` of the drained batch's txn id reports
+    skipped_replay — with drain 1's survivor count when ``counted`` —
+    and leaves the ``census_glob`` data-file census untouched. Returns
+    drain 1's report."""
+    from ..sources import fsutil as FS
+    from ..streaming.ingest import _stream_ledger_id
+
+    reports = drain()
+    if len(reports) != 1 or reports[0]["action"] != "appended":
+        raise AssertionError(f"expected one appended batch, got {reports}")
+    if drain():  # re-drain: checkpoint dedups input
+        raise AssertionError("re-drain with no new files ran batches")
+    census = len(FS.glob_paths(census_glob))
+    replayed = replay(f"{_stream_ledger_id(ckpt)}-b0")
+    if replayed["action"] != "skipped_replay":
+        raise AssertionError(f"txn replay re-ran the round: {replayed['action']}")
+    if counted and replayed["n_survivors"] != reports[0]["n_survivors"]:
+        raise AssertionError("replay reconstructed a different survivor count")
+    if len(FS.glob_paths(census_glob)) != census:
+        raise AssertionError(f"txn replay changed the {table_noun}")
+    return reports[0]
+
+
 def _streamed_round_gate(
-    spark,
+    spark: SparkSession,
     sf_dir: str,
+    source: str,
+    key: str,
+    payload: str,
     write_corpus,
     run_stream,
     run_replay,
     census_glob: str,
-):
-    """Shared body of the three streamed cross-run dedup gates: plant
-    clones of corpus docs into the held-out batch, drain it as ONE
-    availableNow micro-batch, and raise in-gate unless (a) exactly one
-    batch ran with action=appended, (b) a re-drain with no new files
-    runs ZERO batches, (c) a manual replay of the drained batch's txn
-    id reports skipped_replay with the identical survivor count and an
-    untouched data-file census, (d) every planted clone dropped.
-    Returns the survivors frame read back from the stream's sink."""
-    import shutil
-    import tempfile
-
-    from ..sources import fsutil as FS
-    from ..streaming.ingest import _stream_ledger_id
-
-    d = load(spark, sf_dir, "documents").select("doc_id", "text")
-    corpus = d.filter(F.col("doc_id") % 5 != 0)
-    clones = corpus.filter(F.col("doc_id") % 50 == 1).select(
-        (F.col("doc_id") + _AGAINST_CLONE_OFFSET).alias("doc_id"), "text"
-    )
-    batch = d.filter(F.col("doc_id") % 5 == 0).unionByName(clones)
-    if clones.count() == 0:
-        raise AssertionError("no clones planted — gate is vacuous")
-    tmp = tempfile.mkdtemp(prefix="ccpd_fam_stream_")
-    try:
-        table = f"{tmp}/table"
-        write_corpus(corpus, table)
-        batch.coalesce(1).write.parquet(f"{tmp}/src")
-        ckpt = f"{tmp}/ckpt"
-        reports = run_stream(f"{tmp}/src", table, ckpt, f"{tmp}/survivors")
-        if len(reports) != 1 or reports[0]["action"] != "appended":
-            raise AssertionError(f"expected one appended batch, got {reports}")
-        if run_stream(f"{tmp}/src", table, ckpt, f"{tmp}/survivors"):
-            raise AssertionError("re-drain with no new files ran batches")
-        census = len(FS.glob_paths(f"{table}/{census_glob}"))
-        replay = run_replay(batch, table, f"{_stream_ledger_id(ckpt)}-b0")
-        if replay["action"] != "skipped_replay":
-            raise AssertionError(f"txn replay re-ran the round: {replay['action']}")
-        if replay["n_survivors"] != reports[0]["n_survivors"]:
-            raise AssertionError("replay reconstructed a different survivor count")
-        if len(FS.glob_paths(f"{table}/{census_glob}")) != census:
-            raise AssertionError("txn replay changed the at-rest table")
-        surv = spark.read.parquet(f"{tmp}/survivors/batch=0").select("doc_id")
-        rows = surv.collect()
-        leaked = sorted(
-            {r.doc_id for r in rows}
-            & {r.doc_id for r in clones.select("doc_id").collect()}
+    table_noun: str = "at-rest table",
+) -> DataFrame:
+    """Shared body of the four streamed cross-run dedup gates: plant
+    clones of corpus rows of ``source`` into the held-out batch
+    (:func:`_planted_split`), drain it as ONE availableNow micro-batch
+    under :func:`_stream_round_checks`, and raise in-gate unless every
+    planted clone dropped. Returns the survivors read back from the
+    stream's sink."""
+    corpus, batch, planted = _planted_split(load(spark, sf_dir, source), key, payload)
+    with _scratch_dir("ccpd_fam_stream_") as tmp:
+        table, src, ckpt, sink = (
+            f"{tmp}/{d}" for d in ("table", "src", "ckpt", "survivors")
         )
+        write_corpus(corpus, table)
+        batch.coalesce(1).write.parquet(src)
+        _stream_round_checks(
+            lambda: run_stream(src, table, ckpt, sink),
+            lambda txn: run_replay(batch, table, txn),
+            ckpt, f"{table}/{census_glob}", table_noun,
+        )
+        surv = spark.read.parquet(f"{sink}/batch=0").select(key)
+        rows = surv.collect()
+        leaked = sorted({r[key] for r in rows} & planted)
         if leaked:
             raise AssertionError(f"planted clones survived the streamed round: {leaked}")
         # scratch table and sink vanish with the tempdir — return data
         return spark.createDataFrame(rows, surv.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @register(
     "doc_exact_ingest_stream",
-    oracle=_exact_ingest_round_oracle(_AGAINST_CLONE_OFFSET),
+    oracle=_exact_ingest_round_oracle(),
     doc="Cross-run EXACT dedup AS A STREAM (streaming/ingest.py "
     "stream_fingerprint_ingest over operators/dedup.py "
     "fingerprint_ingest_round — r13: the staged-move transaction "
@@ -3316,7 +3199,7 @@ def doc_exact_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.ingest import stream_fingerprint_ingest
 
     return _streamed_round_gate(
-        spark, sf_dir,
+        spark, sf_dir, "documents", "doc_id", "text",
         write_corpus=lambda corpus, table: DD.write_fingerprints(
             corpus, table, "doc_id", "text", parts=16
         ),
@@ -3332,9 +3215,7 @@ def doc_exact_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_simhash_ingest_stream",
-    oracle=_simhash_ingest_round_oracle(
-        bits=32, max_distance=3, clone_offset=_AGAINST_CLONE_OFFSET
-    ),
+    oracle=_simhash_ingest_round_oracle(bits=32, max_distance=3),
     doc="Cross-run SIMHASH dedup AS A STREAM (streaming/ingest.py "
     "stream_simhash_ingest over operators/dedup.py simhash_ingest_round "
     "— r13: the transaction ledger extended to the segment index, "
@@ -3354,7 +3235,7 @@ def doc_simhash_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.ingest import stream_simhash_ingest
 
     return _streamed_round_gate(
-        spark, sf_dir,
+        spark, sf_dir, "documents", "doc_id", "text",
         write_corpus=lambda corpus, table: DD.write_simhash_index(
             corpus, table, "doc_id", "text",
             max_distance=3, bits=32, hash_mode="md5", parts=16,
@@ -3404,9 +3285,6 @@ _FORGET_OFFSET = 3_000_000
     "kept-clone pairs intact at est_jaccard 1.0).",
 )
 def doc_forget_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     forget = d.filter(F.col("doc_id") % 7 == 3)
     forgotten_clones = forget.filter(F.col("doc_id") % 2 == 0).select(
@@ -3420,18 +3298,17 @@ def doc_forget_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_kept = kept_clones.count()
     if n_forgotten == 0 or n_kept == 0:
         raise AssertionError("clone plant is vacuous on this fixture")
-    tmp = tempfile.mkdtemp(prefix="ccpd_forget_")
-    t = _PhaseTimer("doc_forget_docs")
-    try:
+    with _scratch_dir("ccpd_forget_") as tmp:
+        _, lap = _phase_laps("doc_forget_docs")
         fps, sigs = f"{tmp}/fps", f"{tmp}/sigs"
         DD.write_fingerprints(d, fps, "doc_id", "text", parts=16)
         DD.write_minhash_signatures(d, sigs, "doc_id", "text", parts=16, **_ROUND_SIG)
-        t.lap("table_builds")
+        lap("table_builds")
         ids = forget.select("doc_id")
         st_fp = DD.forget_documents(spark, fps, ids)
-        t.lap("forget_fingerprints")
+        lap("forget_fingerprints")
         st_sig = DD.forget_documents(spark, sigs, ids)
-        t.lap("forget_signatures")
+        lap("forget_signatures")
         if st_fp["table"] != "fingerprints" or st_sig["table"] != "banded":
             raise AssertionError(f"layout sniff wrong: {st_fp} / {st_sig}")
         if st_fp["rows_deleted"] == 0 or st_sig["rows_deleted"] == 0:
@@ -3439,7 +3316,7 @@ def doc_forget_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # exact probe: forgotten clones survive, kept clones drop
         surv = DD.dedup_exact_against(batch, fps, "doc_id", "text").select("doc_id")
         rows = surv.collect()
-        t.lap("exact_probe")
+        lap("exact_probe")
         got = {r.doc_id for r in rows}
         leaked = sorted(
             {r.doc_id for r in kept_clones.select("doc_id").collect()} & got
@@ -3466,11 +3343,9 @@ def doc_forget_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if missed:
             raise AssertionError(f"kept-doc clones lost their signatures: {missed}")
-        t.lap("minhash_probe_and_asserts")
+        lap("minhash_probe_and_asserts")
         # the tables vanish with the scratch dir — return data
         return spark.createDataFrame(rows, surv.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @register(
@@ -3495,32 +3370,28 @@ def doc_forget_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the survivors.",
 )
 def emb_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     e = load(spark, sf_dir, "embeddings")
     doomed = e.filter((F.col("vec_id") % 9 == 2) & (F.col("vec_id") >= _NQ))
     survivors = e.join(
         doomed.select("vec_id"), "vec_id", "left_anti"
     )
     q = e.filter(F.col("vec_id") < _NQ)
-    tmp = tempfile.mkdtemp(prefix="ccpd_idx_del_")
-    t = _PhaseTimer("emb_index_delete")
-    try:
+    with _scratch_dir("ccpd_idx_del_") as tmp:
+        _, lap = _phase_laps("emb_index_delete")
         path = f"{tmp}/ivf"
         cents = SIM.write_ivf_index(e, path, n_clusters=16, seed=42)
-        t.lap("index_build")
+        lap("index_build")
         stats = SIM.delete_from_index(spark, path, doomed.select("vec_id"))
         if stats["rows_deleted"] != doomed.count():
             raise AssertionError(f"deletion count off: {stats}")
-        t.lap("delete_from_index")
+        lap("delete_from_index")
         got = SIM.ivf_topk_indexed(spark, path, q, k=5, n_probe=8)
         rows = sorted(map(tuple, got.collect()))
         doomed_ids = {r.vec_id for r in doomed.select("vec_id").collect()}
         leaked = sorted({r[1] for r in rows} & doomed_ids)
         if leaked:
             raise AssertionError(f"deleted ids still in top-k: {leaked}")
-        t.lap("probe_after_delete")
+        lap("probe_after_delete")
         rebuilt = f"{tmp}/rebuilt"
         SIM.write_ivf_index(survivors, rebuilt, centroids=cents)
         want = sorted(
@@ -3531,7 +3402,7 @@ def emb_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "post-delete probe diverged from a same-centroid rebuild "
                 "on the surviving corpus"
             )
-        t.lap("rebuild_twin_and_probe")
+        lap("rebuild_twin_and_probe")
         approx = spark.createDataFrame(rows, got.schema)
         exact = SIM.brute_force_topk(
             survivors, q, id_col="vec_id", vec_col="embedding", k=5
@@ -3540,14 +3411,12 @@ def emb_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             "delete_clean", F.lit(True)
         )
         out = spark.createDataFrame(gate.collect(), gate.schema)
-        t.lap("brute_force_recall_gate")
+        lap("brute_force_recall_gate")
         # the index files vanish with the scratch dir — return data
         return out
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
-def _semantic_ingest_round_oracle(threshold: float, clone_offset: int) -> str:
+def _semantic_ingest_round_oracle(threshold: float) -> str:
     """DuckDB twin of one semantic_ingest_round at EXHAUSTIVE probe
     (n_probe = n_clusters, where the IVF probe IS brute force): cosine
     >= threshold pairs — cross (corpus x batch) and within
@@ -3558,16 +3427,10 @@ def _semantic_ingest_round_oracle(threshold: float, clone_offset: int) -> str:
     uses it directly."""
     cos_cb = _cosine_sql("c.embedding", "b.embedding", _DIM)
     cos_ab = _cosine_sql("a.embedding", "b.embedding", _DIM)
+    corpus, batch = _planted_split_sql("embeddings", "vec_id", "embedding", "doc")
     return f"""
-    WITH RECURSIVE corpus AS (
-      SELECT vec_id AS doc, embedding FROM embeddings WHERE vec_id % 5 <> 0
-    ),
-    batch AS (
-      SELECT vec_id AS doc, embedding FROM embeddings WHERE vec_id % 5 = 0
-      UNION ALL
-      SELECT vec_id + {clone_offset} AS doc, embedding FROM embeddings
-      WHERE vec_id % 5 <> 0 AND vec_id % 50 = 1
-    ),
+    WITH RECURSIVE corpus AS ({corpus}),
+    batch AS ({batch}),
     cross_pairs AS (
       SELECT c.doc AS corpus_doc, b.doc AS batch_doc
       FROM corpus c, batch b
@@ -3615,7 +3478,7 @@ def _semantic_ingest_round_oracle(threshold: float, clone_offset: int) -> str:
 
 @register(
     "emb_semantic_ingest_stream",
-    oracle=_semantic_ingest_round_oracle(0.9, _AGAINST_CLONE_OFFSET),
+    oracle=_semantic_ingest_round_oracle(0.9),
     doc="Cross-run SEMANTIC dedup + ANN ingest AS A STREAM "
     "(streaming/ingest.py stream_semantic_ingest -> "
     "operators/similarity.py semantic_ingest_round — r14, completing "
@@ -3637,56 +3500,22 @@ def _semantic_ingest_round_oracle(threshold: float, clone_offset: int) -> str:
     "components, the ingest policy.",
 )
 def emb_semantic_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
+    from ..streaming.ingest import stream_semantic_ingest
 
-    from ..sources import fsutil as FS
-    from ..streaming.ingest import _stream_ledger_id, stream_semantic_ingest
-
-    e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    corpus = e.filter(F.col("vec_id") % 5 != 0)
-    clones = corpus.filter(F.col("vec_id") % 50 == 1).select(
-        (F.col("vec_id") + _AGAINST_CLONE_OFFSET).alias("vec_id"), "embedding"
+    return _streamed_round_gate(
+        spark, sf_dir, "embeddings", "vec_id", "embedding",
+        write_corpus=lambda corpus, table: SIM.write_ivf_index(
+            corpus, table, n_clusters=16, seed=42
+        ),
+        run_stream=lambda src, table, ckpt, sink: stream_semantic_ingest(
+            spark, src, table, ckpt, threshold=0.9, n_probe=16, survivors_dir=sink
+        ),
+        run_replay=lambda batch, table, txn: SIM.semantic_ingest_round(
+            batch, table, threshold=0.9, n_probe=16, txn=txn
+        ),
+        census_glob="_cluster=*/*.parquet",
+        table_noun="index",
     )
-    batch = e.filter(F.col("vec_id") % 5 == 0).unionByName(clones)
-    planted = {r.vec_id for r in clones.select("vec_id").collect()}
-    if not planted:
-        raise AssertionError("no clones planted — gate is vacuous")
-    tmp = tempfile.mkdtemp(prefix="ccpd_sem_stream_")
-    try:
-        idx = f"{tmp}/ivf"
-        SIM.write_ivf_index(corpus, idx, n_clusters=16, seed=42)
-        batch.coalesce(1).write.parquet(f"{tmp}/src")
-        args = dict(
-            spark=spark, src_dir=f"{tmp}/src", index_path=idx,
-            checkpoint_dir=f"{tmp}/ckpt", threshold=0.9, n_probe=16,
-            survivors_dir=f"{tmp}/survivors",
-        )
-        reports = stream_semantic_ingest(**args)
-        if len(reports) != 1 or reports[0]["action"] != "appended":
-            raise AssertionError(f"expected one appended batch, got {reports}")
-        if stream_semantic_ingest(**args):  # re-drain: checkpoint dedups input
-            raise AssertionError("re-drain with no new files ran batches")
-        census = len(FS.glob_paths(f"{idx}/_cluster=*/*.parquet"))
-        replay = SIM.semantic_ingest_round(
-            batch, idx, threshold=0.9, n_probe=16,
-            txn=f"{_stream_ledger_id(args['checkpoint_dir'])}-b0",
-        )
-        if replay["action"] != "skipped_replay":
-            raise AssertionError(f"txn replay re-ran the round: {replay['action']}")
-        if replay["n_survivors"] != reports[0]["n_survivors"]:
-            raise AssertionError("replay reconstructed a different survivor count")
-        if len(FS.glob_paths(f"{idx}/_cluster=*/*.parquet")) != census:
-            raise AssertionError("txn replay changed the index")
-        surv = spark.read.parquet(f"{tmp}/survivors/batch=0").select("vec_id")
-        rows = surv.collect()
-        leaked = sorted({r.vec_id for r in rows} & planted)
-        if leaked:
-            raise AssertionError(f"planted clones survived the streamed round: {leaked}")
-        # scratch index and sink vanish with the tempdir — return data
-        return spark.createDataFrame(rows, surv.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @register(
@@ -3725,41 +3554,25 @@ def emb_semantic_ingest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     "hash-matches the brute-force cosine SQL twin.",
 )
 def emb_maintain_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    from ..sources import fsutil as FS
-    from ..streaming.ingest import _stream_ledger_id, stream_maintain_index
+    from ..streaming.ingest import stream_maintain_index
 
     e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     corpus = e.filter(F.col("vec_id") % 5 != 0)
     batch = e.filter(F.col("vec_id") % 5 == 0)
     q = e.filter(F.col("vec_id") < _NQ)
-    tmp = tempfile.mkdtemp(prefix="ccpd_maint_stream_")
-    try:
-        idx = f"{tmp}/ivf"
+    with _scratch_dir("ccpd_maint_stream_") as tmp:
+        idx, ckpt = f"{tmp}/ivf", f"{tmp}/ckpt"
         cents = SIM.write_ivf_index(corpus, idx, n_clusters=16, seed=42)
         batch.coalesce(1).write.parquet(f"{tmp}/src")
-        args = dict(
-            spark=spark, src_dir=f"{tmp}/src", index_path=idx,
-            checkpoint_dir=f"{tmp}/ckpt", retrain="never",
+        report = _stream_round_checks(
+            lambda: stream_maintain_index(
+                spark, f"{tmp}/src", idx, ckpt, retrain="never"
+            ),
+            lambda txn: SIM.maintain_index(spark, idx, batch, retrain="never", txn=txn),
+            ckpt, f"{idx}/_cluster=*/*.parquet", "index", counted=False,
         )
-        reports = stream_maintain_index(**args)
-        if len(reports) != 1 or reports[0]["action"] != "appended":
-            raise AssertionError(f"expected one appended batch, got {reports}")
-        if reports[0]["drift_ratio"] is None:
+        if report["drift_ratio"] is None:
             raise AssertionError("drift ratio not measured against the baseline")
-        if stream_maintain_index(**args):  # re-drain: checkpoint dedups input
-            raise AssertionError("re-drain with no new files ran batches")
-        census = len(FS.glob_paths(f"{idx}/_cluster=*/*.parquet"))
-        replay = SIM.maintain_index(
-            spark, idx, batch, retrain="never",
-            txn=f"{_stream_ledger_id(args['checkpoint_dir'])}-b0",
-        )
-        if replay["action"] != "skipped_replay":
-            raise AssertionError(f"txn replay re-ran the round: {replay['action']}")
-        if len(FS.glob_paths(f"{idx}/_cluster=*/*.parquet")) != census:
-            raise AssertionError("txn replay changed the index")
         # exhaustive probe of the grown index == same-quantizer rebuild
         # == brute force (the oracle)
         got = SIM.ivf_topk_indexed(spark, idx, q, k=5, n_probe=16)
@@ -3775,13 +3588,11 @@ def emb_maintain_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         # the index files vanish with the scratch dir — return data
         return spark.createDataFrame(rows, got.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 @register(
     "emb_semantic_ingest_round",
-    oracle=_semantic_ingest_round_oracle(0.9, _AGAINST_CLONE_OFFSET),
+    oracle=_semantic_ingest_round_oracle(0.9),
     doc="ONE cross-run semantic ingest round, as ONE call "
     "(operators/similarity.py semantic_ingest_round — r14, the "
     "embeddings member of the one-call round family, completing the "
@@ -3799,42 +3610,14 @@ def emb_maintain_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     "components, the ingest policy.",
 )
 def emb_semantic_ingest_round(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
-    e = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    corpus = e.filter(F.col("vec_id") % 5 != 0)
-    clones = corpus.filter(F.col("vec_id") % 50 == 1).select(
-        (F.col("vec_id") + _AGAINST_CLONE_OFFSET).alias("vec_id"), "embedding"
+    return _round_gate(
+        spark, sf_dir, "emb_semantic_ingest_round", "embeddings", "vec_id", "embedding",
+        build=lambda corpus, table: SIM.write_ivf_index(
+            corpus, table, n_clusters=16, seed=42
+        ),
+        build_phase="index_build",
+        run_round=lambda batch, table: SIM.semantic_ingest_round(
+            batch, table, threshold=0.9, n_probe=16
+        ),
+        round_noun="the round",
     )
-    batch = e.filter(F.col("vec_id") % 5 == 0).unionByName(clones)
-    planted = {r.vec_id for r in clones.select("vec_id").collect()}
-    if not planted:
-        raise AssertionError("no clones planted — gate is vacuous")
-    tmp = tempfile.mkdtemp(prefix="ccpd_sem_round_")
-    t = _PhaseTimer("emb_semantic_ingest_round")
-    try:
-        idx = f"{tmp}/ivf"
-        SIM.write_ivf_index(corpus, idx, n_clusters=16, seed=42)
-        t.lap("index_build")
-        rep = SIM.semantic_ingest_round(batch, idx, threshold=0.9, n_probe=16)
-        for step, s in rep["secs"].items():
-            t.secs[f"round_{step}"] = s
-        t.lap("round_total")
-        surv = rep["survivors"].select("vec_id")
-        rows = surv.collect()
-        leaked = sorted({r.vec_id for r in rows} & planted)
-        if leaked:
-            raise AssertionError(f"planted clones survived the round: {leaked}")
-        if rep["n_cross_pairs"] < len(planted):
-            raise AssertionError(
-                f"only {rep['n_cross_pairs']} cross pairs for {len(planted)} "
-                "planted clones — the corpus probe missed plants"
-            )
-        if rep["n_survivors"] == 0:
-            raise AssertionError("round dropped everything — gate is vacuous")
-        t.lap("survivor_collect_and_asserts")
-        # the index vanishes with the scratch dir — return data
-        return spark.createDataFrame(rows, surv.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)

@@ -16,11 +16,19 @@ Parity rules (applied consistently on BOTH sides):
 - timestamps use explicit, engine-portable expressions (e.g. day-of-week
   is computed with ISO ``EXTRACT`` arithmetic because Spark's
   ``dayofweek`` is Sun=1 while DuckDB's ``dow`` is Sun=0).
+
+Beside ``load``, the registry owns the plumbing every file-round-trip
+and at-rest gate shares: ``_scratch_dir`` (one temp-dir lifecycle) and
+``_materialize`` (the eager collect that keeps a gate's result alive
+after its scratch files are removed).
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
+import shutil
+import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -126,3 +134,20 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if verdicts[target]:
             df = df.repartition(target)
     return df
+
+
+@contextlib.contextmanager
+def _scratch_dir(prefix: str):
+    """Temp dir for a file round-trip gate, removed on exit."""
+    tmp = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield tmp
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _materialize(spark: SparkSession, out: DataFrame) -> DataFrame:
+    """Eagerly collect a gate result whose backing files/tables are
+    about to disappear, preserving the schema (these gates return
+    data, not a lazy plan)."""
+    return spark.createDataFrame(out.collect(), out.schema)

@@ -924,15 +924,23 @@ def test_quantizer_ops_reject_empty_corpus(spark):
         SIM.pq_topk(empty, empty, k=3, dim=8, m=4)
 
 
-def test_clone_offset_guard_rejects_colliding_corpus(spark):
+def test_clone_offset_guard_rejects_colliding_corpus(spark, sf_oracle):
     """The planted-clone gates must fail LOUDLY when the corpus id
     space reaches the clone offset (ADVICE r7): a collision would let
     a real corpus vector masquerade as a planted hit and silently
-    corrupt the recall gate."""
+    corrupt the recall gate. The cross-run gates' held-out split runs
+    the same guard, refuses an empty plant, and selects the same ids
+    as its DuckDB twin."""
     from chicago_crash_data_pipeline_dashboard_spark.plans.llm_ops import (
+        _AGAINST_CLONE_OFFSET,
         _IVF_CLONE_OFFSET,
         _clone_queries,
+        _planted_split,
+        _planted_split_sql,
     )
+    from chicago_crash_data_pipeline_dashboard_spark.plans.registry import load
+
+    from .oracle_harness import duckdb_run
 
     clean = spark.createDataFrame(
         [(0, [1.0, 0.0]), (7, [0.0, 1.0])], "vec_id long, embedding array<double>"
@@ -947,6 +955,31 @@ def test_clone_offset_guard_rejects_colliding_corpus(spark):
     )
     with pytest.raises(AssertionError, match="collides"):
         _clone_queries(colliding, colliding.filter("vec_id = 0"), _IVF_CLONE_OFFSET)
+
+    docs = spark.createDataFrame(
+        [(1, "a"), (_AGAINST_CLONE_OFFSET + 5, "b")], "doc_id long, text string"
+    )
+    with pytest.raises(AssertionError, match="collides"):
+        _planted_split(docs, "doc_id", "text")
+    no_plant = spark.createDataFrame(
+        [(0, "a"), (2, "b"), (3, "c")], "doc_id long, text string"
+    )
+    with pytest.raises(AssertionError, match="vacuous"):
+        _planted_split(no_plant, "doc_id", "text")
+
+    for table, key, payload in (
+        ("documents", "doc_id", "text"),
+        ("embeddings", "vec_id", "embedding"),
+    ):
+        corpus, batch, planted = _planted_split(
+            load(spark, sf_oracle, table), key, payload
+        )
+        corpus_sql, batch_sql = _planted_split_sql(table, key, payload)
+        for frame, sql in ((corpus, corpus_sql), (batch, batch_sql)):
+            ids = sorted(r[key] for r in frame.select(key).collect())
+            _, rows = duckdb_run(f"SELECT {key} FROM ({sql})", sf_oracle)
+            assert ids == sorted(r[0] for r in rows)
+        assert planted <= {r[key] for r in batch.select(key).collect()}
 
 
 def test_fit_quantizer_matmul_lloyd_agrees_with_percenter(monkeypatch):
